@@ -287,7 +287,7 @@ def serving_latency_bench(spark, sf_dir: str, n_lookups: int = 20) -> dict:
         cur_ms: list[float] = []
         for i in range(n_lookups):
             t0 = time.perf_counter()
-            cur.lookup([terms[i % len(terms)]])
+            cur.lookup([terms[i % len(terms)]]).to_pylist()
             cur_ms.append((time.perf_counter() - t0) * 1000)
         # round 8 (judge r7 item 1): the FULL interactive answer —
         # scored top-k + snippet composed from cursor reads of the

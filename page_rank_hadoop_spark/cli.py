@@ -696,7 +696,7 @@ def cmd_lookup(spark: SparkSession, args: argparse.Namespace) -> int:
     else:
         from page_rank_hadoop_spark.sources.serving import PointLookupCursor
 
-        rows = PointLookupCursor(args.table, args.key).lookup(args.values)
+        rows = PointLookupCursor(args.table, args.key).lookup(args.values).to_pylist()
     for r in rows:
         print("\t".join(str(v) for v in r.values()))
     print(f"# {len(rows)} row(s)", file=sys.stderr)

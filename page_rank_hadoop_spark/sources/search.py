@@ -152,6 +152,35 @@ def _round6(x: float) -> float:
     return float(Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
+def _round6_topk(raw, k: int | None, largest: bool):
+    """(indices, 6dp scores) of the rows of the float64 array ``raw``
+    that can reach the top ``k`` once rounded — ``_round6`` runs on
+    those rows only, not on every candidate.
+
+    Why nothing reachable is dropped: ``_round6`` is monotone and moves
+    a value by at most 0.5e-6, so two values round to the same 6dp
+    point only when they lie less than 1e-6 apart. Let ``s_k`` be the
+    k-th best raw value. At least k rows are at least as good as
+    ``s_k`` and round to at least as good as ``_round6(s_k)``; a row
+    more than 1e-6 worse than ``s_k`` rounds strictly worse than all of
+    them, so no tie-break can lift it into the top k. The cut is one
+    ulp wider than ``s_k ∓ 1e-6`` so the subtraction's own rounding
+    cannot exclude a row that lies exactly 1e-6 away. ``k=None`` (or
+    k ≤ 0 or k ≥ len) rounds every row."""
+    import numpy as np
+
+    n = raw.size
+    if k is None or not 0 < k < n:
+        idx = np.arange(n)
+    elif largest:
+        s_k = np.partition(raw, n - k)[n - k]
+        idx = np.flatnonzero(raw >= np.nextafter(s_k - 1e-6, -np.inf))
+    else:
+        s_k = np.partition(raw, k - 1)[k - 1]
+        idx = np.flatnonzero(raw <= np.nextafter(s_k + 1e-6, np.inf))
+    return idx, [_round6(x) for x in raw[idx].tolist()]
+
+
 class VectorSearchCursor:
     """Millisecond ANN top-k over a persisted IVF index
     (operators/similarity.write_ivf_index: parquet partitioned by
@@ -250,9 +279,7 @@ class VectorSearchCursor:
         Norms are the SAME left fold as ``_fold_cosine``'s ``na`` so a
         cosine assembled from the cache is bit-identical to the
         uncached path."""
-        cache = getattr(self, "_vec_cache", None)
-        if cache is None:
-            cache = self._vec_cache = {}
+        cache = self._vec_cache
         if c not in cache:
             rows = []
             for fp in self._buckets.get(c, ()):
@@ -267,18 +294,14 @@ class VectorSearchCursor:
             cache[c] = rows
         return cache[c]
 
-    def topk(self, probe: list[float], k: int = 10, n_probe: int = 1) -> list[dict]:
-        """[{vec_id, cos_sim}] — ``probe_ivf_index(spark, path, probe,
-        k, n_probe)`` minus the Spark job: nearest ``n_probe`` centroids
-        by codebook cosine (ties to the smaller id, same rule), exact
-        re-rank within those buckets, (cos_sim desc, vec_id) top-k."""
+    def _probed(self, p: list[float], n_probe: int) -> list[int]:
+        """The ``n_probe`` centroids nearest ``p`` by codebook cosine,
+        ties to the smaller id — the SAME numpy expressions as the Spark
+        probes' driver-side selection: a different summation order
+        could pick a different bucket on a tie-close codebook, which
+        changes the candidate set, not just a score."""
         import numpy as np
 
-        p = [float(x) for x in probe]
-        # codebook ranking with the SAME numpy expressions as
-        # probe_ivf_index's driver-side selection — a different
-        # summation order could pick a different bucket on a tie-close
-        # codebook, which changes the candidate set, not just a score
         pa = np.asarray(p, dtype="float64")
         sims = sorted(
             (
@@ -291,9 +314,53 @@ class VectorSearchCursor:
             ),
             key=lambda t: (-t[0], t[1]),
         )
-        probed = [c for _, c in sims[:n_probe]]
+        return [c for _, c in sims[:n_probe]]
+
+    def _bucket_codes(self, c: int, column: str, cache: dict, width: int) -> tuple:
+        """(vec_ids, int64 code matrix) of one bucket's ``column``,
+        cached after first touch — codes are a few ints per vector (PQ:
+        m, SQ: dim), so the lazily-built per-bucket cache is the probed
+        working set; refresh() drops it."""
+        import numpy as np
+
+        if c not in cache:
+            ids_parts = [np.empty(0, dtype="int64")]
+            code_parts = [np.empty((0, width), dtype="int64")]
+            for fp in self._buckets.get(c, ()):
+                t = self._pq.read_table(fp, columns=["vec_id", column])
+                if t.num_rows:
+                    ids_parts.append(t["vec_id"].to_numpy(zero_copy_only=False))
+                    code_parts.append(np.stack(t[column].to_pylist()).astype("int64"))
+            cache[c] = (np.concatenate(ids_parts), np.concatenate(code_parts))
+        return cache[c]
+
+    def _nearest(self, parts: list[tuple], k: int, exclude_vec_id) -> list[tuple]:
+        """[(dist6, vec_id, bucket)] ordered by (dist6, vec_id), the ``k``
+        nearest live candidates of ``parts`` — one (bucket, vec_ids, raw
+        distances) triple per probed bucket. Tombstoned and excluded ids
+        drop out first; ``_round6_topk`` then rounds only the rows that
+        can reach the k."""
+        import numpy as np
+
+        if not parts:
+            return []
+        ids = np.concatenate([i for _, i, _ in parts])
+        raw = np.concatenate([d for _, _, d in parts])
+        bucket = np.concatenate([np.full(i.size, c) for c, i, _ in parts])
+        dead = list(self._dead) + ([] if exclude_vec_id is None else [exclude_vec_id])
+        live = np.flatnonzero(~np.isin(ids, dead))
+        idx, dist6 = _round6_topk(raw[live], k, largest=False)
+        rows = live[idx]
+        return sorted(zip(dist6, ids[rows].tolist(), bucket[rows].tolist()))[:k]
+
+    def topk(self, probe: list[float], k: int = 10, n_probe: int = 1) -> list[dict]:
+        """[{vec_id, cos_sim}] — ``probe_ivf_index(spark, path, probe,
+        k, n_probe)`` minus the Spark job: nearest ``n_probe`` centroids
+        by codebook cosine (ties to the smaller id, same rule), exact
+        re-rank within those buckets, (cos_sim desc, vec_id) top-k."""
+        p = [float(x) for x in probe]
         out = []
-        for c in probed:
+        for c in self._probed(p, n_probe):
             for fp in self._buckets.get(c, ()):
                 for row in self._pq.read_table(
                     fp, columns=["vec_id", "embedding"]
@@ -333,31 +400,12 @@ class VectorSearchCursor:
         from page_rank_hadoop_spark.operators.similarity import mmr_greedy_micro
 
         p = [float(x) for x in probe]
-        pa = np.asarray(p, dtype="float64")
-        csims = sorted(
-            (
-                (
-                    float(
-                        pa
-                        @ np.asarray(cv, dtype="float64")
-                        / (
-                            np.linalg.norm(pa)
-                            * np.linalg.norm(np.asarray(cv, dtype="float64"))
-                        )
-                    ),
-                    c,
-                )
-                for c, cv in self.meta["centroids"]
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )
-        probed = [c for _, c in csims[:n_probe]]
         nb = 0.0
         for y in p:
             nb += y * y
         nb_sqrt = math.sqrt(nb)
         cand = []
-        for c in probed:
+        for c in self._probed(p, n_probe):
             for vid, e, na in self._bucket_vectors(c):
                 if vid in self._dead:
                     continue
@@ -428,46 +476,10 @@ class VectorSearchCursor:
             )
         books = self.meta["pq"]["books"]
         p = [float(x) for x in probe]
-        pa = np.asarray(p, dtype="float64")
-        sims = sorted(
-            (
-                (
-                    float(pa @ np.asarray(cv, dtype="float64")
-                          / (np.linalg.norm(pa) * np.linalg.norm(np.asarray(cv, dtype="float64")))),
-                    c,
-                )
-                for c, cv in self.meta["centroids"]
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )
-        probed = [c for _, c in sims[:n_probe]]
         qd = [np.asarray(row, dtype="float64") for row in _adc_tables(p, books)]
-        out = []
-        for c in probed:
-            cached = self._codes_cache.get(c)
-            if cached is None:
-                ids_parts, code_parts = [], []
-                for fp in self._buckets.get(c, ()):
-                    t = self._pq.read_table(fp, columns=["vec_id", "codes"])
-                    ids_parts.append(t["vec_id"].to_numpy(zero_copy_only=False))
-                    code_parts.append(
-                        np.stack(t["codes"].to_pylist()).astype("int64")
-                        if t.num_rows
-                        else np.empty((0, len(qd)), dtype="int64")
-                    )
-                cached = (
-                    np.concatenate(ids_parts) if ids_parts else np.empty(0, dtype="int64"),
-                    np.concatenate(code_parts)
-                    if code_parts
-                    else np.empty((0, len(qd)), dtype="int64"),
-                )
-                # codes are m ints per vector (32× under the floats) —
-                # the lazily-built per-bucket cache is the probed
-                # working set, refresh() drops it
-                self._codes_cache[c] = cached
-            ids, codes = cached
-            if ids.size == 0:
-                continue
+        parts = []
+        for c in self._probed(p, n_probe):
+            ids, codes = self._bucket_codes(c, "codes", self._codes_cache, len(qd))
             # vectorized ADC in the SAME s-ascending left-fold order as
             # the Spark reduce chain: acc = t0; acc = acc + t_s — each
             # element's double sequence is identical, so scores stay
@@ -475,35 +487,22 @@ class VectorSearchCursor:
             acc = qd[0][codes[:, 0]]
             for sp in range(1, len(qd)):
                 acc = acc + qd[sp][codes[:, sp]]
-            for i in range(ids.size):
-                vid = int(ids[i])
-                if exclude_vec_id is not None and vid == exclude_vec_id:
-                    continue
-                if vid in self._dead:
-                    continue
-                out.append(
-                    {
-                        "vec_id": vid,
-                        "adc_dist": _round6(float(acc[i])),
-                        "_c": c,
-                    }
-                )
-        out.sort(key=lambda r: (r["adc_dist"], r["vec_id"]))
+            parts.append((c, ids, acc))
         if refine is None:
-            for r in out:
-                del r["_c"]
-            return out[:k]
-        short = out[: refine * k]
-        want_by_bucket: dict[int, dict[int, dict]] = {}
-        for r in short:
-            want_by_bucket.setdefault(r.pop("_c"), {})[r["vec_id"]] = r
+            return [
+                {"vec_id": vid, "adc_dist": d}
+                for d, vid, _ in self._nearest(parts, k, exclude_vec_id)
+            ]
+        want_by_bucket: dict[int, dict[int, float]] = {}
+        for d, vid, c in self._nearest(parts, refine * k, exclude_vec_id):
+            want_by_bucket.setdefault(c, {})[vid] = d
         refined = []
         for c, want in want_by_bucket.items():
             for fp in self._buckets.get(c, ()):
                 t = self._pq.read_table(fp, columns=["vec_id", "embedding"])
                 for row in t.to_pylist():
-                    r = want.get(row["vec_id"])
-                    if r is None:
+                    adc = want.get(row["vec_id"])
+                    if adc is None:
                         continue
                     # exact squared L2, SAME sequential left fold as the
                     # Spark pq_refined_knn F.aggregate chain (float64)
@@ -513,9 +512,9 @@ class VectorSearchCursor:
                         d += t2 * t2
                     refined.append(
                         {
-                            "vec_id": r["vec_id"],
+                            "vec_id": row["vec_id"],
                             "sq_dist": _round6(d),
-                            "adc_dist": r["adc_dist"],
+                            "adc_dist": adc,
                         }
                     )
         refined.sort(key=lambda r: (r["sq_dist"], r["vec_id"]))
@@ -554,65 +553,20 @@ class VectorSearchCursor:
         mn = np.asarray(self.meta["sq"]["mn"], dtype="float64")
         scale = np.asarray(self.meta["sq"]["scale"], dtype="float64")
         p = np.asarray([float(x) for x in probe], dtype="float64")
-        # same driver-side codebook ranking as probe_ivf_index_sq
-        sims = sorted(
-            (
-                (
-                    float(
-                        p
-                        @ np.asarray(cv, dtype="float64")
-                        / (
-                            np.linalg.norm(p)
-                            * np.linalg.norm(np.asarray(cv, dtype="float64"))
-                        )
-                    ),
-                    c,
-                )
-                for c, cv in self.meta["centroids"]
-            ),
-            key=lambda t: (-t[0], t[1]),
-        )
-        probed = [c for _, c in sims[:n_probe]]
-        out = []
-        for c in probed:
-            cached = self._sq_cache.get(c)
-            if cached is None:
-                ids_parts, code_parts = [], []
-                for fp in self._buckets.get(c, ()):
-                    t = self._pq.read_table(fp, columns=["vec_id", "sq_codes"])
-                    ids_parts.append(t["vec_id"].to_numpy(zero_copy_only=False))
-                    code_parts.append(
-                        np.stack(t["sq_codes"].to_pylist()).astype("int64")
-                        if t.num_rows
-                        else np.empty((0, len(mn)), dtype="int64")
-                    )
-                cached = (
-                    np.concatenate(ids_parts)
-                    if ids_parts
-                    else np.empty(0, dtype="int64"),
-                    np.concatenate(code_parts)
-                    if code_parts
-                    else np.empty((0, len(mn)), dtype="int64"),
-                )
-                self._sq_cache[c] = cached
-            ids, codes = cached
-            if ids.size == 0:
-                continue
+        parts = []
+        for c in self._probed(p, n_probe):
+            ids, codes = self._bucket_codes(c, "sq_codes", self._sq_cache, len(mn))
             deq = mn[None, :] + codes * scale[None, :]
             diff = p[None, :] - deq
             sq = diff * diff
             acc = sq[:, 0].copy()
             for j in range(1, sq.shape[1]):
                 acc = acc + sq[:, j]
-            for i in range(ids.size):
-                vid = int(ids[i])
-                if exclude_vec_id is not None and vid == exclude_vec_id:
-                    continue
-                if vid in self._dead:
-                    continue
-                out.append({"vec_id": vid, "sq_dist": _round6(float(acc[i]))})
-        out.sort(key=lambda r: (r["sq_dist"], r["vec_id"]))
-        return out[:k]
+            parts.append((c, ids, acc))
+        return [
+            {"vec_id": vid, "sq_dist": d}
+            for d, vid, _ in self._nearest(parts, k, exclude_vec_id)
+        ]
 
 
 class SearchCursor:
@@ -648,18 +602,16 @@ class SearchCursor:
             if c is not None:
                 c.refresh()
 
-    def _position_lists(self, terms: list[str]) -> dict:
-        """{term: {doc_id: sorted positions}} from positional point
-        reads — O(df·terms) rows, the same bound as ``search``."""
+    def _position_table(self, terms: list[str]):
+        """(term, doc_id, positions) rows for ``terms`` as one Arrow
+        table from positional point reads — O(df·terms) rows, the same
+        bound as ``search``."""
         if self._positions is None:
             raise ValueError(
                 "SearchCursor: this index has no positions/ table — rebuild "
                 "with round-9 build_search_tables to serve phrase/NEAR queries"
             )
-        by_term: dict = {t: {} for t in terms}
-        for row in self._positions.lookup(terms):
-            by_term[row["term"]][row["doc_id"]] = row["positions"]
-        return by_term
+        return self._positions.lookup(terms)
 
     def phrase(self, phrase: list[str]) -> list[dict]:
         """Exact adjacent-phrase matches: [{doc_id, phrase_tf,
@@ -667,29 +619,42 @@ class SearchCursor:
         (the positional-index query the reference stores positions FOR,
         Writables.scala:24-44) minus the Spark job. Same algebra: a
         phrase start is a position p with p ∈ pos(t0), p+1 ∈ pos(t1),
-        … — slot-array intersection after shifting, evaluated here as
-        Python set intersection over the point-read position lists."""
-        by_term = self._position_lists(sorted(set(phrase)))
-        docs = set(by_term[phrase[0]])
-        for t in phrase[1:]:
-            docs &= set(by_term[t])
-        out = []
-        for doc_id in docs:
-            starts = set(by_term[phrase[0]][doc_id])
-            for i, t in enumerate(phrase[1:], 1):
-                starts &= {p - i for p in by_term[t][doc_id]}
-                if not starts:
-                    break
-            if starts:
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "phrase_tf": len(starts),
-                        "first_pos": min(starts),
-                    }
-                )
-        out.sort(key=lambda r: r["doc_id"])
-        return out
+        … — evaluated columnar: every (doc, pos − i) pair of the i-th
+        term is packed into one int64 and the per-term key sets are
+        intersected with ``np.intersect1d``. Doc ids are dense-ranked
+        before packing, so any int64 ``doc_id`` packs exactly."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        uniq = sorted(set(phrase))
+        tbl = self._position_table(uniq)
+        lists = tbl["positions"]
+        parent = pc.list_parent_indices(lists).to_numpy()
+        pos = pc.list_flatten(lists).to_numpy().astype("int64")
+        term = pc.index_in(tbl["term"], value_set=pa.array(uniq)).to_numpy()[parent]
+        doc_ids, rank = np.unique(tbl["doc_id"].to_numpy(), return_inverse=True)
+        rank = rank[parent]
+        width = int(pos.max()) + 1 if pos.size else 1
+        starts = None
+        for i, t in enumerate(phrase):
+            sel = term == uniq.index(t)
+            shifted = pos[sel] - i
+            ok = shifted >= 0  # a start is a t0 position, never negative
+            keys = rank[sel][ok] * width + shifted[ok]
+            starts = np.unique(keys) if starts is None else np.intersect1d(starts, keys)
+        # starts is sorted: per doc, the first key holds the lowest start
+        docs, first, count = np.unique(
+            starts // width, return_index=True, return_counts=True
+        )
+        return [
+            {"doc_id": d, "phrase_tf": n, "first_pos": f}
+            for d, n, f in zip(
+                doc_ids[docs].tolist(),
+                count.tolist(),
+                (starts[first] % width).tolist(),
+            )
+        ]
 
     def near(self, term_a: str, term_b: str, max_dist: int = 5) -> list[dict]:
         """NEAR/k proximity matches: [{doc_id, min_dist, tf_a, tf_b}]
@@ -699,7 +664,9 @@ class SearchCursor:
         tf_a·tf_b array algebra collapses to O(tf_a+tf_b) client-side;
         the minimum gap between two sorted sequences is attained at a
         merge-adjacent pair)."""
-        by_term = self._position_lists(sorted({term_a, term_b}))
+        by_term: dict = {term_a: {}, term_b: {}}
+        for row in self._position_table(sorted({term_a, term_b})).to_pylist():
+            by_term[row["term"]][row["doc_id"]] = row["positions"]
         pa_by_doc, pb_by_doc = by_term[term_a], by_term[term_b]
         out = []
         for doc_id in set(pa_by_doc) & set(pb_by_doc):
@@ -729,28 +696,32 @@ class SearchCursor:
         """Scored postings for ``terms``: [{term, doc_id, score}, ...]
         ordered by (score desc, term, doc_id) — exactly
         ``index.tfidf_scores`` (Q3) minus the Spark job. Pages missing
-        from the ranks table drop out (the Spark query's inner join)."""
+        from the ranks table drop out (the Spark query's inner join).
+        Scoring is columnar; only the rows that can reach the top ``k``
+        are rounded and become dicts (``_round6_topk``)."""
+        import numpy as np
+
         m = self.meta
         post = self._postings.lookup(terms)
-        if not post:
-            return []
-        prs = {
-            r["doc_id"]: r["pr"]
-            for r in self._ranks.lookup(sorted({p["doc_id"] for p in post}))
-        }
+        doc = post["doc_id"].to_numpy()
+        ranks = self._ranks.lookup(doc)
+        rank_ids = ranks["doc_id"].to_numpy()
+        order = np.argsort(rank_ids, kind="stable")
+        rank_ids, pr = rank_ids[order], ranks["pr"].to_numpy()[order]
+        at = np.searchsorted(rank_ids, doc)
+        found = at < rank_ids.size
+        found[found] = rank_ids[at[found]] == doc[found]
+        rows = np.flatnonzero(found)
+        tf, idf = post["tf"].to_numpy()[rows], post["idf"].to_numpy()[rows]
+        # stored idf keeps this pure IEEE arithmetic — the operation
+        # order of index.tfidf_scores' expression, one element at a time
+        raw = (m["w_tfidf"] * tf) * idf + m["w_pr"] * pr[at[rows]]
+        idx, scores = _round6_topk(raw, k, largest=True)
         out = [
-            {
-                "term": p["term"],
-                "doc_id": p["doc_id"],
-                # stored idf keeps this pure IEEE arithmetic — same
-                # associativity as index.tfidf_scores' expression
-                "score": _round6(
-                    m["w_tfidf"] * p["tf"] * p["idf"]
-                    + m["w_pr"] * prs[p["doc_id"]]
-                ),
-            }
-            for p in post
-            if p["doc_id"] in prs
+            {"term": t, "doc_id": d, "score": sc}
+            for t, d, sc in zip(
+                post["term"].take(rows[idx]).to_pylist(), doc[rows[idx]].tolist(), scores
+            )
         ]
         out.sort(key=lambda r: (-r["score"], r["term"], r["doc_id"]))
         return out[:k] if k is not None else out
@@ -763,13 +734,11 @@ class SearchCursor:
         around the first literal occurrence — ``q_search_snippets``
         semantics: top-k by (score desc, doc_id), pages without a
         literal hit drop out (the Spark query's inner snippet join)."""
-        scored = self.search([term])
-        scored.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        top = scored[: max(k, 0)]
-        texts = {
-            r["doc_id"]: r["text"]
-            for r in self._docs.lookup([r["doc_id"] for r in top])
-        }
+        # one term: search's (score desc, term, doc_id) order is the
+        # (score desc, doc_id) order of the declared query
+        top = self.search([term], k=max(k, 0))
+        docs = self._docs.lookup([r["doc_id"] for r in top])
+        texts = dict(zip(docs["doc_id"].to_pylist(), docs["text"].to_pylist()))
         out = []
         for r in top:
             text = texts.get(r["doc_id"], "")

@@ -216,13 +216,15 @@ class PointLookupCursor:
     Staleness contract: the footer index is read at open; reopen after
     appends/compaction (cheap — footers only).
 
-    Round-8 hot-path rework (the multi-probe search lane exposed it):
-    lookups now reuse the ParquetFile HANDLES opened at refresh and
-    read only the ROW GROUPS whose cached [min, max] intersect the
-    probe set, filtering with a vectorized ``is_in`` — the old
-    ``pq.read_table(path, filters=...)`` re-parsed every footer on
-    every call, which billed ~1ms per touched file and dominated
-    multi-file probes (385 scattered ids across 8 files: ~10ms → ~3ms).
+    Read contract: ``lookup`` returns ONE ``pyarrow.Table`` — the
+    matching rows of every touched row group, concatenated in file
+    order, or an empty table with the file schema when nothing matches.
+    It reuses the ParquetFile HANDLES opened at refresh, reads only the
+    ROW GROUPS whose cached [min, max] intersect the probe set, and
+    filters them with a vectorized ``is_in``; no row becomes a Python
+    object unless the caller asks (``.to_pylist()`` is the dict shape).
+    Probe keys may be a list or a numpy array, so a multi-thousand-id
+    probe (the ranks read behind one search) stays columnar too.
     Handles are kept for up to ``MAX_OPEN_FILES`` files and opened on
     demand past that (a 100k-file table must not hold 100k fds).
     """
@@ -236,6 +238,7 @@ class PointLookupCursor:
         self.path = path
         self.key = key
         self._coerce = None  # set from the key column's arrow type
+        self._schema = None  # first indexed file's arrow schema
         # per file: {"fp", "pf" (handle or None), "lo", "hi",
         #            "rgs": [(lo, hi, rg_idx)] or None when stats absent}
         self._files: list[dict] = []
@@ -292,6 +295,7 @@ class PointLookupCursor:
             pf = self._pq.ParquetFile(fp)
             md = pf.metadata
             if self._coerce is None:
+                self._schema = pf.schema_arrow
                 t = pf.schema_arrow.field(self.key).type
                 if pat.is_integer(t):
                     self._coerce = int
@@ -343,18 +347,23 @@ class PointLookupCursor:
         i = bisect.bisect_left(vals, lo)
         return i < len(vals) and vals[i] <= hi
 
-    def lookup(self, values: list) -> list[dict]:
-        """Rows whose key ∈ values, as plain dicts (the serving shape).
-        Values are coerced to the key column's type (argv strings from
-        the CLI lookup verb work against bigint keys)."""
+    def lookup(self, values):
+        """Rows whose key ∈ values, as one ``pyarrow.Table`` (empty, with
+        the file schema, on a miss). ``values`` is a list — coerced to
+        the key column's type, so argv strings from the CLI lookup verb
+        work against bigint keys — or a numpy array of keys, used as is."""
+        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        vals = sorted({self._coerce(v) for v in values})
-        if not vals:
-            return []
+        if isinstance(values, np.ndarray):
+            vals = np.unique(values)  # sorted, like the list branch
+        else:
+            vals = sorted({self._coerce(v) for v in values})
+        if not len(vals):
+            return self._schema.empty_table()
         val_arr = None  # built lazily with the key column's exact type
-        out: list[dict] = []
+        parts = []
         for e in self._files:
             if e["rgs"] == []:
                 # zero-row-group part file: Spark writes one for an
@@ -376,8 +385,12 @@ class PointLookupCursor:
                 val_arr = pa.array(vals, type=tbl.schema.field(self.key).type)
             tbl = tbl.filter(pc.is_in(tbl[self.key], value_set=val_arr))
             if tbl.num_rows:
-                out.extend(tbl.to_pylist())
-        return out
+                parts.append(tbl)
+        if not parts:
+            return self._schema.empty_table()
+        # "default" promotion unifies per-file nullability (an appended
+        # file written from a different frame may differ only in that)
+        return pa.concat_tables(parts, promote_options="default")
 
 
 def read_prefix(spark: SparkSession, path: str, key: str, prefix: str) -> DataFrame:

@@ -265,13 +265,13 @@ def test_point_lookup_cursor_equals_read_point(spark, tmp_path):
 
     cur = PointLookupCursor(path, "term")
     probes = ["k00007", "k01999", "k00420"]
-    got = sorted((r["term"], r["df"]) for r in cur.lookup(probes))
+    got = sorted((r["term"], r["df"]) for r in cur.lookup(probes).to_pylist())
     want = sorted(
         (r["term"], r["df"])
         for r in read_point(spark, path, "term", probes).collect()
     )
     assert got == want and len(got) == 3
-    assert cur.lookup(["nope"]) == []
+    assert cur.lookup(["nope"]).num_rows == 0
 
     lat = []
     for i in range(10):
@@ -296,13 +296,13 @@ def test_point_lookup_cursor_refresh_sees_appended_files(spark, tmp_path):
     path = str(tmp_path / "serve")
     write_keyed(df, path, "term", n_files=2)
     cur = PointLookupCursor(path, "term")
-    assert cur.lookup(["z9999"]) == []
+    assert cur.lookup(["z9999"]).num_rows == 0
 
     spark.createDataFrame([("z9999", 777)], ["term", "v"]).coalesce(1).write.mode(
         "append"
     ).parquet(path)
     assert cur.refresh() == 1  # only the appended file indexed
-    assert [(r["term"], r["v"]) for r in cur.lookup(["z9999"])] == [("z9999", 777)]
+    assert [(r["term"], r["v"]) for r in cur.lookup(["z9999"]).to_pylist()] == [("z9999", 777)]
     assert cur.refresh() == 0  # idempotent
 
 
@@ -337,7 +337,7 @@ def test_write_keyed_row_group_cap_tightens_cursor_pruning(spark, tmp_path):
     entry = cur._files[0]
     assert entry["rgs"] is not None and len(entry["rgs"]) == n_rgs[0]
     probes = ["k0000042", "k0119999", "k0060000"]
-    got = sorted((r["term"], r["v"]) for r in cur.lookup(probes))
+    got = sorted((r["term"], r["v"]) for r in cur.lookup(probes).to_pylist())
     want = sorted(
         (r["term"], r["v"]) for r in read_point(spark, path, "term", probes).collect()
     )
@@ -358,8 +358,8 @@ def test_point_lookup_cursor_empty_table_returns_empty(spark, tmp_path):
     path = str(tmp_path / "serve_empty")
     write_keyed(df, path, "term", n_files=1)
     cur = PointLookupCursor(path, "term")
-    assert cur.lookup(["anything"]) == []
-    assert cur.lookup(["a", "b", "c"]) == []
+    assert cur.lookup(["anything"]).num_rows == 0
+    assert cur.lookup(["a", "b", "c"]).num_rows == 0
 
 
 def test_point_lookup_cursor_reindexes_inplace_rewrite(spark, tmp_path):
@@ -386,7 +386,7 @@ def test_point_lookup_cursor_reindexes_inplace_rewrite(spark, tmp_path):
         path,
     )
     cur = PointLookupCursor(path, "term")
-    assert [r["v"] for r in cur.lookup(["k0007"])] == [7]
+    assert [r["v"] for r in cur.lookup(["k0007"]).to_pylist()] == [7]
     (name,) = [n for n in os.listdir(path) if n.endswith(".parquet")]
 
     # rewrite the SAME file name with different content (and a bumped
@@ -404,7 +404,7 @@ def test_point_lookup_cursor_reindexes_inplace_rewrite(spark, tmp_path):
     os.utime(os.path.join(path, name))
 
     cur.refresh()
-    assert [r["v"] for r in cur.lookup(["k0007"])] == [70]
+    assert [r["v"] for r in cur.lookup(["k0007"]).to_pylist()] == [70]
 
 
 def test_read_point_relation_cache_and_invalidate(spark, tmp_path):

@@ -234,7 +234,7 @@ def test_cursor_coerces_numeric_keys_and_rejects_partitioned_layouts(
     path = str(tmp_path / "numkey")
     write_keyed(df, path, "vec_id", n_files=2)
     cur = PointLookupCursor(path, "vec_id")
-    rows = cur.lookup(["42"])  # argv-style string against bigint
+    rows = cur.lookup(["42"]).to_pylist()  # argv-style string against bigint
     assert [(r["vec_id"], r["x"]) for r in rows] == [(42, 84)]
 
     part = str(tmp_path / "part")

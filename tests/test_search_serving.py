@@ -219,3 +219,310 @@ def test_phrase_without_positions_table_raises(spark, search_dir, tmp_path):
     assert cur.search(["spark"])  # term search unaffected
     with pytest.raises(ValueError, match="positions"):
         cur.phrase(["stream", "data"])
+
+
+# --- columnar serving lane: parity with the row-by-row algorithm ---------
+#
+# The oracle below is the serving lane's earlier row-at-a-time algorithm,
+# kept as the reference: every posting becomes a dict, every score is
+# rounded, Python sets intersect the shifted positions. The columnar
+# cursor must return exactly its answers, types included.
+
+
+def _round6_ref(x):
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+
+def _rows(table_dir, key, values):
+    import pyarrow.parquet as pq
+
+    want = set(values)
+    return [r for r in pq.read_table(table_dir).to_pylist() if r[key] in want]
+
+
+def _meta(d):
+    import json
+
+    with open(os.path.join(d, "_search_meta.json")) as fh:
+        return json.load(fh)
+
+
+def _oracle_search(d, terms, k=None):
+    meta = _meta(d)
+    post = _rows(os.path.join(d, "postings"), "term", terms)
+    prs = {
+        r["doc_id"]: r["pr"]
+        for r in _rows(os.path.join(d, "ranks"), "doc_id", {p["doc_id"] for p in post})
+    }
+    out = [
+        {
+            "term": p["term"],
+            "doc_id": p["doc_id"],
+            "score": _round6_ref(
+                meta["w_tfidf"] * p["tf"] * p["idf"] + meta["w_pr"] * prs[p["doc_id"]]
+            ),
+        }
+        for p in post
+        if p["doc_id"] in prs
+    ]
+    out.sort(key=lambda r: (-r["score"], r["term"], r["doc_id"]))
+    return out[:k] if k is not None else out
+
+
+def _oracle_snippets(d, term, k, before=20, width=50):
+    top = sorted(_oracle_search(d, [term]), key=lambda r: (-r["score"], r["doc_id"]))
+    top = top[: max(k, 0)]
+    texts = {
+        r["doc_id"]: r["text"]
+        for r in _rows(os.path.join(d, "docs"), "doc_id", {r["doc_id"] for r in top})
+    }
+    out = []
+    for r in top:
+        text = texts.get(r["doc_id"], "")
+        pos = text.find(term) + 1
+        if pos <= 0:
+            continue
+        start = max(pos - before, 1)
+        out.append(
+            {"doc_id": r["doc_id"], "score": r["score"], "snippet": text[start - 1 : start - 1 + width]}
+        )
+    return out
+
+
+def _oracle_phrase(d, phrase):
+    by_term = {t: {} for t in phrase}
+    for r in _rows(os.path.join(d, "positions"), "term", phrase):
+        by_term[r["term"]][r["doc_id"]] = r["positions"]
+    docs = set(by_term[phrase[0]])
+    for t in phrase[1:]:
+        docs &= set(by_term[t])
+    out = []
+    for doc_id in docs:
+        starts = set(by_term[phrase[0]][doc_id])
+        for i, t in enumerate(phrase[1:], 1):
+            starts &= {p - i for p in by_term[t][doc_id]}
+        if starts:
+            out.append({"doc_id": doc_id, "phrase_tf": len(starts), "first_pos": min(starts)})
+    out.sort(key=lambda r: r["doc_id"])
+    return out
+
+
+def _typed(rows):
+    """Rows with the Python type of every value, so an int64 numpy
+    scalar in place of an int fails the comparison."""
+    return [[(k, v, type(v)) for k, v in r.items()] for r in rows]
+
+
+def _write_table(d, rows, schema, key):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(d)
+    rows = sorted(rows, key=lambda r: r[key])
+    half = len(rows) // 2  # two files, several row groups each
+    for i, part in enumerate((rows[:half], rows[half:])):
+        pq.write_table(
+            pa.Table.from_pylist(part, schema=schema),
+            os.path.join(d, f"part-{i:05d}.parquet"),
+            row_group_size=3,
+        )
+
+
+def _write_search_dir(root, postings, ranks, docs, positions):
+    """A hand-written build_search_tables directory (pyarrow, no Spark)
+    with the column types the Spark build writes."""
+    import json
+
+    import pyarrow as pa
+
+    _write_table(
+        os.path.join(root, "postings"),
+        postings,
+        pa.schema(
+            [("term", pa.string()), ("doc_id", pa.int64()), ("tf", pa.int64()),
+             ("df", pa.int64()), ("idf", pa.float64())]
+        ),
+        "term",
+    )
+    _write_table(
+        os.path.join(root, "ranks"), ranks,
+        pa.schema([("doc_id", pa.int64()), ("pr", pa.float64())]), "doc_id",
+    )
+    _write_table(
+        os.path.join(root, "docs"), docs,
+        pa.schema([("doc_id", pa.int64()), ("text", pa.string())]), "doc_id",
+    )
+    _write_table(
+        os.path.join(root, "positions"),
+        positions,
+        pa.schema(
+            [("term", pa.string()), ("doc_id", pa.int64()),
+             ("positions", pa.list_(pa.int32()))]
+        ),
+        "term",
+    )
+    meta = {"n_docs": len(docs), "cutoff": 10**9, "w_tfidf": 0.5, "w_pr": 0.5}
+    with open(os.path.join(root, "_search_meta.json"), "w") as fh:
+        json.dump(meta, fh)
+    return root
+
+
+def _vocabulary(d):
+    import pyarrow.parquet as pq
+
+    return sorted(set(pq.read_table(os.path.join(d, "postings"), columns=["term"])["term"].to_pylist()))
+
+
+def test_search_parity_with_row_oracle(search_dir):
+    """search and search_with_snippets equal the row-by-row algorithm
+    for k ∈ {0, 1, 10, all} on every fixture term, and on a multi-term
+    query holding an absent term."""
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    cur = SearchCursor(search_dir)
+    terms = _vocabulary(search_dir)
+    assert len(terms) > 3
+    for t in terms:
+        full = _oracle_search(search_dir, [t])
+        for k in (0, 1, 10, len(full), None):
+            assert _typed(cur.search([t], k=k)) == _typed(_oracle_search(search_dir, [t], k)), (t, k)
+        for k in (0, 1, 10):
+            assert _typed(cur.search_with_snippets(t, k=k)) == _typed(
+                _oracle_snippets(search_dir, t, k)
+            ), (t, k)
+    multi = terms[:3] + ["absent-term"]
+    for k in (1, 10, None):
+        assert _typed(cur.search(multi, k=k)) == _typed(_oracle_search(search_dir, multi, k))
+    assert cur.search(["absent-term"], k=10) == []
+
+
+def test_search_topk_across_half_up_boundary(tmp_path):
+    """Raw scores packed around a 6dp HALF_UP boundary: rows outside the
+    top k by RAW score round to the k-th row's score and enter the top k
+    on the doc_id tie-break. The bounded rounding must keep them."""
+    import numpy as np
+
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    boundary = 0.1234565  # the 6dp HALF_UP cut between .123456 and .123457
+    offsets = [-1.6e-6, -1.1e-6, -0.9e-6, -0.6e-6, -0.3e-6, -1e-12, 0.0, 1e-12,
+               0.2e-6, 0.45e-6, 0.55e-6, 0.8e-6, 1.2e-6]
+    raw = [boundary + o for o in offsets]
+    # idf = 0 leaves raw = 0.5 · pr exactly; the smaller the raw score,
+    # the smaller the doc_id, so every tie pulls in lower raw rows
+    docs = list(range(len(raw)))
+    postings = [
+        {"term": "t", "doc_id": d, "tf": 1, "df": len(raw), "idf": 0.0} for d in docs
+    ] + [{"term": "u", "doc_id": d, "tf": 1, "df": 3, "idf": 0.0} for d in docs[4:7]]
+    ranks = [{"doc_id": d, "pr": 2.0 * r} for d, r in zip(docs, raw)]
+    texts = [{"doc_id": d, "text": f"page {d} about t and u"} for d in docs]
+    root = _write_search_dir(str(tmp_path / "idx"), postings, ranks, texts, [])
+    cur = SearchCursor(root)
+
+    entered = 0
+    for k in range(len(raw) + 2):
+        got = cur.search(["t"], k=k)
+        assert _typed(got) == _typed(_oracle_search(root, ["t"], k)), k
+        by_raw = set(np.argsort(-np.asarray(raw), kind="stable")[:k].tolist())
+        entered += {r["doc_id"] for r in got} != by_raw
+        assert _typed(cur.search_with_snippets("t", k=k)) == _typed(_oracle_snippets(root, "t", k))
+        assert _typed(cur.search(["u", "t"], k=k)) == _typed(_oracle_search(root, ["u", "t"], k))
+    assert entered, "no k where a tie row outside the raw top k enters it"
+
+
+def test_phrase_parity_with_row_oracle(search_dir):
+    """phrase equals the row-by-row set algebra on adjacent pairs,
+    repeated terms, 3-term phrases and phrases holding an absent term."""
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    cur = SearchCursor(search_dir)
+    terms = _vocabulary(search_dir)[:8]
+    phrases = [[a, b] for a in terms for b in terms]  # includes ["a", "a"]
+    phrases += [[a, b, c] for a, b, c in zip(terms, terms[1:], terms[2:])]
+    phrases += [[terms[0], terms[0], terms[0]], ["stream", "data", "stream"]]
+    phrases += [[terms[0], "absent-term"], ["absent-term"], ["absent-term", "x"]]
+    hits = 0
+    for p in phrases:
+        got = cur.phrase(p)
+        assert _typed(got) == _typed(_oracle_phrase(search_dir, p)), p
+        hits += bool(got)
+    assert hits > len(phrases) // 4
+
+
+def test_phrase_exact_for_wide_doc_ids(tmp_path):
+    """doc_id ≥ 2³² (and near 2⁶²) must pack without collision: the
+    cursor dense-ranks ids before packing (doc, pos) pairs."""
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    wide = [5, 2**32 - 1, 2**32, 2**32 + 7, 2**40 + 1, 2**62 + 3]
+    positions = []
+    for i, d in enumerate(wide):
+        positions += [
+            {"term": "a", "doc_id": d, "positions": [0, 3, 7 + i, 20]},
+            {"term": "b", "doc_id": d, "positions": [1, 8 + i, 15]},
+            {"term": "c", "doc_id": d, "positions": [2, 9 + i] if i % 2 else [16]},
+        ]
+    postings = [{"term": "a", "doc_id": d, "tf": 1, "df": 1, "idf": 1.0} for d in wide]
+    root = _write_search_dir(
+        str(tmp_path / "idx"), postings, [{"doc_id": 5, "pr": 0.1}],
+        [{"doc_id": 5, "text": "a b c"}], positions,
+    )
+    cur = SearchCursor(root)
+    for p in (["a", "b"], ["a", "b", "c"], ["b", "a"], ["a", "a"], ["c"], ["a", "z"]):
+        assert _typed(cur.phrase(p)) == _typed(_oracle_phrase(root, p)), p
+    assert [r["doc_id"] for r in cur.phrase(["a", "b", "c"])] == wide[1::2]
+
+
+def test_lookup_returns_arrow_table(search_dir):
+    """PointLookupCursor.lookup returns one Arrow table: an empty one
+    with the file schema on a miss, and the same rows for a numpy key
+    array as for the equivalent list."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    cur = SearchCursor(search_dir)
+    ranks_dir = os.path.join(search_dir, "ranks")
+    miss = cur._postings.lookup(["absent-term"])
+    assert miss.num_rows == 0
+    assert miss.schema.names == ["term", "doc_id", "tf", "df", "idf"]
+    assert cur._ranks.lookup(np.array([], dtype="int64")).num_rows == 0
+    assert cur._ranks.lookup([]).schema.equals(pq.read_schema(
+        os.path.join(ranks_dir, sorted(f for f in os.listdir(ranks_dir) if f.endswith(".parquet"))[0])
+    ))
+    ids = [r["doc_id"] for r in cur.search(["spark"], k=25)]
+    as_list = cur._ranks.lookup(ids).to_pylist()
+    as_array = cur._ranks.lookup(np.asarray(ids[::-1] + ids, dtype="int64")).to_pylist()
+    assert as_list == as_array and len(as_list) == len(set(ids))
+
+
+def test_snippet_search_rounds_only_reachable_rows(search_dir, monkeypatch):
+    """Structural pin, not a timing pin: a top-k snippet search calls
+    the exact 6dp rounding only on rows within 1e-6 of the k-th raw
+    score — k plus the near-ties — never once per posting."""
+    import pyarrow.parquet as pq
+
+    from page_rank_hadoop_spark.sources import search as S
+
+    calls = []
+    real = S._round6
+    monkeypatch.setattr(S, "_round6", lambda x: calls.append(x) or real(x))
+    meta = _meta(search_dir)
+    ranks = pq.read_table(os.path.join(search_dir, "ranks"))
+    prs = dict(zip(ranks["doc_id"].to_pylist(), ranks["pr"].to_pylist()))
+    k = 10
+    for term in ("spark", "data", "stream"):
+        post = _rows(os.path.join(search_dir, "postings"), "term", [term])
+        raw = sorted(
+            (meta["w_tfidf"] * p["tf"] * p["idf"] + meta["w_pr"] * prs[p["doc_id"]] for p in post),
+            reverse=True,
+        )
+        assert len(raw) > 3 * k, (term, len(raw))
+        ties = sum(1 for x in raw[k:] if x >= raw[k - 1] - 1e-6)
+        calls.clear()
+        assert len(S.SearchCursor(search_dir).search_with_snippets(term, k=k)) > 0
+        assert k <= len(calls) <= k + ties, (term, len(calls), ties)
+        assert len(calls) < len(post)
