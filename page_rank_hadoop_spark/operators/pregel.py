@@ -7,12 +7,11 @@ iterative" as the Spark-native re-expression. This module is that
 surface, DataFrame-first: one reusable superstep harness owning ALL the
 loop hygiene the per-algorithm loops in pagerank.py / graph.py proved
 out — pre-partitioned persisted edge frames, id-partitioned state so
-per-round joins never reshuffle the big side, lazy ``localCheckpoint``
-cadence to stop Catalyst's superlinear plan-reanalysis, persist/unpersist
-discipline, and the lazy-persist-chain single materialization for
-fixed-round mode. PageRank, HITS, and LPA re-express through it
-(tests/test_pregel.py pins result equality with the standalone
-operators and the ONE-Exchange-per-round plan shape).
+per-round joins never reshuffle the big side, a ``localCheckpoint`` per
+round to stop Catalyst's superlinear plan-reanalysis, and loop-scoped
+session settings (``session.loop_scope``). PageRank, HITS, and LPA
+re-express through it (tests/test_pregel.py pins result equality with
+the standalone operators and the ONE-Exchange-per-round plan shape).
 
 Superstep model (Malewicz et al., "Pregel", SIGMOD 2010; GraphFrames'
 aggregateMessages API is the DataFrame analog):
@@ -30,16 +29,24 @@ aggregateMessages API is the DataFrame analog):
    (HITS reads its L1 mass here) — anything bigger belongs in the send
    or aggregate phase where it stays distributed. An update whose scalar
    action already materialized the round (a lazy ``localCheckpoint``
-   driven by the scalar read) returns ``(frame, True)`` and the harness
-   skips its own checkpoint — the fused-superstep contract (round 12).
+   driven by the scalar read) returns exactly ``(frame, True)`` and the
+   harness skips its own checkpoint — the fused-superstep contract,
+   checked: any other tuple raises ``TypeError``.
 
-Physical contract (the reason this harness exists): edges are
-repartitioned on the send key ONCE and persisted; state is id-partitioned
-by construction every round (the aggregate's groupBy output), so the
-send join and the update join are both exchange-free and each active
-message direction costs exactly ONE Exchange per superstep — the same
-measured shape as pagerank.py's loop (plan-pinned in
-tests/test_pregel.py::test_pregel_round_single_exchange).
+Physical contract (the reason this harness exists): the loop runs inside
+``loop_scope`` — AQE off, shuffle partitions pinned to P. The vertex
+state and the edges are laid out ONCE at P (state by id, edges by the
+send key) and persisted; every round's state is a ``localCheckpoint``
+that keeps ``hashpartitioning(id, P)``, so the send join and the update
+join are both exchange-free and each active message direction costs
+exactly ONE Exchange per superstep. Both joins are shuffled-hash joins
+(a ``shuffle_hash`` hint on the state / message side), so the edge frame
+is never broadcast and a round is one Spark job (plan-pinned over a
+harness checkpoint in
+tests/test_pregel.py::test_pregel_checkpointed_round_single_exchange).
+Under AQE the checkpoint reported ``UnknownPartitioning(0)``, and every
+round re-shuffled the state and broadcast the edges, about 5 jobs per
+superstep (SCALING.md, "Pregel and PageRank loops without AQE").
 """
 
 from __future__ import annotations
@@ -50,6 +57,8 @@ from typing import Callable, Sequence, Union
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from page_rank_hadoop_spark.session import loop_scope
 
 AggSpec = Union[Sequence[Column], Callable[[DataFrame], DataFrame]]
 
@@ -71,6 +80,18 @@ def _aggregate(msgs: DataFrame, agg: AggSpec) -> DataFrame:
     return msgs.groupBy("id").agg(*agg)
 
 
+def _fused(upd) -> tuple[DataFrame, bool]:
+    """(new state, already materialized?) from an update's return value."""
+    if not isinstance(upd, tuple):
+        return upd, False
+    if len(upd) != 2 or not isinstance(upd[0], DataFrame) or upd[1] is not True:
+        raise TypeError(
+            "pregel: an update that returns a tuple must return exactly "
+            f"(DataFrame, True) — the fused-superstep contract; got {upd!r}"
+        )
+    return upd[0], True
+
+
 def pregel(
     vertices: DataFrame,
     edges: DataFrame | None = None,
@@ -84,18 +105,15 @@ def pregel(
     max_iter: int = 50,
     tol: float | None = None,
     delta_metric: Callable[[DataFrame, DataFrame], float] | None = None,
-    checkpoint_every: int = 3,
     frontier_col: str | None = None,
     shuffle_partitions: int | str | None = None,
-    eager_checkpoint: bool = True,
-    broadcast_state: bool | str = False,
 ) -> PregelResult:
-    """Run supersteps until ``n_iter`` rounds (fixed mode: no
-    per-round action, lazy persist chain materialized once at the end —
-    the measured ~1.7× win from pagerank.py) or until
+    """Run supersteps until ``n_iter`` rounds (fixed mode: each round's
+    one job is its eager checkpoint) or until
     ``delta_metric(old, new) <= tol`` with the min/max-round policy
     (adaptive mode: one scalar action per round, the reference's
-    counter-read analog).
+    counter-read analog, which also materializes the round's lazy
+    checkpoint).
 
     ``vertices``: (id, initial state cols) — static per-vertex
     attributes (e.g. out-degree) just ride along as state the update
@@ -117,54 +135,17 @@ def pregel(
     full edge⨝state join every round; this gates the JOIN itself.
     ``deltas`` records the frontier size per round.
 
-    ``shuffle_partitions`` (round 9, judge r8 item 3): pin
-    ``spark.sql.shuffle.partitions`` for the DURATION of the loop
-    (restored after — the streaming-replay precedent). Iterative loops
-    re-plan every round with the static session setting, and the
-    per-round localCheckpoint freezes whatever partition count the
-    exchanges produced — AQE's runtime coalescing can't help across
-    rounds the way it does inside one query. On a small graph that
-    means rounds × partitions tiny tasks of pure scheduling overhead
-    (measured: sf0.1 CC, 2.7k vertices — 10.3s warm at 32 partitions
-    vs 4.5s at 8). ``'auto'`` sizes from the materialized vertex/edge
-    counts (~50k rows/partition, floor 4, never above the session
-    setting — a 100 TB graph keeps its cluster-sized exchanges; only
-    provably small loops shrink). Round 9b extends it to the FLOAT-SUM
-    combines (pagerank/HITS) too: partial-agg merge order is already
-    nondeterministic run-to-run (reduce-side fetch order) and the
-    oracle is a different engine (DuckDB) summing in its own order, so
-    the declared 6dp rounding must — and does — absorb ulp-level
-    reorder regardless of partition count; changing the count moves
-    sums within that same already-tolerated class. Validated
-    empirically: pagerank/HITS hashes stable across repeated runs at
-    all three SFs (see SCALING.md round-9b note).
-
-    ``eager_checkpoint`` / ``broadcast_state`` (round 11, judge r10
-    item 7 — the SCC loop's two levers offered as harness flags):
-    eager mode replaces the per-round persist with an eager
-    ``localCheckpoint`` — every round's state is a materialized
-    LogicalRDD with a constant-size plan, the discipline the bespoke
-    loops (SCC, near_dup_components) use. It is now the DEFAULT: the
-    round-11 A/B measured it a win for EVERY algorithm on the harness
-    (same-tree warm best-of-3 at sf0.1, values bit-identical —
-    pagerank 6.52→3.05s, hits 4.49→3.54, sssp 3.20→2.25, cc
-    2.86→2.50, lpa 2.45→2.05, bfs 1.86→1.45, kcore 1.47→1.23),
-    superseding the early-round "lazy persist chain, one
-    materialization" doctrine — with the round-9b loop-scoped
-    partition sizing, per-round materialization is cheap while the
-    lazy chain's single materialization re-analyzes a depth-n_iter
-    plan. Pass ``eager_checkpoint=False`` to restore the lazy chain.
-    ``broadcast_state`` wraps the vertex-scale frames (the sending
-    state and the aggregated message frames) in an explicit
-    ``F.broadcast`` — checkpointed frames have unknown stats, so AQE
-    never auto-broadcasts them and each round's joins sort/shuffle
-    sides a hash join wouldn't touch. ``'auto'`` enables it when the
-    vertex count is ≤ 100k (the SCC threshold). Broadcasting an
-    UNMATERIALIZED lazy-persist chain re-executes it per broadcast
-    build — the round-10 measured O(i²) loss — so broadcast_state
-    forces eager_checkpoint on. (On hits at this SF the broadcast
-    measured a small loss — per-round broadcast-build sub-jobs — and
-    stays off by default.)
+    ``shuffle_partitions``: the loop's partition count, sized by
+    ``session.loop_scope`` (``'auto'``: ~50k rows per partition over
+    max(vertex count, edge count), floor 4, capped at the session
+    setting). Iterative loops re-plan every round and the checkpoint
+    freezes whatever count the exchanges produced, so on a small graph
+    the session width is rounds × partitions tiny tasks of pure
+    scheduling overhead (measured: sf0.1 CC, 2.7k vertices — 10.3s warm
+    at 32 partitions vs 4.5s at 8). Float-sum combines (pagerank/HITS)
+    stay within the declared 6dp rounding at any count: pagerank/HITS
+    hashes are stable across repeated runs at all three SFs (SCALING.md
+    round-9b note).
     """
     if update is None:
         raise ValueError("pregel: update callable is required")
@@ -186,167 +167,76 @@ def pregel(
             f"pregel: frontier_col {frontier_col!r} is not a vertex state column"
         )
 
-    state = vertices.repartition("id").persist(StorageLevel.MEMORY_AND_DISK)
-    n_verts = state.count()
-    e_by_src = e_by_dst = None
-    n_edges = 0
-    if send_to_dst is not None:
-        e_by_src = edges.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-        n_edges = max(n_edges, e_by_src.count())
-    if send_to_src is not None:
-        e_by_dst = edges.repartition("dst").persist(StorageLevel.MEMORY_AND_DISK)
-        # both directions repartition the SAME edges frame, so their
-        # counts are equal — the dual-direction (HITS) setup paid a
-        # whole second count job for a number it already had (round 12);
-        # the persisted re-lay materializes inside round 1's job instead
-        if e_by_src is None:
-            n_edges = e_by_dst.count()
-
-    spark = vertices.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if shuffle_partitions == "auto":
-        # ~50k rows per exchange partition, floor 4, capped at the
-        # session setting: small loops stop paying rounds × partitions
-        # empty-task overhead, big graphs keep their cluster sizing
-        loop_parts = min(session_parts, max(4, max(n_verts, n_edges) // 50_000 + 1))
-    elif shuffle_partitions is not None:
-        loop_parts = min(session_parts, int(shuffle_partitions))
-    else:
-        loop_parts = None
-
-    # Pin-only, no input re-lay: re-laying the persisted state/edge
-    # caches at loop_parts before the loop was measured a NET LOSS
-    # (sf0.1, warm best-of-2: pagerank_pregel 5.9s relaid vs 4.0s
-    # pin-only; hits_pregel 7.5s vs 6.3s) — the two repartition+persist
-    # passes cost more than the per-round small-side exchange they
-    # remove, because the loop's expensive side (the persisted edges)
-    # is joined cache-resident either way and only the aggregated
-    # message frame re-shuffles at the pinned count.
-
-    if broadcast_state == "auto":
-        broadcast_state = n_verts <= 100_000
-    if broadcast_state:
-        eager_checkpoint = True  # see docstring: never broadcast a lazy chain
-    bcast = F.broadcast if broadcast_state else (lambda df: df)
-
-    deltas: list[float] = []
-    lazy_persisted: list[DataFrame] = []
-    i = 0
+    # fixed mode has no scalar read: the eager checkpoint IS the round's
+    # one job; otherwise the round's scalar read (frontier count / delta
+    # metric) materializes a lazy checkpoint and returns the scalar in
+    # one job
+    eager = n_iter is not None and frontier_col is None
     limit = n_iter if n_iter is not None else max_iter
-    if loop_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        return _pregel_loop(
-            state, e_by_src, e_by_dst, send_to_dst, agg_to_dst, send_to_src,
-            agg_to_src, update, n_iter, min_iter, tol, delta_metric,
-            checkpoint_every, frontier_col, deltas, lazy_persisted, i, limit,
-            eager_checkpoint, bcast,
-        )
-    finally:
-        if loop_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
-        for e in (e_by_src, e_by_dst):
-            if e is not None:
-                e.unpersist()
-
-
-def _pregel_loop(
-    state, e_by_src, e_by_dst, send_to_dst, agg_to_dst, send_to_src,
-    agg_to_src, update, n_iter, min_iter, tol, delta_metric,
-    checkpoint_every, frontier_col, deltas, lazy_persisted, i, limit,
-    eager_checkpoint=False, bcast=None,
-):
-    """The superstep loop proper — split out so the shuffle-partition
-    pin and the persisted-edge cleanup are exception-safe (finally in
-    the wrapper) without indenting the whole loop."""
-    if bcast is None:
-        bcast = lambda df: df
-    while i < limit:
-        i += 1
-        # frontier mode: only frontier rows PROBE the edge table; the
-        # filter preserves the id-partitioning, so the join stays
-        # exchange-free and shrinks with the frontier
-        sender = (
-            state.filter(F.col(frontier_col)) if frontier_col is not None else state
-        )
-        joined = state
+    with loop_scope(
+        vertices.sparkSession,
+        shuffle_partitions,
+        lambda: max(vertices.count(), edges.count()),
+    ) as parts:
+        # laid out at the loop's width: without AQE every join follows its
+        # inputs' partitioning. Materialized by round 1's job.
+        state = vertices.repartition(parts, "id").persist(StorageLevel.MEMORY_AND_DISK)
+        e_by_src = e_by_dst = None
         if send_to_dst is not None:
-            msgs = (
-                e_by_src.join(bcast(sender.withColumnRenamed("id", "src")), "src")
-                .select(F.col("dst").alias("id"), *send_to_dst)
-            )
-            joined = joined.join(bcast(_aggregate(msgs, agg_to_dst)), "id", "left")
+            e_by_src = edges.repartition(parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
         if send_to_src is not None:
-            msgs = (
-                e_by_dst.join(bcast(sender.withColumnRenamed("id", "dst")), "dst")
-                .select(F.col("src").alias("id"), *send_to_src)
-            )
-            joined = joined.join(bcast(_aggregate(msgs, agg_to_src)), "id", "left")
-        upd = update(joined)
-        # fused-superstep contract (round 12, judge r11 item 1): an
-        # update that already ran the round's one action over a lazily
-        # checkpointed frame (HITS' mass read) returns (frame, True) —
-        # the frame is a cheap projection over that materialized
-        # LogicalRDD, so checkpointing it AGAIN was a whole second job
-        # per superstep that re-read the persisted blocks to write them
-        # back unchanged.
-        new_state, pre_materialized = (
-            upd if isinstance(upd, tuple) else (upd, False)
-        )
-        if eager_checkpoint:
-            if pre_materialized:
-                pass  # update's scalar action was this round's job
-            elif frontier_col is not None or n_iter is None:
-                # fused superstep (round 12): mark the snapshot lazily —
-                # the scalar read below (frontier count / delta metric)
-                # is ONE job that both materializes every partition of
-                # the checkpoint and returns the scalar, where eager +
-                # count was two jobs and two passes per round. The plan
-                # is a LogicalRDD either way (constant size).
-                new_state = new_state.localCheckpoint(eager=False)
-            else:
-                # fixed mode has no scalar read; the eager checkpoint IS
-                # the round's one action (the bespoke-loop discipline)
-                new_state = new_state.localCheckpoint()
-        else:
-            if i % checkpoint_every == 0:
-                new_state = new_state.localCheckpoint(eager=False)
-            new_state = new_state.persist(StorageLevel.MEMORY_AND_DISK)
-
-        if frontier_col is not None:
-            # one scalar action per round (materializes the persisted
-            # state as a side effect); empty frontier = unanimous halt
-            n_front = new_state.filter(F.col(frontier_col)).count()
-            deltas.append(float(n_front))
-            if not eager_checkpoint:
-                state.unpersist()
-            state = new_state
-            if n_front == 0:
-                break
-        elif n_iter is None:
-            d = delta_metric(state, new_state)
-            deltas.append(d)
-            if not eager_checkpoint:
-                state.unpersist()
-            state = new_state
-            if i >= min_iter and d <= tol:
-                break
-        else:
-            # fixed mode: predecessors stay persisted until the single
-            # materialization below (unpersisting early would force an
-            # O(i²) recompute chain — pagerank.py's measured lesson);
-            # eager mode has no chain — each round is already a snapshot
-            if not eager_checkpoint:
-                lazy_persisted.append(state)
-            state = new_state
-
-    if n_iter is not None and frontier_col is None and not eager_checkpoint:
-        # materialized HERE, inside the pinned-partitions scope: the
-        # wrapper's finally restores the session setting only after
-        # every kept state is a cached/checkpointed snapshot
-        state.count()
-        for p in lazy_persisted:
-            p.unpersist()
+            e_by_dst = edges.repartition(parts, "dst").persist(StorageLevel.MEMORY_AND_DISK)
+        deltas: list[float] = []
+        i = 0
+        try:
+            while i < limit:
+                i += 1
+                # frontier mode: only frontier rows PROBE the edge table;
+                # the filter preserves the id-partitioning, so the join
+                # stays exchange-free and shrinks with the frontier
+                sender = (
+                    state.filter(F.col(frontier_col))
+                    if frontier_col is not None
+                    else state
+                )
+                # shuffled-hash joins building the state / message side:
+                # both inputs are already partitioned at P, so no exchange,
+                # and the planner cannot broadcast the edge frame (a
+                # separate job every round)
+                joined = state
+                if send_to_dst is not None:
+                    msgs = e_by_src.join(
+                        sender.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
+                    ).select(F.col("dst").alias("id"), *send_to_dst)
+                    joined = joined.join(
+                        _aggregate(msgs, agg_to_dst).hint("shuffle_hash"), "id", "left"
+                    )
+                if send_to_src is not None:
+                    msgs = e_by_dst.join(
+                        sender.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst"
+                    ).select(F.col("src").alias("id"), *send_to_src)
+                    joined = joined.join(
+                        _aggregate(msgs, agg_to_src).hint("shuffle_hash"), "id", "left"
+                    )
+                new_state, materialized = _fused(update(joined))
+                if not materialized:
+                    new_state = new_state.localCheckpoint(eager=eager)
+                prev, state = state, new_state
+                if frontier_col is not None:
+                    # empty frontier = unanimous halt
+                    n_front = state.filter(F.col(frontier_col)).count()
+                    deltas.append(float(n_front))
+                    if n_front == 0:
+                        break
+                elif n_iter is None:
+                    d = delta_metric(prev, state)
+                    deltas.append(d)
+                    if i >= min_iter and d <= tol:
+                        break
+        finally:
+            for e in (e_by_src, e_by_dst):
+                if e is not None:
+                    e.unpersist()
     return PregelResult(vertices=state, iterations=i, deltas=deltas)
 
 
@@ -362,7 +252,6 @@ def pagerank_pregel(
     adj: DataFrame,
     alpha: float = 0.15,
     n_iter: int = 10,
-    checkpoint_every: int = 3,
     shuffle_partitions: int | str | None = "auto",
 ) -> DataFrame:
     """The reference PageRank (pageRank.scala:294,310 — pr' = α/N +
@@ -371,8 +260,11 @@ def pagerank_pregel(
     per recipient, and damps. Dangling vertices (empty/NULL links) send
     nothing — identical mass semantics to run_pagerank's explode
     scatter. Returns (id, pr), same values as
-    pagerank.run_pagerank(adj, fixed_iterations=n_iter)."""
+    pagerank.run_pagerank(adj, fixed_iterations=n_iter); an empty
+    adjacency ranks nothing."""
     n = adj.count()
+    if n == 0:
+        return adj.select("id", F.lit(0.0).alias("pr"))
     verts = adj.select(
         "id",
         F.lit(1.0).alias("pr"),
@@ -397,7 +289,6 @@ def pagerank_pregel(
         agg_to_dst=[F.sum("contrib").alias("contrib")],
         update=update,
         n_iter=n_iter,
-        checkpoint_every=checkpoint_every,
         shuffle_partitions=shuffle_partitions,  # float-sum reorder absorbed by 6dp round
     )
     return res.vertices.select("id", "pr")
@@ -412,14 +303,6 @@ def hits_pregel(
     superstep (hub mass flows src→dst into authority, authority flows
     dst→src into hub); the L1 normalization is the update phase's one
     scalar action — graph.hits's loop, same values at 6dp.
-
-    Runs the harness in EAGER mode (round 11): the mass read already
-    materializes every round, so the lazy persist chain buys nothing
-    here and the per-round eager checkpoint keeps each round's plan
-    constant-size — measured 4.49 → 3.54s warm on the benched slice,
-    values bit-identical. broadcast_state on top measured a small LOSS
-    (3.96s: per-round broadcast-build sub-jobs outweigh the join win
-    at this graph size) and stays off.
 
     Round 12 (judge r11 item 1 — fuse the per-superstep actions): the
     update returns ``(frame, True)``: its mass read is the ONE action of
@@ -484,7 +367,6 @@ def hits_pregel(
         update=update,
         n_iter=n_iter,
         shuffle_partitions=shuffle_partitions,  # float-sum reorder absorbed by 6dp round
-        eager_checkpoint=True,  # per-round mass read materializes anyway
     )
     return res.vertices.select(
         "id", F.round("hub", 6).alias("hub"), F.round("authority", 6).alias("authority")
@@ -521,7 +403,7 @@ def k_core_pregel(edges: DataFrame, k: int = 2, max_iter: int = 10) -> DataFrame
 
     # Convergence metric: peeling only ever DEACTIVATES, so the active
     # count is monotone non-increasing and count-equality ⟺ zero flips —
-    # one count action on the (persisted) new state per round, instead
+    # one count action on the (checkpointed) new state per round, instead
     # of an old×new join+filter (the bespoke peeler's same trick;
     # measured ~2× on the declared 30-core query).
     prev_active = {"n": -1}
@@ -542,7 +424,6 @@ def k_core_pregel(edges: DataFrame, k: int = 2, max_iter: int = 10) -> DataFrame
         max_iter=max_iter,
         tol=0.0,
         delta_metric=flips,
-        checkpoint_every=1,
         shuffle_partitions="auto",  # int-count combine: partition-insensitive
     )
     if res.deltas and res.deltas[-1] > 0:
@@ -602,7 +483,6 @@ def bfs_pregel(edges: DataFrame, source, max_hops: int = 10) -> DataFrame:
         update=update,
         frontier_col="active",
         max_iter=max_hops,
-        checkpoint_every=1,  # the bespoke loop checkpoints every round
         shuffle_partitions="auto",  # min-combine: partition-insensitive
     )
     return res.vertices.filter(F.col("dist").isNotNull()).select("id", "dist")
@@ -653,7 +533,6 @@ def sssp_pregel(edges: DataFrame, source, max_rounds: int = 10) -> DataFrame:
         update=update,
         frontier_col="active",
         max_iter=max_rounds,
-        checkpoint_every=1,
         shuffle_partitions="auto",  # min-combine: partition-insensitive
     )
     return res.vertices.filter(F.col("dist").isNotNull()).select("id", "dist")
@@ -743,7 +622,6 @@ def components_pregel(edges: DataFrame, max_iter: int = 30) -> DataFrame:
         update=update,
         frontier_col="active",
         max_iter=max_iter,
-        checkpoint_every=1,  # labels referenced twice per round
         shuffle_partitions="auto",  # min-combine: partition-insensitive
     )
     if res.deltas and res.deltas[-1] > 0:
@@ -791,7 +669,6 @@ def label_propagation_pregel(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         agg_to_dst=vote,
         update=update,
         n_iter=n_iter,
-        checkpoint_every=1,  # the standalone loop checkpoints every round
         shuffle_partitions="auto",  # count + deterministic top-1 window:
         # partition-insensitive (int counts, total tie-break order)
     )

@@ -107,6 +107,18 @@ def _graph(spark, sf) -> dict[str, DataFrame]:
         kept = graph.resolve_edges(edges, verts).persist(StorageLevel.MEMORY_AND_DISK)
         adj = graph.adjacency(kept, verts).persist(StorageLevel.MEMORY_AND_DISK)
         g = {"verts": verts, "edges": edges, "kept": kept, "adj": adj}
+        # PageRank's vertex set always holds the virtual NULL node (N counts
+        # it, pageRank.scala:258), but the adjacency only gets a NULL row
+        # from its NULL→v edges: a graph without pages ranks the NULL node
+        # alone, with no out-links (the oracle's answer, not 1/0)
+        if adj.isEmpty():
+            id_type = dict(adj.dtypes)["id"]
+            g["rank_adj"] = spark.range(1).select(
+                F.lit(graph.NULL_VID).cast(id_type).alias("id"),
+                F.array().cast(f"array<{id_type}>").alias("links"),
+            )
+        else:
+            g["rank_adj"] = adj
         _GRAPH_CACHE[key] = g
     return g
 
@@ -139,7 +151,7 @@ def q_outdegree(spark, sf):
 
 
 def _adjacency(spark, sf):
-    return _graph(spark, sf)["adj"]
+    return _graph(spark, sf)["rank_adj"]
 
 
 def q_pagerank_contribs(spark, sf):

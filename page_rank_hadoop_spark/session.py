@@ -10,11 +10,75 @@ skew-join splitting) — at 100 TB that is the difference between a static
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from typing import Callable, Iterator
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_PARTS_KEY = "spark.sql.shuffle.partitions"
+_AQE_KEY = "spark.sql.adaptive.enabled"
+_MIN_LOOP_PARTS = 4
+_ROWS_PER_LOOP_PART = 50_000
+# Re-entrant: a loop scope opened inside another on the same thread (a
+# vertex program that runs a loop in its update) must not deadlock.
+_LOOP_LOCK = threading.RLock()
+
+
+def _loop_partitions(
+    session_parts: int, shuffle_partitions: int | str | None, rows: Callable[[], int]
+) -> int:
+    if shuffle_partitions is None:
+        return session_parts
+    if shuffle_partitions != "auto":
+        return min(session_parts, int(shuffle_partitions))
+    if session_parts <= _MIN_LOOP_PARTS:
+        return session_parts  # the floor already covers it: skip the count
+    return min(session_parts, max(_MIN_LOOP_PARTS, rows() // _ROWS_PER_LOOP_PART + 1))
+
+
+@contextlib.contextmanager
+def loop_scope(
+    spark: SparkSession,
+    shuffle_partitions: int | str | None,
+    rows: Callable[[], int],
+) -> Iterator[int]:
+    """Session settings for a driver loop that re-plans every round and
+    snapshots its state with ``localCheckpoint``; yields the loop's
+    partition count.
+
+    AQE is off inside the scope. ``AdaptiveSparkPlanExec`` is a leaf, so
+    a checkpoint of an adaptive plan reports ``UnknownPartitioning(0)``:
+    the next round then re-shuffles the state it just wrote, and AQE's
+    runtime join rewrites add a broadcast job per round. With AQE off the
+    checkpoint keeps ``hashpartitioning(id, P)`` and the round's joins
+    line up with the id/src-partitioned inputs laid out at P.
+
+    ``spark.sql.shuffle.partitions`` is pinned to P: ``'auto'`` sizes
+    ~50k rows per partition from ``rows()`` (floor 4, never above the
+    session setting, so a cluster-sized graph keeps its width and only
+    provably small loops shrink); an int is capped at the session
+    setting; None keeps it. ``rows`` is only called when it can change P.
+    Float-sum combines stay within the declared 6dp rounding at any P
+    (partial-agg merge order is already nondeterministic run to run).
+
+    Both settings are session-global, so scopes are serialized by one
+    lock: two overlapping loops must not restore each other's pins and
+    leave the session with AQE off. Restored on exit, exception or not.
+    """
+    with _LOOP_LOCK:
+        saved = {k: spark.conf.get(k) for k in (_PARTS_KEY, _AQE_KEY)}
+        parts = _loop_partitions(int(saved[_PARTS_KEY]), shuffle_partitions, rows)
+        spark.conf.set(_PARTS_KEY, str(parts))
+        spark.conf.set(_AQE_KEY, "false")
+        try:
+            yield parts
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
 
 
 def get_spark(

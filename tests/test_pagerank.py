@@ -66,22 +66,22 @@ def test_convergence_policy(adj):
     assert res.avg_changes[3] <= res.avg_changes[1]
 
 
-def _count_shuffles(node) -> int:
-    """Count ShuffleExchange nodes this plan actually executes: walk the
-    (AQE-finalized) physical tree, stop at cache boundaries
-    (InMemoryTableScan prints its build plan but doesn't re-run it), and
-    skip ReusedExchange (no new shuffle)."""
+def _count_shuffles(node, kind: str = "ShuffleExchange") -> int:
+    """Count ShuffleExchange (or other ``kind``) nodes this plan actually
+    executes: walk the (AQE-finalized) physical tree, stop at cache
+    boundaries (InMemoryTableScan prints its build plan but doesn't
+    re-run it), and skip ReusedExchange (no new shuffle)."""
     cls = node.getClass().getSimpleName()
     if "InMemoryTableScan" in cls or cls.startswith("ReusedExchange"):
         return 0
-    c = 1 if cls.startswith("ShuffleExchange") else 0
+    c = 1 if cls.startswith(kind) else 0
     if cls.startswith("AdaptiveSparkPlan"):
-        return c + _count_shuffles(node.executedPlan())
+        return c + _count_shuffles(node.executedPlan(), kind)
     if cls.endswith("QueryStageExec"):
-        return c + _count_shuffles(node.plan())
+        return c + _count_shuffles(node.plan(), kind)
     ch = node.children()
     for i in range(ch.size()):
-        c += _count_shuffles(ch.apply(i))
+        c += _count_shuffles(ch.apply(i), kind)
     return c
 
 
@@ -191,3 +191,37 @@ def test_warm_start_and_teleport_are_exclusive(adj, spark):
     seeds = adj.select("id").limit(1)
     with pytest.raises(ValueError, match="exclusive"):
         pagerank.run_pagerank(adj, initial_ranks=base, teleport=seeds)
+
+
+def test_empty_adjacency_ranks_nothing(adj):
+    """An empty adjacency has no vertex to rank: both loops return an
+    empty (id, pr) frame instead of dividing α by N = 0 (the
+    ZeroDivisionError the degenerate-input sweep found)."""
+    from page_rank_hadoop_spark.operators.pregel import pagerank_pregel
+
+    empty = adj.limit(0)
+    fixed = pagerank.run_pagerank(empty, fixed_iterations=10)
+    adaptive = pagerank.run_pagerank(empty)
+    assert (fixed.iterations, fixed.avg_changes) == (0, [])
+    assert (adaptive.iterations, adaptive.avg_changes) == (0, [])
+    for ranks in (fixed.ranks, adaptive.ranks, pagerank_pregel(empty, n_iter=10)):
+        assert ranks.columns == ["id", "pr"]
+        assert ranks.count() == 0
+
+
+def test_empty_corpus_ranks_the_null_node(spark, tmp_path):
+    """On a corpus without pages the oracle's vertex set is the virtual
+    NULL node alone (N = 1, no out-links): the declared rank keys return
+    its α/N = 0.15, not a division by N = 0."""
+    import pyarrow.parquet as pq
+
+    from page_rank_hadoop_spark.plans.registry import build_queries
+
+    from tests.conftest import SF0001
+
+    docs = pq.read_table(f"{SF0001}/documents.parquet")
+    pq.write_table(docs.slice(0, 0), str(tmp_path / "documents.parquet"))
+    queries = build_queries()
+    for key in ("q_pagerank_iterate", "q_pagerank_pregel", "q_pagerank_converged"):
+        got = [tuple(r) for r in queries[key](spark, str(tmp_path)).collect()]
+        assert got == [(-1, 0.15)], key

@@ -6,6 +6,9 @@ message direction costs exactly ONE Exchange per superstep (the
 pagerank.py partitioning argument, re-proven for the edge-list form).
 """
 
+import sys
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -170,6 +173,142 @@ def test_pregel_round_single_exchange(spark, adj):
     assert n_shuffles == 1, new_state._jdf.queryExecution().executedPlan().toString()
     edges.unpersist()
     state.unpersist()
+
+
+def test_pregel_checkpointed_round_single_exchange(adj, monkeypatch):
+    """The same contract over the harness's OWN round: superstep 2 reads
+    the state round 1 checkpointed, and still shuffles exactly once and
+    broadcasts nothing. Under AQE that checkpoint reported
+    UnknownPartitioning(0), so the round re-shuffled the state and
+    broadcast the edge frame."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    rounds: list = []  # the frame each superstep checkpoints
+    orig = DataFrame.localCheckpoint
+
+    def spy(self, eager=True):
+        rounds.append(self)
+        return orig(self, eager=eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    pagerank_pregel(adj, n_iter=3).collect()
+    assert len(rounds) == 3
+    plan = rounds[1]._jdf.queryExecution().executedPlan()
+    assert "ExistingRDD" in plan.toString()  # state = round 1's checkpoint
+    assert _count_shuffles(plan) == 1, plan.toString()
+    assert _count_shuffles(plan, "BroadcastExchange") == 0, plan.toString()
+
+
+def _pagerank_program(adj, update):
+    """pagerank_pregel's vertex program around a caller-supplied update."""
+    verts = adj.select(
+        "id", F.lit(1.0).alias("pr"), F.size("links").cast("double").alias("out_deg")
+    )
+    edges = adj.select(F.col("id").alias("src"), F.explode("links").alias("dst"))
+    return pregel(
+        vertices=verts,
+        edges=edges,
+        send_to_dst=[(F.col("pr") / F.col("out_deg")).alias("contrib")],
+        agg_to_dst=[F.sum("contrib").alias("contrib")],
+        update=update,
+        n_iter=3,
+        shuffle_partitions="auto",
+    )
+
+
+def _damp(joined):
+    return joined.select(
+        "id",
+        (F.lit(0.15 / 4) + 0.85 * F.coalesce("contrib", F.lit(0.0))).alias("pr"),
+        "out_deg",
+    )
+
+
+def test_pregel_fused_update_contract(adj):
+    """An update returning a tuple must return exactly (DataFrame, True);
+    anything else is a TypeError naming the contract, not a silent
+    unpack."""
+    for bad in (
+        lambda j: (_damp(j), False),
+        lambda j: (_damp(j),),
+        lambda j: (_damp(j), True, None),
+        lambda j: ("state", True),
+    ):
+        with pytest.raises(TypeError, match="fused-superstep contract"):
+            _pagerank_program(adj, bad)
+
+
+AQE, PARTS = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+
+
+def _settings(spark):
+    return spark.conf.get(AQE), spark.conf.get(PARTS)
+
+
+def _recorded_pagerank(adj, seen: list) -> dict:
+    """Run the program, recording the settings each superstep is planned
+    under."""
+    spark = adj.sparkSession
+
+    def update(joined):
+        seen.append(_settings(spark))
+        return _damp(joined)
+
+    return {r["id"]: r["pr"] for r in _pagerank_program(adj, update).vertices.collect()}
+
+
+def test_loop_scope_pins_and_restores_session_settings(spark, adj):
+    """Every superstep plans with AQE off and the auto-sized partition
+    count (the session has 8; a 4-vertex graph gets the floor, 4); the
+    session gets its own values back after the loop and after an update
+    that raises."""
+    before = _settings(spark)
+    seen: list = []
+    _recorded_pagerank(adj, seen)
+    assert seen == [("false", "4")] * 3
+    assert _settings(spark) == before
+
+    def boom(joined):
+        raise RuntimeError("update failed")
+
+    with pytest.raises(RuntimeError, match="update failed"):
+        _pagerank_program(adj, boom)
+    assert _settings(spark) == before
+
+
+def test_concurrent_loops_keep_their_pins(spark, adj):
+    """Loops started together from several threads on one session: each
+    superstep still plans with its loop's settings, every answer equals
+    the single-thread run, and the session ends with its own settings —
+    without the scope lock, one loop restores the values another pinned
+    and the session can end with AQE off."""
+    want_pregel = _recorded_pagerank(adj, [])
+    want_bespoke = {
+        r["id"]: r["pr"]
+        for r in pagerank.run_pagerank(adj, fixed_iterations=3).ranks.collect()
+    }
+    before = _settings(spark)
+    seen: dict[int, list] = {k: [] for k in range(0, 5, 2)}
+
+    def work(k):
+        if k in seen:
+            return _recorded_pagerank(adj, seen[k])
+        res = pagerank.run_pagerank(adj, fixed_iterations=3)
+        return {r["id"]: r["pr"] for r in res.ranks.collect()}
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=5) as ex:
+            futures = [ex.submit(work, k) for k in range(5)]
+            got = [f.result(timeout=600) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert _settings(spark) == before
+    for k, answer in enumerate(got):
+        want = want_pregel if k in seen else want_bespoke
+        assert answer == pytest.approx(want, abs=1e-12)
+    assert all(s == [("false", "4")] * 3 for s in seen.values())
 
 
 def test_kcore_pregel_matches_k_core(spark):

@@ -111,6 +111,22 @@ def test_kcore_fused_loop_matches_pregel_twin(spark):
     assert got == want
 
 
+def test_pagerank_pregel_job_ceiling(spark):
+    """One Spark job per superstep: with AQE off inside the loop scope,
+    each round's eager checkpoint runs as ONE job (its message shuffle is
+    a stage of that job). Measured 11 = 4 rounds + 3 set-up counts (N and
+    the auto-sizing counts, 2 jobs each under the session's AQE) + the
+    write. Under AQE every query stage and runtime broadcast of the loop
+    was its own job: 28 for this call."""
+    from page_rank_hadoop_spark.operators.pregel import pagerank_pregel
+    from page_rank_hadoop_spark.plans import registry
+
+    adj = registry._graph(spark, SF0001)["adj"]
+    adj.count()
+    n_jobs = _count_jobs(spark, "pagerank_pregel_jobs", lambda: pagerank_pregel(adj, n_iter=4))
+    assert n_jobs <= 12, n_jobs
+
+
 # --- PQ/SQ codes MV (judge r11 item 4) ------------------------------------
 
 
