@@ -29,7 +29,9 @@ _LOOP_LOCK = threading.RLock()
 
 
 def _loop_partitions(
-    session_parts: int, shuffle_partitions: int | str | None, rows: Callable[[], int]
+    session_parts: int,
+    shuffle_partitions: int | str | None,
+    rows: Callable[[], int] | None,
 ) -> int:
     if shuffle_partitions is None:
         return session_parts
@@ -41,11 +43,33 @@ def _loop_partitions(
 
 
 @contextlib.contextmanager
+def _scoped(
+    spark: SparkSession,
+    shuffle_partitions: int | str | None,
+    rows: Callable[[], int] | None,
+    pins: dict[str, str],
+) -> Iterator[int]:
+    # The one pin/restore of session settings. They are session-global,
+    # so scopes are serialized by one lock: two overlapping scopes must
+    # not restore each other's pins and leave the session with AQE off.
+    # Restored on exit, exception or not.
+    with _LOOP_LOCK:
+        saved = {k: spark.conf.get(k) for k in (_PARTS_KEY, *pins)}
+        parts = _loop_partitions(int(saved[_PARTS_KEY]), shuffle_partitions, rows)
+        for k, v in {_PARTS_KEY: str(parts), **pins}.items():
+            spark.conf.set(k, v)
+        try:
+            yield parts
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+
+
 def loop_scope(
     spark: SparkSession,
     shuffle_partitions: int | str | None,
     rows: Callable[[], int],
-) -> Iterator[int]:
+) -> contextlib.AbstractContextManager[int]:
     """Session settings for a driver loop that re-plans every round and
     snapshots its state with ``localCheckpoint``; yields the loop's
     partition count.
@@ -65,20 +89,28 @@ def loop_scope(
     Float-sum combines stay within the declared 6dp rounding at any P
     (partial-agg merge order is already nondeterministic run to run).
 
-    Both settings are session-global, so scopes are serialized by one
-    lock: two overlapping loops must not restore each other's pins and
-    leave the session with AQE off. Restored on exit, exception or not.
+    Serialized with every other settings scope by one re-entrant lock.
     """
-    with _LOOP_LOCK:
-        saved = {k: spark.conf.get(k) for k in (_PARTS_KEY, _AQE_KEY)}
-        parts = _loop_partitions(int(saved[_PARTS_KEY]), shuffle_partitions, rows)
-        spark.conf.set(_PARTS_KEY, str(parts))
-        spark.conf.set(_AQE_KEY, "false")
-        try:
-            yield parts
-        finally:
-            for k, v in saved.items():
-                spark.conf.set(k, v)
+    return _scoped(spark, shuffle_partitions, rows, {_AQE_KEY: "false"})
+
+
+def stream_start_scope(
+    spark: SparkSession, state_partitions: int | None
+) -> contextlib.AbstractContextManager[int]:
+    """Session settings for starting a stateful stream; yields its
+    state-partition count: ``state_partitions`` capped at the session
+    setting (the loops' int rule), or the session setting for None.
+
+    Hold it around ``writeStream...start()`` only. A stream fixes its
+    state partitioning when it starts (it plans in a clone of the
+    session taken there), so the pin has done its work once ``start()``
+    returns. Holding the lock through ``processAllAvailable`` would stall
+    every loop for the whole replay, and deadlock a ``foreachBatch`` body
+    that opens a loop scope, since that body runs on the stream's own
+    thread. AQE is left as the session has it: ``foreachBatch`` bodies
+    run batch plans inside the stream.
+    """
+    return _scoped(spark, state_partitions, None, {})
 
 
 def get_spark(

@@ -86,10 +86,13 @@ def run_join_replay_to_memory(
     import glob
     import os
     import shutil
-    import tempfile
 
     from page_rank_hadoop_spark.sources.catalog import normalize_ts
-    from page_rank_hadoop_spark.streaming.replay import NANOS_CONF, scratch_dir
+    from page_rank_hadoop_spark.streaming.replay import (
+        NANOS_CONF,
+        replay_to_memory,
+        scratch_dir,
+    )
 
     tmp = scratch_dir("events_join_replay_")
     for f in glob.glob(os.path.join(sf_dir, "events.parquet")):
@@ -101,17 +104,7 @@ def run_join_replay_to_memory(
         raw_schema = spark.read.parquet(tmp).schema
         stream = normalize_ts(spark.readStream.schema(raw_schema).parquet(tmp))
         joined = click_purchase_join_stream(stream, horizon_minutes)
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(query_name)
+        return replay_to_memory(spark, joined, "append", query_name)
     finally:
         if prev is None:
             spark.conf.unset(NANOS_CONF)

@@ -22,6 +22,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from page_rank_hadoop_spark.session import stream_start_scope
+
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
@@ -53,6 +55,36 @@ def scratch_dir(prefix: str) -> str:
         except OSError:
             pass
     return tempfile.mkdtemp(prefix=prefix, dir=base)
+
+
+def replay_to_memory(
+    spark: SparkSession,
+    stream: DataFrame,
+    mode: str,
+    name: str,
+    state_partitions: int | None = None,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Run a finite replay to a memory sink and take its rows.
+
+    ``stream`` starts in output ``mode`` as query ``name`` under
+    ``session.stream_start_scope`` (state partitions: ``state_partitions``
+    capped at the session width; None keeps the width) and is drained
+    with ``processAllAvailable``. The returned frame keeps the sink's
+    rows; the sink's temp view is dropped, because it would otherwise
+    hold every answer row in the driver JVM for the rest of the session.
+    """
+    writer = stream.writeStream.outputMode(mode).format("memory").queryName(name)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with stream_start_scope(spark, state_partitions):
+        q = writer.start()
+    try:
+        q.processAllAvailable()
+        return spark.table(name)
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
 
 
 def streaming_tumbling_counts(stream: DataFrame, minutes: int = 15, watermark: str = "30 minutes") -> DataFrame:
@@ -140,12 +172,13 @@ def run_session_replay_to_memory(
         .parquet(tmp)
     )
     agg = streaming_session_stats(stream, gap_minutes)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    with stream_start_scope(spark, None):
+        q = (
+            agg.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(query_name)
+            .start()
+        )
     try:
         q.processAllAvailable()
         # second microbatch: the sentinel advances the watermark past
@@ -163,11 +196,11 @@ def run_session_replay_to_memory(
         ).select(*[f.name for f in raw_schema.fields])
         sentinel.write.mode("append").parquet(tmp)
         q.processAllAvailable()
+        return spark.table(query_name).filter(F.col("user_id") != -1)
     finally:
         q.stop()
-    out = spark.table(query_name).filter(F.col("user_id") != -1)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        spark.catalog.dropTempView(query_name)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def run_replay_to_memory(
@@ -193,17 +226,7 @@ def run_replay_to_memory(
         raw_schema = spark.read.parquet(tmp).schema
         stream = normalize_ts(spark.readStream.schema(raw_schema).parquet(tmp))
         agg = streaming_tumbling_counts(stream, minutes)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(query_name)
+        return replay_to_memory(spark, agg, "complete", query_name)
     finally:
         if prev is None:
             spark.conf.unset(NANOS_CONF)
@@ -225,10 +248,12 @@ def _stage_time_batches(events: DataFrame, tmp: str, n_batches: int) -> str:
         F.min(F.unix_micros("ts")).alias("lo"),
         F.max(F.unix_micros("ts")).alias("hi"),
     ).first()
-    lo, hi = b["lo"], b["hi"]
-    step = max(1, (hi - lo) // n_batches + 1)
     src = os.path.join(tmp, "src")
     os.makedirs(src)
+    lo, hi = b["lo"], b["hi"]
+    if lo is None:
+        return src  # empty input: no file, so the stream runs no trigger
+    step = max(1, (hi - lo) // n_batches + 1)
     now = _time.time()
     # ONE pass writes every batch (hive partition per batch id; the
     # partition column doesn't land in the file, so the staged schema
@@ -250,8 +275,6 @@ def _stage_time_batches(events: DataFrame, tmp: str, n_batches: int) -> str:
                 os.utime(dst, (now + i, now + i))
     return src
 
-
-import contextlib
 
 # staged-input cache (round 10): the staged microbatch files are a pure
 # deterministic function of (sf_dir, projection-tag, n_batches) — they are
@@ -290,8 +313,6 @@ def _source_fingerprint(sf_dir: str, table: str = "events") -> tuple:
 
 
 def _cleanup_stage_cache() -> None:
-    import shutil
-
     for src in _STAGE_CACHE.values():
         shutil.rmtree(os.path.dirname(src), ignore_errors=True)
     _STAGE_CACHE.clear()
@@ -310,25 +331,6 @@ def _staged_source(
         tmp = scratch_dir("events_replay_stage_")
         _STAGE_CACHE[key] = _stage_time_batches(events, tmp, n_batches)
     return _STAGE_CACHE[key]
-
-
-@contextlib.contextmanager
-def _replay_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Bound the replay's state-store partition count: the conf is read
-    at stream START, and 32 state partitions over a test-scale
-    microbatch is pure per-trigger overhead (tasks + state files), not
-    parallelism. Results are unchanged — state partitioning is a
-    physical choice the oracle gate re-verifies — and production sizes
-    this to the cluster, not to this local default. Restored on exit;
-    the declared replays run one stream at a time, so the temporary
-    session value cannot leak into a concurrent plan."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def run_stateful_sessionize_replay(
@@ -377,22 +379,13 @@ def run_stateful_sessionize_replay(
         # 24, not the JVM-state default 8: the applyInPandasWithState
         # handler is Python-CPU-bound per state partition, so parallelism
         # pays here where it only multiplies state-file overhead for the
-        # JVM-state replays. A/B at sf0.1 warm best-of-3: 8->6.2s,
-        # 16->4.5s, 24->3.9s, 32->4.4s (and dedup's JVM state measured
-        # WORSE at 16: 1.5->1.8s, which is why the default stays 8).
-        with _replay_shuffle_partitions(spark, 24):
-            q = (
-                out.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        updates = spark.table(name)
+        # JVM-state replays. A/B at sf0.1 warm best-of-3 on a session
+        # wider than 24: 8->6.2s, 16->4.5s, 24->3.9s, 32->4.4s (and
+        # dedup's JVM state measured WORSE at 16: 1.5->1.8s, which is why
+        # it stays 8). A narrower session caps the count at its width.
+        updates = replay_to_memory(
+            spark, out, "update", name, 24, os.path.join(tmp, "ckpt")
+        )
         return (
             updates.groupBy("user_id", "session_id")
             .agg(F.max(F.struct("n_events", "sum_value")).alias("s"))
@@ -444,22 +437,24 @@ def run_watermark_replay(
         F.max(F.unix_micros("ts")).alias("hi"),
     ).first()
     lo, hi = b["lo"], b["hi"]
-    split_us = lo + (hi - lo) * 8 // 10
-    adv_us = hi - 60_000_000  # the advance batch: the newest minute
-    us = F.unix_micros("ts")
-    # the neutral batch between advance and late matters: the drop
-    # filter applies the watermark one full trigger AFTER the advance
-    # (measured — a late slice arriving in the very next trigger still
-    # merged), so without it the "late" rows aggregate instead of
-    # dropping. The neutral batch re-sends the max-ts row(s): their
-    # window ends past the final watermark, so the duplicate is never
-    # emitted and the append output is unaffected.
-    batches = [
-        events.filter(us <= split_us),
-        events.filter(us > adv_us),
-        events.filter(us == hi),
-        events.filter((us > split_us) & (us <= adv_us)),
-    ]
+    batches = []  # empty input: no file, so the stream runs no trigger
+    if lo is not None:
+        split_us = lo + (hi - lo) * 8 // 10
+        adv_us = hi - 60_000_000  # the advance batch: the newest minute
+        us = F.unix_micros("ts")
+        # the neutral batch between advance and late matters: the drop
+        # filter applies the watermark one full trigger AFTER the advance
+        # (measured — a late slice arriving in the very next trigger
+        # still merged), so without it the "late" rows aggregate instead
+        # of dropping. The neutral batch re-sends the max-ts row(s):
+        # their window ends past the final watermark, so the duplicate
+        # is never emitted and the append output is unaffected.
+        batches = [
+            events.filter(us <= split_us),
+            events.filter(us > adv_us),
+            events.filter(us == hi),
+            events.filter((us > split_us) & (us <= adv_us)),
+        ]
     tmp = scratch_dir("events_watermark_replay_")
     name = "wm_" + os.path.basename(tmp).removeprefix("events_watermark_replay_")
     try:
@@ -483,7 +478,7 @@ def run_watermark_replay(
             _STAGE_CACHE[ckey] = src
         src = _STAGE_CACHE[ckey]
         stream = (
-            spark.readStream.schema(batches[0].schema)
+            spark.readStream.schema(events.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
@@ -491,19 +486,9 @@ def run_watermark_replay(
             stream, minutes, watermark=f"{delay_minutes} minutes"
         )
         # 4, not 8 (A/B: 2.3s -> 1.9s) — tiny JVM agg state, 4 triggers
-        with _replay_shuffle_partitions(spark, 4):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        return spark.table(name)
+        return replay_to_memory(
+            spark, agg, "append", name, 4, os.path.join(tmp, "ckpt")
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -543,19 +528,9 @@ def run_stateful_zscore_replay(
         out = streaming_zscore_monitor(stream, z=z, min_history=min_history)
         # same Python-CPU-bound handler rationale as the sessionize
         # replay (A/B'd: 2.9 -> 2.5s warm); JVM-state replays stay at 8
-        with _replay_shuffle_partitions(spark, 24):
-            q = (
-                out.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        return spark.table(name)
+        return replay_to_memory(
+            spark, out, "append", name, 24, os.path.join(tmp, "ckpt")
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -594,19 +569,9 @@ def run_stream_join_replay(
         # 4, not 8: the stream-stream join keeps TWO state stores per
         # partition, so per-trigger state-file overhead doubles — A/B at
         # sf0.1 warm: 8 parts 3.6s (high variance), 4 parts 2.9s steady
-        with _replay_shuffle_partitions(spark, 4):
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        return spark.table(name)
+        return replay_to_memory(
+            spark, joined, "append", name, 4, os.path.join(tmp, "ckpt")
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -657,21 +622,10 @@ def run_stream_dedup_replay(
             .dropDuplicatesWithinWatermark(["user_id", "event_type", "hour_ts"])
             .select("user_id", "event_type", "hour_ts")
         )
-        with _replay_shuffle_partitions(spark):
-            q = (
-                keyed.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        # snapshot driver-side rows into a real frame before the temp
-        # view name is reused by the next replay
-        return spark.table(name).localCheckpoint()
+        # 8: the JVM-state rule (measured worse at 16, see sessionize)
+        return replay_to_memory(
+            spark, keyed, "append", name, 8, os.path.join(tmp, "ckpt")
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -762,15 +716,17 @@ def run_cms_alert_replay(
 
         # JVM-only per-batch work (explode + tiny groupBy): the narrow
         # state-partition rule, same as the other non-Python replays
-        with _replay_shuffle_partitions(spark, 8):
+        with stream_start_scope(spark, 8):
             q = (
                 stream.writeStream.foreachBatch(gate)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination()
-        merged = read_cms_cells_mv(spark, cells_dir)
+        q.awaitTermination()
+        # no batch landed (empty input): None sketches the table itself,
+        # the same empty cells
+        merged = read_cms_cells_mv(spark, cells_dir) if os.path.isdir(cells_dir) else None
         report = sketches.cms_topk_report(
             load_table(spark, sf_dir, "events"), cells=merged, key=key, k=k, d=d, w=w
         )
@@ -871,15 +827,21 @@ def run_als_gate_replay(
         def gate(batch_df: DataFrame, batch_id: int) -> None:
             als_ratings_gate_batch(batch_df, mv_dir, batch_id)
 
-        with _replay_shuffle_partitions(spark, 8):
+        with stream_start_scope(spark, 8):
             q = (
                 stream.writeStream.foreachBatch(gate)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination()
-        ratings = read_ratings_mv(spark, mv_dir)
+        q.awaitTermination()
+        # no batch landed (empty input): the one-shot sum of the same
+        # rows is the same empty matrix
+        ratings = (
+            read_ratings_mv(spark, mv_dir)
+            if os.path.isdir(mv_dir)
+            else lines.groupBy("u", "it").agg(F.sum("r").alias("r"))
+        )
         _, vf = recommend.als_rank1(ratings)
         report = (
             vf.select(
