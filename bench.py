@@ -290,8 +290,8 @@ def serving_latency_bench(spark, sf_dir: str, n_lookups: int = 20) -> dict:
             cur.lookup([terms[i % len(terms)]]).to_pylist()
             cur_ms.append((time.perf_counter() - t0) * 1000)
         # round 8 (judge r7 item 1): the FULL interactive answer —
-        # scored top-k + snippet composed from cursor reads of the
-        # keyed postings/ranks/docs tables (sources/search), the
+        # scored top-k + snippet from one cursor read of the keyed
+        # postings and a blob read per page (sources/search), the
         # reference Query loop at serving latency rather than job
         # latency. Build reuses the session's pagerank10/tf MVs.
         from page_rank_hadoop_spark.plans import registry

@@ -704,8 +704,9 @@ def cmd_lookup(spark: SparkSession, args: argparse.Namespace) -> int:
 
 
 def cmd_search_index(spark: SparkSession, args: argparse.Namespace) -> int:
-    """Build the cursor-serving search tables (postings/ranks/docs keyed
-    parquet + meta) from a corpus and a ``pagerank`` verb's ranks output
+    """Build the cursor-serving search index (term-keyed postings parquet
+    carrying each page's rank and text location, the text blobs,
+    positions + meta) from a corpus and a ``pagerank`` verb's ranks output
     — the one-time Spark build behind the ms-class ``search`` verb
     (reference: the two HBase bulk-load jobs, invertedIndex.scala:126,
     pageRank.scala:399, that fed Query.scala)."""

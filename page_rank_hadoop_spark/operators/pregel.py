@@ -180,7 +180,9 @@ def pregel(
     ) as parts:
         # laid out at the loop's width: without AQE every join follows its
         # inputs' partitioning. Materialized by round 1's job.
-        state = vertices.repartition(parts, "id").persist(StorageLevel.MEMORY_AND_DISK)
+        initial = state = vertices.repartition(parts, "id").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         e_by_src = e_by_dst = None
         if send_to_dst is not None:
             e_by_src = edges.repartition(parts, "src").persist(StorageLevel.MEMORY_AND_DISK)
@@ -234,7 +236,7 @@ def pregel(
                     if i >= min_iter and d <= tol:
                         break
         finally:
-            for e in (e_by_src, e_by_dst):
+            for e in (initial, e_by_src, e_by_dst):
                 if e is not None:
                     e.unpersist()
     return PregelResult(vertices=state, iterations=i, deltas=deltas)

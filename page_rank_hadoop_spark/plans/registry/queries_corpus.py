@@ -240,10 +240,10 @@ def q_kafka_feed_parse(spark, sf):
 def q_serving_search(spark, sf):
     """Round 8 (judge r7 item 1): the reference's interactive Query
     (Query.scala:83-105) answered from CURSOR point reads — Spark
-    builds the keyed postings/ranks/docs serving tables once
-    (sources/search.build_search_tables), then SearchCursor scores
-    0.5·tfidf + 0.5·pr entirely client-side (O(df·terms), ms-class, no
-    Spark job). Driver-checked against the SAME oracle as
+    builds the term-keyed postings (rank and text location in every
+    row) once (sources/search.build_search_tables), then SearchCursor
+    scores 0.5·tfidf + 0.5·pr entirely client-side from one postings
+    read (O(df·terms), ms-class, no Spark job). Driver-checked against the SAME oracle as
     q_tfidf_score — one oracle, two physical paths (the pregel-twin
     precedent); the wrap back into a DataFrame exists only for the
     hash gate."""

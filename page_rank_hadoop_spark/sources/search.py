@@ -6,20 +6,23 @@ The reference's ``Query`` tool (Query.scala:83-105) answers a term query
 interactively: per-term posting-list ``Get`` from the HBase index table,
 per-title pagerank ``Get`` from the ranks table, client-side score
 ``0.5·tfidf + 0.5·pagerank`` (Query.scala:52,89), then a snippet seek
-into the source text (Query.scala:97-101). Our ``cli query`` twin
-compiles the same answer as a Spark JOB (~seconds: plan + schedule
-floor, measured ~52ms minimum even with a prepared plan — SCALING.md
-round-7 serving section). This module is the serving lane: Spark writes
-the three keyed tables ONCE (``build_search_tables``), and
-``SearchCursor`` answers queries from ``PointLookupCursor`` footer-stat
-point reads — no Spark job, millisecond class.
+into the source text at a stored byte offset (Query.scala:97-101). Our
+``cli query`` twin compiles the same answer as a Spark JOB (~seconds:
+plan + schedule floor, measured ~52ms minimum even with a prepared
+plan — SCALING.md round-7 serving section). This module is the serving
+lane: Spark writes the term-keyed postings (each row already carrying
+its page's rank and its text's blob location) and the flat text blobs
+ONCE (``build_search_tables``), and ``SearchCursor`` answers a query
+with one ``PointLookupCursor`` footer-stat point read plus a ``pread``
+per top-k page — no Spark job, millisecond class.
 
 Why client-side scoring is safe at 100 TB: the index keeps the
 reference's ``df < 3000`` bound (invertedIndex.scala:93), so a q-term
-query touches ≤ 3000·q posting rows and ≤ 3000·q rank/doc point reads —
-O(df·terms) work independent of corpus size, exactly the property the
-reference exploited to serve from HBase. The heavy lifting (tokenize,
-tf, df, PageRank) stays in Spark at build time.
+query touches ≤ 3000·q posting rows and k blob reads — O(df·terms)
+work independent of corpus size, exactly the property the reference
+exploited to serve from HBase. The heavy lifting (tokenize, tf, df,
+PageRank, the rank and text-location joins) stays in Spark at build
+time.
 
 Result parity is pytest-pinned against the DECLARED queries: ``search``
 ≡ ``q_tfidf_score`` rows and ``search_with_snippets`` ≡
@@ -36,12 +39,52 @@ import math
 import os
 from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from page_rank_hadoop_spark.sources.serving import PointLookupCursor, write_keyed
 
 META_NAME = "_search_meta.json"
+# what a build_search_tables directory holds, recorded in its meta; a
+# directory with any other layout must be rebuilt, not guessed at
+KEY_LAYOUT = {"postings": "term", "positions": "term", "blobs": "doc_id"}
+
+
+def _write_blobs(documents: DataFrame, path: str, n_files: int) -> DataFrame:
+    """Write every document's text (null as "") as UTF-8 into flat blob
+    files, one per ``doc_id`` range partition, and return each
+    document's location (doc_id, blob, off, len): the text is the
+    ``len`` bytes at byte offset ``off`` of ``part-<blob>-*.txt`` under
+    ``path``.
+
+    The executors write the files with Spark's text writer (each row's
+    bytes plus a newline; file ``part-<i>`` holds partition i in row order),
+    so no text passes through the driver. ``repartitionByRange``
+    re-samples its bounds on every execution, so the write and the
+    offset scan both read one checkpointed snapshot. The locations are
+    checkpointed too, or their offset window would run again in every
+    job that reads them."""
+    ranged = (
+        documents.select("doc_id", F.coalesce("text", F.lit("")).alias("text"))
+        .repartitionByRange(n_files, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .localCheckpoint()
+    )
+    ranged.select("text").write.mode("overwrite").option("compression", "none").text(path)
+    stored = F.col("len") + 1  # the writer's line separator
+    return (
+        ranged.select(
+            "doc_id",
+            F.spark_partition_id().alias("blob"),
+            F.monotonically_increasing_id().alias("row"),
+            F.octet_length("text").alias("len"),
+        )
+        .withColumn(
+            "off", F.sum(stored).over(Window.partitionBy("blob").orderBy("row")) - stored
+        )
+        .drop("row")
+        .localCheckpoint()
+    )
 
 
 def build_search_tables(
@@ -54,21 +97,24 @@ def build_search_tables(
     n_files: int = 8,
     tf: DataFrame | None = None,
 ) -> dict:
-    """Materialize the three keyed serving tables a ``SearchCursor``
-    reads, plus a self-describing meta file (the ``_ivf_meta.json``
-    precedent: the index carries its own parameters so serve time
-    validates instead of trusting the caller).
+    """Materialize what a ``SearchCursor`` reads, plus a self-describing
+    meta file (the ``_ivf_meta.json`` precedent: the index carries its
+    own parameters so serve time validates instead of trusting the
+    caller).
 
-    - ``postings/``  key=``term``:   (term, doc_id, tf, df, idf) — flat
-      posting rows, df-bounded like the reference index (A6). ``idf``
-      = ln(N/df) is computed BY SPARK at build time and stored as the
-      exact double: client-side scoring is then pure IEEE multiply/add
-      (bit-identical across JVM/Python), never a second libm ``log``
-      whose last ulp could disagree with the declared query's at a
-      6dp rounding boundary.
-    - ``ranks/``     key=``doc_id``: (doc_id, pr) — RAW doubles; the
-      score must combine unrounded pr exactly like the Spark query
-    - ``docs/``      key=``doc_id``: (doc_id, text) for snippet windows
+    - ``postings/``  key=``term``:   (term, doc_id, tf, df, idf, pr, blob,
+      off, len) — flat posting rows, df-bounded like the reference index
+      (A6). ``idf`` = ln(N/df) is computed BY SPARK at build time and
+      stored as the exact double: client-side scoring is then pure IEEE
+      multiply/add (bit-identical across JVM/Python), never a second
+      libm ``log`` whose last ulp could disagree with the declared
+      query's at a 6dp rounding boundary. ``pr`` is the page's RAW rank,
+      joined in with an inner join, so pages without a rank drop out as
+      they do in the Spark query. (blob, off, len) locate the page's text
+      in ``blobs/``.
+    - ``blobs/``: the document texts as flat UTF-8 files, one per
+      ``doc_id`` range partition (``_write_blobs``) — a snippet is one
+      bounded read at a stored byte offset, the reference's seek.
     - ``positions/`` key=``term``:   (term, doc_id, positions) — the
       POSITIONAL posting rows (sorted 0-based token positions per
       (term, doc)), df-bounded like the flat postings. This is what the
@@ -79,13 +125,14 @@ def build_search_tables(
 
     ``ranks`` must be (doc_id, pr). ``tf`` optionally reuses a prebuilt
     ``term_frequencies`` MV (positions dropped here — scoring needs tf
-    only). N = documents.count(), the reference's counter read
+    only). N = the document count, the reference's counter read
     (pageRank.scala:355).
     """
     from page_rank_hadoop_spark.operators.index import (
         DF_CUTOFF,
         df_from_tf,
         term_frequencies,
+        token_stream,
     )
 
     if cutoff is None:
@@ -93,37 +140,34 @@ def build_search_tables(
     if tf is None:
         tf = term_frequencies(documents)
     tf = tf.select("term", "doc_id", "tf")
-    n_docs = documents.count()
-    postings = tf.join(df_from_tf(tf, cutoff), "term").select(
+    located = _write_blobs(documents, os.path.join(out_dir, "blobs"), n_files)
+    n_docs = located.count()
+    # the df-bounded (term, doc) rows feed both postings and positions,
+    # and each write runs its plan twice (range sample + write): one
+    # snapshot computes tf and df once instead of four times
+    bounded = tf.join(df_from_tf(tf, cutoff), "term").localCheckpoint()
+    postings = bounded.join(
+        ranks.select("doc_id", "pr").join(located, "doc_id"), "doc_id"
+    ).select(
         "term",
         "doc_id",
         "tf",
         "df",
         F.log(F.lit(float(n_docs)) / F.col("df")).alias("idf"),
+        "pr",
+        "blob",
+        "off",
+        "len",
     )
     write_keyed(postings, os.path.join(out_dir, "postings"), "term", n_files=n_files)
-    write_keyed(
-        ranks.select("doc_id", "pr"),
-        os.path.join(out_dir, "ranks"),
-        "doc_id",
-        n_files=n_files,
-    )
-    write_keyed(
-        documents.select("doc_id", "text"),
-        os.path.join(out_dir, "docs"),
-        "doc_id",
-        n_files=n_files,
-    )
     # positional postings: one extra token-stream pass (positions can't
     # come from a tf-only MV), same df bound as the flat postings so the
     # serving guarantee stays O(df·terms) per query at 100 TB
-    from page_rank_hadoop_spark.operators.index import token_stream
-
     positional = (
         token_stream(documents)
         .groupBy("term", "doc_id")
         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        .join(postings.select("term", "doc_id"), ["term", "doc_id"], "left_semi")
+        .join(bounded.select("term", "doc_id"), ["term", "doc_id"], "left_semi")
     )
     write_keyed(
         positional, os.path.join(out_dir, "positions"), "term", n_files=n_files
@@ -133,12 +177,7 @@ def build_search_tables(
         "cutoff": cutoff,
         "w_tfidf": w_tfidf,
         "w_pr": w_pr,
-        "key_layout": {
-            "postings": "term",
-            "ranks": "doc_id",
-            "docs": "doc_id",
-            "positions": "term",
-        },
+        "key_layout": KEY_LAYOUT,
     }
     with open(os.path.join(out_dir, META_NAME), "w") as fh:
         json.dump(meta, fh)
@@ -571,11 +610,13 @@ class VectorSearchCursor:
 
 class SearchCursor:
     """Millisecond interactive search over ``build_search_tables``
-    output — the reference ``Query`` loop re-expressed as three
-    ``PointLookupCursor`` reads + O(df·terms) client arithmetic.
+    output — the reference ``Query`` loop re-expressed as one
+    ``PointLookupCursor`` read of the postings + O(df·terms) client
+    arithmetic, plus a ``pread`` of the top pages' text for snippets.
 
-    Staleness contract matches the underlying cursors: footers are read
-    at open; call ``refresh()`` after a rebuild/append."""
+    Staleness contract matches the underlying cursors: footers and the
+    blob listing are read at open; call ``refresh()`` after a
+    rebuild/append."""
 
     def __init__(self, out_dir: str):
         meta_path = os.path.join(out_dir, META_NAME)
@@ -587,20 +628,36 @@ class SearchCursor:
             )
         with open(meta_path) as fh:
             self.meta = json.load(fh)
+        if self.meta.get("key_layout") != KEY_LAYOUT:
+            raise ValueError(
+                f"SearchCursor: {out_dir} has the layout "
+                f"{self.meta.get('key_layout')}, not {KEY_LAYOUT} — an index "
+                "from an older build_search_tables; rebuild it"
+            )
         self._postings = PointLookupCursor(os.path.join(out_dir, "postings"), "term")
-        self._ranks = PointLookupCursor(os.path.join(out_dir, "ranks"), "doc_id")
-        self._docs = PointLookupCursor(os.path.join(out_dir, "docs"), "doc_id")
+        self._blob_dir = os.path.join(out_dir, "blobs")
+        self._blobs = self._list_blobs()
         # positional postings (round 9): optional so cursors still open
-        # over pre-round-9 directories; phrase()/near() raise loudly
+        # over indexes without them; phrase()/near() raise loudly
         pos_dir = os.path.join(out_dir, "positions")
         self._positions = (
             PointLookupCursor(pos_dir, "term") if os.path.isdir(pos_dir) else None
         )
 
+    def _list_blobs(self) -> dict[int, str]:
+        """blob id → text file: the writer names partition i's file
+        ``part-<i>-<job>.txt``."""
+        return {
+            int(name.split("-")[1]): os.path.join(self._blob_dir, name)
+            for name in os.listdir(self._blob_dir)
+            if name.startswith("part-")
+        }
+
     def refresh(self) -> None:
-        for c in (self._postings, self._ranks, self._docs, self._positions):
+        for c in (self._postings, self._positions):
             if c is not None:
                 c.refresh()
+        self._blobs = self._list_blobs()
 
     def _position_table(self, terms: list[str]):
         """(term, doc_id, positions) rows for ``terms`` as one Arrow
@@ -692,39 +749,39 @@ class SearchCursor:
         out.sort(key=lambda r: r["doc_id"])
         return out
 
+    def _top(self, terms: list[str], k: int | None) -> list[dict]:
+        """The top ``k`` postings rows of ``terms`` (all for ``k=None``),
+        each with its 6dp ``score``, ordered by (score desc, term,
+        doc_id). Scoring is columnar; only the rows that can reach the
+        top ``k`` are rounded and become dicts (``_round6_topk``)."""
+        m = self.meta
+        post = self._postings.lookup(terms)
+        # stored idf and pr keep this pure IEEE arithmetic — the
+        # operation order of index.tfidf_scores' expression, one element
+        # at a time
+        tf, idf, pr = (post[c].to_numpy() for c in ("tf", "idf", "pr"))
+        raw = (m["w_tfidf"] * tf) * idf + m["w_pr"] * pr
+        idx, scores = _round6_topk(raw, k, largest=True)
+        top = post.take(idx).to_pylist()
+        for r, sc in zip(top, scores):
+            r["score"] = sc
+        top.sort(key=lambda r: (-r["score"], r["term"], r["doc_id"]))
+        return top[:k] if k is not None else top
+
     def search(self, terms: list[str], k: int | None = None) -> list[dict]:
         """Scored postings for ``terms``: [{term, doc_id, score}, ...]
         ordered by (score desc, term, doc_id) — exactly
-        ``index.tfidf_scores`` (Q3) minus the Spark job. Pages missing
-        from the ranks table drop out (the Spark query's inner join).
-        Scoring is columnar; only the rows that can reach the top ``k``
-        are rounded and become dicts (``_round6_topk``)."""
-        import numpy as np
-
-        m = self.meta
-        post = self._postings.lookup(terms)
-        doc = post["doc_id"].to_numpy()
-        ranks = self._ranks.lookup(doc)
-        rank_ids = ranks["doc_id"].to_numpy()
-        order = np.argsort(rank_ids, kind="stable")
-        rank_ids, pr = rank_ids[order], ranks["pr"].to_numpy()[order]
-        at = np.searchsorted(rank_ids, doc)
-        found = at < rank_ids.size
-        found[found] = rank_ids[at[found]] == doc[found]
-        rows = np.flatnonzero(found)
-        tf, idf = post["tf"].to_numpy()[rows], post["idf"].to_numpy()[rows]
-        # stored idf keeps this pure IEEE arithmetic — the operation
-        # order of index.tfidf_scores' expression, one element at a time
-        raw = (m["w_tfidf"] * tf) * idf + m["w_pr"] * pr[at[rows]]
-        idx, scores = _round6_topk(raw, k, largest=True)
-        out = [
-            {"term": t, "doc_id": d, "score": sc}
-            for t, d, sc in zip(
-                post["term"].take(rows[idx]).to_pylist(), doc[rows[idx]].tolist(), scores
-            )
+        ``index.tfidf_scores`` (Q3) minus the Spark job. Pages without a
+        rank have no postings rows (the build's inner join, the Spark
+        query's)."""
+        return [
+            {"term": r["term"], "doc_id": r["doc_id"], "score": r["score"]}
+            for r in self._top(terms, k)
         ]
-        out.sort(key=lambda r: (-r["score"], r["term"], r["doc_id"]))
-        return out[:k] if k is not None else out
+
+    def _text(self, blob: int, off: int, n: int) -> str:
+        with open(self._blobs[blob], "rb") as fh:
+            return os.pread(fh.fileno(), n, off).decode("utf-8")
 
     def search_with_snippets(
         self, term: str, k: int = 10, before: int = 20, width: int = 50
@@ -733,15 +790,13 @@ class SearchCursor:
         top-k scored pages for ``term`` with the char-window snippet
         around the first literal occurrence — ``q_search_snippets``
         semantics: top-k by (score desc, doc_id), pages without a
-        literal hit drop out (the Spark query's inner snippet join)."""
-        # one term: search's (score desc, term, doc_id) order is the
+        literal hit drop out (the Spark query's inner snippet join).
+        Each top page's text is one read at its stored byte offset."""
+        # one term: the (score desc, term, doc_id) order is the
         # (score desc, doc_id) order of the declared query
-        top = self.search([term], k=max(k, 0))
-        docs = self._docs.lookup([r["doc_id"] for r in top])
-        texts = dict(zip(docs["doc_id"].to_pylist(), docs["text"].to_pylist()))
         out = []
-        for r in top:
-            text = texts.get(r["doc_id"], "")
+        for r in self._top([term], max(k, 0)):
+            text = self._text(r["blob"], r["off"], r["len"])
             pos = text.find(term) + 1  # F.locate: 1-based, 0 = no hit
             if pos <= 0:
                 continue

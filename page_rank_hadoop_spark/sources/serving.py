@@ -224,7 +224,7 @@ class PointLookupCursor:
     filters them with a vectorized ``is_in``; no row becomes a Python
     object unless the caller asks (``.to_pylist()`` is the dict shape).
     Probe keys may be a list or a numpy array, so a multi-thousand-id
-    probe (the ranks read behind one search) stays columnar too.
+    probe stays columnar too.
     Handles are kept for up to ``MAX_OPEN_FILES`` files and opened on
     demand past that (a 100k-file table must not hold 100k fds).
     """

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from page_rank_hadoop_spark.session import stream_start_scope
+from page_rank_hadoop_spark.sources.catalog import source_fingerprint
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -294,24 +295,6 @@ def _stage_time_batches(events: DataFrame, tmp: str, n_batches: int) -> str:
 _STAGE_CACHE: dict[tuple, str] = {}
 
 
-def _source_fingerprint(sf_dir: str, table: str = "events") -> tuple:
-    """Cheap content fingerprint of the source parquet under sf_dir."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    files = [path]
-    if os.path.isdir(path):
-        files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-    stats = [os.stat(f) for f in files if os.path.exists(f)]
-    return (
-        len(stats),
-        sum(s.st_size for s in stats),
-        max((s.st_mtime_ns for s in stats), default=0),
-    )
-
-
 def _cleanup_stage_cache() -> None:
     for src in _STAGE_CACHE.values():
         shutil.rmtree(os.path.dirname(src), ignore_errors=True)
@@ -326,7 +309,7 @@ atexit.register(_cleanup_stage_cache)
 def _staged_source(
     events: DataFrame, key: tuple, n_batches: int, table: str = "events"
 ) -> str:
-    key = key + (_source_fingerprint(key[0], table),)
+    key = key + (source_fingerprint(key[0], table),)
     if key not in _STAGE_CACHE:
         tmp = scratch_dir("events_replay_stage_")
         _STAGE_CACHE[key] = _stage_time_batches(events, tmp, n_batches)
@@ -461,7 +444,7 @@ def run_watermark_replay(
         # staged batches are a pure function of the sf (the split
         # boundaries derive from lo/hi only) — cache them session-wide
         # like _staged_source; checkpoint + sink stay per-run
-        ckey = (sf_dir, "watermark", len(batches), _source_fingerprint(sf_dir))
+        ckey = (sf_dir, "watermark", len(batches), source_fingerprint(sf_dir))
         if ckey not in _STAGE_CACHE:
             stage = scratch_dir("events_watermark_stage_")
             src = os.path.join(stage, "src")
@@ -814,7 +797,7 @@ def run_als_gate_replay(
         # would serve stale custkeys)
         src = _staged_source(
             lines,
-            (sf_dir, "als", n_batches, _source_fingerprint(sf_dir, "orders")),
+            (sf_dir, "als", n_batches, source_fingerprint(sf_dir, "orders")),
             n_batches,
             table="lineitem",
         )

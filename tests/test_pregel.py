@@ -276,6 +276,45 @@ def test_loop_scope_pins_and_restores_session_settings(spark, adj):
     assert _settings(spark) == before
 
 
+def test_pregel_releases_initial_state(spark, adj):
+    """The harness persists the vertices at the loop's width for round
+    1 and releases them when the loop ends, normally or by a raising
+    update: a later reader of the same plan must find it uncached."""
+    from pyspark import StorageLevel
+
+    verts = adj.select(
+        "id", F.lit(1.0).alias("pr"), F.size("links").cast("double").alias("out_deg")
+    )
+    edges = adj.select(F.col("id").alias("src"), F.explode("links").alias("dst"))
+    seen: list = []
+
+    def run(fail: bool):
+        def update(joined):
+            parts = int(spark.conf.get(PARTS))
+            seen.append((parts, verts.repartition(parts, "id").storageLevel))
+            if fail:
+                raise RuntimeError("update failed")
+            return _damp(joined)
+
+        return pregel(
+            vertices=verts,
+            edges=edges,
+            send_to_dst=[(F.col("pr") / F.col("out_deg")).alias("contrib")],
+            agg_to_dst=[F.sum("contrib").alias("contrib")],
+            update=update,
+            n_iter=2,
+            shuffle_partitions="auto",
+        )
+
+    assert run(fail=False).vertices.count() == 4
+    with pytest.raises(RuntimeError, match="update failed"):
+        run(fail=True)
+    assert len(seen) == 3
+    for parts, level in seen:
+        assert level == StorageLevel.MEMORY_AND_DISK
+        assert verts.repartition(parts, "id").storageLevel == StorageLevel.NONE
+
+
 def test_concurrent_loops_keep_their_pins(spark, adj):
     """Loops started together from several threads on one session: each
     superstep still plans with its loop's settings, every answer equals
