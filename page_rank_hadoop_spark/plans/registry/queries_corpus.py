@@ -297,9 +297,9 @@ def q_serving_phrase(spark, sf):
 
 def q_serving_proximity(spark, sf):
     """Round 9 (judge r8 item 1): NEAR/k served from positional point
-    reads — SearchCursor.near() runs the two-pointer min-gap merge over
-    the sorted position lists. Shares q_proximity_search's oracle
-    VERBATIM."""
+    reads — SearchCursor.near() finds each position's nearest neighbour
+    of the other term by searchsorted over the sorted positions. Shares
+    q_proximity_search's oracle VERBATIM."""
     from page_rank_hadoop_spark.plans.registry._shared import (
         PROX_DIST,
         PROX_TERMS,

@@ -142,9 +142,8 @@ def build_search_tables(
     tf = tf.select("term", "doc_id", "tf")
     located = _write_blobs(documents, os.path.join(out_dir, "blobs"), n_files)
     n_docs = located.count()
-    # the df-bounded (term, doc) rows feed both postings and positions,
-    # and each write runs its plan twice (range sample + write): one
-    # snapshot computes tf and df once instead of four times
+    # the df-bounded (term, doc) rows feed both postings and positions:
+    # one snapshot computes tf and df once instead of once per table
     bounded = tf.join(df_from_tf(tf, cutoff), "term").localCheckpoint()
     postings = bounded.join(
         ranks.select("doc_id", "pr").join(located, "doc_id"), "doc_id"
@@ -159,7 +158,10 @@ def build_search_tables(
         "off",
         "len",
     )
-    write_keyed(postings, os.path.join(out_dir, "postings"), "term", n_files=n_files)
+    # each term's rows in doc_id order: the phrase and NEAR kernels read
+    # a term's doc ids as an already sorted array
+    by_term = ["term", "doc_id"]
+    write_keyed(postings, os.path.join(out_dir, "postings"), by_term, n_files=n_files)
     # positional postings: one extra token-stream pass (positions can't
     # come from a tf-only MV), same df bound as the flat postings so the
     # serving guarantee stays O(df·terms) per query at 100 TB
@@ -170,7 +172,7 @@ def build_search_tables(
         .join(bounded.select("term", "doc_id"), ["term", "doc_id"], "left_semi")
     )
     write_keyed(
-        positional, os.path.join(out_dir, "positions"), "term", n_files=n_files
+        positional, os.path.join(out_dir, "positions"), by_term, n_files=n_files
     )
     meta = {
         "n_docs": n_docs,
@@ -218,6 +220,45 @@ def _round6_topk(raw, k: int | None, largest: bool):
         s_k = np.partition(raw, k - 1)[k - 1]
         idx = np.flatnonzero(raw <= np.nextafter(s_k + 1e-6, np.inf))
     return idx, [_round6(x) for x in raw[idx].tolist()]
+
+
+def _ascending(a, strict: bool = False) -> bool:
+    """Is the 1-d array ``a`` sorted ascending (strictly: no repeats)?"""
+    if a.size < 2:
+        return True
+    return bool((a[1:] > a[:-1]).all() if strict else (a[1:] >= a[:-1]).all())
+
+
+def _intersect_sorted(a, b):
+    """The common values of two sorted arrays of unique values, sorted:
+    one linear merge (a stable sort of two sorted runs is a single
+    timsort merge), then the equal neighbours."""
+    import numpy as np
+
+    both = np.concatenate((a, b))
+    both.sort(kind="stable")
+    return both[:-1][both[1:] == both[:-1]]
+
+
+def _ranked_positions(docs, term_docs, lists):
+    """Every position of one term as (rank, pos) int64 arrays: ``rank``
+    is the position's doc's index in the sorted array ``docs`` (−1 for
+    a doc not in it), ``pos`` the position; in row order, so ascending
+    by rank when ``term_docs`` is sorted."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if term_docs is docs:
+        row_rank = np.arange(docs.size)
+    elif docs.size:
+        row_rank = np.searchsorted(docs, term_docs)
+        found = docs[np.minimum(row_rank, docs.size - 1)] == term_docs
+        row_rank[~found] = -1
+    else:
+        row_rank = np.full(term_docs.size, -1)
+    parent = pc.list_parent_indices(lists).to_numpy()
+    pos = pc.list_flatten(lists).to_numpy().astype("int64")
+    return row_rank[parent], pos
 
 
 class VectorSearchCursor:
@@ -659,16 +700,26 @@ class SearchCursor:
                 c.refresh()
         self._blobs = self._list_blobs()
 
-    def _position_table(self, terms: list[str]):
-        """(term, doc_id, positions) rows for ``terms`` as one Arrow
-        table from positional point reads — O(df·terms) rows, the same
-        bound as ``search``."""
+    def _term_positions(self, term: str):
+        """(doc_ids, positions) of one term from one positional point
+        read: its doc ids as a sorted int64 array and the aligned
+        ``list`` array of its sorted token positions. The build writes a
+        term's rows in ``doc_id`` order; rows in any other order are
+        sorted here (an O(n) check finds out)."""
+        import numpy as np
+
         if self._positions is None:
             raise ValueError(
                 "SearchCursor: this index has no positions/ table — rebuild "
                 "with round-9 build_search_tables to serve phrase/NEAR queries"
             )
-        return self._positions.lookup(terms)
+        tbl = self._positions.lookup([term])
+        docs = tbl["doc_id"].to_numpy()
+        lists = tbl["positions"].combine_chunks()
+        if not _ascending(docs):
+            order = np.argsort(docs, kind="stable")
+            docs, lists = docs[order], lists.take(order)
+        return docs, lists
 
     def phrase(self, phrase: list[str]) -> list[dict]:
         """Exact adjacent-phrase matches: [{doc_id, phrase_tf,
@@ -676,38 +727,36 @@ class SearchCursor:
         (the positional-index query the reference stores positions FOR,
         Writables.scala:24-44) minus the Spark job. Same algebra: a
         phrase start is a position p with p ∈ pos(t0), p+1 ∈ pos(t1),
-        … — evaluated columnar: every (doc, pos − i) pair of the i-th
-        term is packed into one int64 and the per-term key sets are
-        intersected with ``np.intersect1d``. Doc ids are dense-ranked
-        before packing, so any int64 ``doc_id`` packs exactly."""
+        …. Evaluated over sorted arrays, one point read per distinct
+        term: every (doc, pos − i) pair of the i-th term is packed into
+        one int64 key by the doc's rank among the first term's docs
+        (``searchsorted``) — ascending, because docs and each doc's
+        positions are — and the sorted key sets are intersected by a
+        linear merge (``_intersect_sorted``). Packing ranks, not ids,
+        keeps any int64 ``doc_id`` exact."""
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
 
-        uniq = sorted(set(phrase))
-        tbl = self._position_table(uniq)
-        lists = tbl["positions"]
-        parent = pc.list_parent_indices(lists).to_numpy()
-        pos = pc.list_flatten(lists).to_numpy().astype("int64")
-        term = pc.index_in(tbl["term"], value_set=pa.array(uniq)).to_numpy()[parent]
-        doc_ids, rank = np.unique(tbl["doc_id"].to_numpy(), return_inverse=True)
-        rank = rank[parent]
-        width = int(pos.max()) + 1 if pos.size else 1
+        if not phrase:
+            return []
+        cols = {t: self._term_positions(t) for t in dict.fromkeys(phrase)}
+        docs = cols[phrase[0]][0]
+        slots = [_ranked_positions(docs, *cols[t]) for t in phrase]
+        width = max((int(p.max()) + 1 for _, p in slots if p.size), default=1)
         starts = None
-        for i, t in enumerate(phrase):
-            sel = term == uniq.index(t)
-            shifted = pos[sel] - i
-            ok = shifted >= 0  # a start is a t0 position, never negative
-            keys = rank[sel][ok] * width + shifted[ok]
-            starts = np.unique(keys) if starts is None else np.intersect1d(starts, keys)
-        # starts is sorted: per doc, the first key holds the lowest start
-        docs, first, count = np.unique(
-            starts // width, return_index=True, return_counts=True
-        )
+        for i, (rank, pos) in enumerate(slots):
+            ok = (rank >= 0) & (pos >= i)  # a start is a t0 position, never negative
+            keys = rank[ok] * width + (pos[ok] - i)
+            if not _ascending(keys, strict=True):
+                keys = np.unique(keys)
+            starts = keys if starts is None else _intersect_sorted(starts, keys)
+        # starts is sorted: each doc's run begins with its lowest start
+        doc = starts // width
+        first = np.flatnonzero(np.diff(doc, prepend=-1))
+        count = np.diff(first, append=starts.size)
         return [
             {"doc_id": d, "phrase_tf": n, "first_pos": f}
             for d, n, f in zip(
-                doc_ids[docs].tolist(),
+                docs[doc[first]].tolist(),
                 count.tolist(),
                 (starts[first] % width).tolist(),
             )
@@ -716,38 +765,43 @@ class SearchCursor:
     def near(self, term_a: str, term_b: str, max_dist: int = 5) -> list[dict]:
         """NEAR/k proximity matches: [{doc_id, min_dist, tf_a, tf_b}]
         ordered by doc_id — ``index.proximity_matches`` minus the Spark
-        job. The closest |pa−pb| comes from a linear two-pointer merge
-        over the two SORTED position lists (the Spark query's pairwise
-        tf_a·tf_b array algebra collapses to O(tf_a+tf_b) client-side;
-        the minimum gap between two sorted sequences is attained at a
-        merge-adjacent pair)."""
-        by_term: dict = {term_a: {}, term_b: {}}
-        for row in self._position_table(sorted({term_a, term_b})).to_pylist():
-            by_term[row["term"]][row["doc_id"]] = row["positions"]
-        pa_by_doc, pb_by_doc = by_term[term_a], by_term[term_b]
-        out = []
-        for doc_id in set(pa_by_doc) & set(pb_by_doc):
-            pa, pb = pa_by_doc[doc_id], pb_by_doc[doc_id]
-            i = j = 0
-            md = None
-            while i < len(pa) and j < len(pb):
-                gap = abs(pa[i] - pb[j])
-                md = gap if md is None or gap < md else md
-                if pa[i] < pb[j]:
-                    i += 1
-                else:
-                    j += 1
-            if md is not None and md <= max_dist:
-                out.append(
-                    {
-                        "doc_id": doc_id,
-                        "min_dist": md,
-                        "tf_a": len(pa),
-                        "tf_b": len(pb),
-                    }
-                )
-        out.sort(key=lambda r: r["doc_id"])
-        return out
+        job. The Spark query's pairwise tf_a·tf_b minimum is attained at
+        a sorted-order neighbour, so each position of ``term_a`` is
+        compared with the nearest ``term_b`` positions on either side
+        (``searchsorted`` over (doc rank, pos) keys packed as in
+        ``phrase``) and the gaps are reduced per doc."""
+        import numpy as np
+
+        docs, lists_a = self._term_positions(term_a)
+        rank_a, pos_a = _ranked_positions(docs, docs, lists_a)
+        rank_b, pos_b = _ranked_positions(docs, *self._term_positions(term_b))
+        pos_b = pos_b[rank_b >= 0]
+        rank_b = rank_b[rank_b >= 0]
+        if not (pos_a.size and pos_b.size):
+            return []
+        width = int(max(pos_a.max(), pos_b.max())) + 1
+        ka = rank_a * width + pos_a
+        kb = rank_b * width + pos_b
+        if not _ascending(kb):
+            kb = np.sort(kb)
+        j = np.searchsorted(kb, ka)
+        none = np.iinfo("int64").max
+        gap = np.full(ka.size, none)
+        for nb, ok in ((np.minimum(j, kb.size - 1), j < kb.size), (np.maximum(j - 1, 0), j > 0)):
+            ok &= kb[nb] // width == rank_a  # a neighbour in the same doc
+            gap = np.where(ok, np.minimum(gap, np.abs(ka - kb[nb])), gap)
+        first = np.flatnonzero(np.diff(rank_a, prepend=-1))
+        md = np.minimum.reduceat(gap, first)
+        hit = (md != none) & (md <= max_dist)
+        r = rank_a[first][hit]
+        tf_a = np.bincount(rank_a, minlength=docs.size)
+        tf_b = np.bincount(rank_b, minlength=docs.size)
+        return [
+            {"doc_id": d, "min_dist": m, "tf_a": x, "tf_b": y}
+            for d, m, x, y in zip(
+                docs[r].tolist(), md[hit].tolist(), tf_a[r].tolist(), tf_b[r].tolist()
+            )
+        ]
 
     def _top(self, terms: list[str], k: int | None) -> list[dict]:
         """The top ``k`` postings rows of ``terms`` (all for ``k=None``),

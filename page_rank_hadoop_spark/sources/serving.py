@@ -14,42 +14,61 @@ additionally removes the shuffle from any later join on the key.
 
 from __future__ import annotations
 
+import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# Row-group target of a keyed serving table, in bytes: the HBase block
+# (64 KB by default) in parquet terms. A point read decodes whole row
+# groups, so the group, not the file, is the unit a lookup pays for.
+ROW_GROUP_BYTES = 64 * 1024
+
+
 def write_keyed(
     df: DataFrame,
     path: str,
-    key: str,
+    key: str | list[str],
     n_files: int | None = None,
-    row_group_mb: int | None = None,
 ) -> None:
     """Write ``df`` as a key-ordered parquet serving table.
 
-    ``repartitionByRange(key)`` gives disjoint key ranges per file (global
-    clustering), ``sortWithinPartitions`` orders rows inside each file so
-    row-group stats are tight. n_files defaults to Spark's range-partition
+    ``key`` is the lookup column, or a list whose first entry is the
+    lookup column and whose rest orders the rows of one key (the search
+    build writes each term's rows in ``doc_id`` order).
+    ``repartitionByRange`` on the lookup column gives disjoint key ranges
+    per file, so all rows of one key land in one file, and
+    ``sortWithinPartitions`` orders rows inside each file so row-group
+    stats are tight. n_files defaults to Spark's range-partition
     estimate; pin it for stable file counts in tests.
 
-    ``row_group_mb`` caps the parquet row-group size (``parquet.block.
-    size``) below the 128 MB default — the serving-latency knob for
-    cursor-fronted tables: a point read decompresses whole row groups,
-    so on a sorted table smaller groups mean tighter min/max pruning
-    and less decode per lookup (PointLookupCursor prunes at row-group
-    granularity from the footer stats). Keep the default for tables
-    consumed by SCANS — more, smaller groups cost scan throughput and
-    footer size; this is precisely the HBase block-size tradeoff
-    (reference S4/S5) in parquet terms."""
+    Row groups are capped at ``ROW_GROUP_BYTES`` (``parquet.block.
+    size``), far below the 128 MB default: ``PointLookupCursor`` prunes
+    and decodes at row-group granularity, so a small group means a key
+    read decodes little beyond the key's own rows (one key's run spans
+    whole groups plus at most two shared boundary groups). The cost is
+    a larger footer and more groups per scan — the HBase block-size
+    tradeoff (reference S4/S5) in parquet terms.
+
+    The range partitioner samples its input in a job of its own, but
+    under AQE the input's shuffle stages run once and both the sample
+    and the write read their output; only the stage after the last
+    shuffle runs twice. A ``localCheckpoint`` of the input measured no
+    faster and cost two more jobs, so there is none."""
+    keys = [key] if isinstance(key, str) else list(key)
     parted = (
-        df.repartitionByRange(n_files, key) if n_files else df.repartitionByRange(key)
+        df.repartitionByRange(n_files, keys[0])
+        if n_files
+        else df.repartitionByRange(keys[0])
     )
-    writer = parted.sortWithinPartitions(key).write.mode("overwrite")
-    if row_group_mb is not None:
-        writer = writer.option("parquet.block.size", row_group_mb * 1024 * 1024)
-    writer.parquet(path)
+    (
+        parted.sortWithinPartitions(*keys)
+        .write.mode("overwrite")
+        .option("parquet.block.size", ROW_GROUP_BYTES)
+        .parquet(path)
+    )
 
 
 def write_compacted(df: DataFrame, path: str, target_mb: int = 256) -> int:
@@ -219,10 +238,15 @@ class PointLookupCursor:
     Read contract: ``lookup`` returns ONE ``pyarrow.Table`` — the
     matching rows of every touched row group, concatenated in file
     order, or an empty table with the file schema when nothing matches.
-    It reuses the ParquetFile HANDLES opened at refresh, reads only the
-    ROW GROUPS whose cached [min, max] intersect the probe set, and
-    filters them with a vectorized ``is_in``; no row becomes a Python
-    object unless the caller asks (``.to_pylist()`` is the dict shape).
+    It reuses the ParquetFile HANDLES opened at refresh and reads, in
+    one ``read_row_groups`` call per file, only the ROW GROUPS whose
+    cached [min, max] intersect the probe set. A group whose min == max
+    holds nothing but a probed key and is kept whole as a zero-copy
+    slice; only the groups shared with other keys (on a ``write_keyed``
+    table, the two ends of a key's run) go through a vectorized
+    ``is_in`` filter, and a single matching part is returned without a
+    ``concat_tables``. No row becomes a Python object unless the caller
+    asks (``.to_pylist()`` is the dict shape).
     Probe keys may be a list or a numpy array, so a multi-thousand-id
     probe stays columnar too.
     Handles are kept for up to ``MAX_OPEN_FILES`` files and opened on
@@ -240,7 +264,7 @@ class PointLookupCursor:
         self._coerce = None  # set from the key column's arrow type
         self._schema = None  # first indexed file's arrow schema
         # per file: {"fp", "pf" (handle or None), "lo", "hi",
-        #            "rgs": [(lo, hi, rg_idx)] or None when stats absent}
+        #            "rgs": [(lo, hi, rg_idx, n_rows)] or None when stats absent}
         self._files: list[dict] = []
         self._indexed: set[str] = set()
         self.refresh()
@@ -312,7 +336,7 @@ class PointLookupCursor:
                 if stats is None or not stats.has_min_max:
                     rgs = None  # no stats: always a candidate, whole file
                     break
-                rgs.append((stats.min, stats.max, rg))
+                rgs.append((stats.min, stats.max, rg, md.row_group(rg).num_rows))
             self._files.append(
                 {
                     "fp": fp,
@@ -363,6 +387,13 @@ class PointLookupCursor:
         if not len(vals):
             return self._schema.empty_table()
         val_arr = None  # built lazily with the key column's exact type
+
+        def matching(tbl):
+            nonlocal val_arr
+            if val_arr is None:
+                val_arr = pa.array(vals, type=tbl.schema.field(self.key).type)
+            return tbl.filter(pc.is_in(tbl[self.key], value_set=val_arr))
+
         parts = []
         for e in self._files:
             if e["rgs"] == []:
@@ -372,22 +403,33 @@ class PointLookupCursor:
                 continue
             if e["rgs"] is None:  # stats-less file: scan it whole
                 pf = e["pf"] or self._pq.ParquetFile(e["fp"])
-                tbl = pf.read()
-            else:
-                if not self._hits_range(vals, e["lo"], e["hi"]):
-                    continue
-                idxs = [rg for lo, hi, rg in e["rgs"] if self._hits_range(vals, lo, hi)]
-                if not idxs:
-                    continue
-                pf = e["pf"] or self._pq.ParquetFile(e["fp"])
-                tbl = pf.read_row_groups(idxs)
-            if val_arr is None:
-                val_arr = pa.array(vals, type=tbl.schema.field(self.key).type)
-            tbl = tbl.filter(pc.is_in(tbl[self.key], value_set=val_arr))
-            if tbl.num_rows:
-                parts.append(tbl)
+                parts.append(matching(pf.read()))
+                continue
+            if not self._hits_range(vals, e["lo"], e["hi"]):
+                continue
+            hit = [
+                (lo == hi, rg, n)
+                for lo, hi, rg, n in e["rgs"]
+                if self._hits_range(vals, lo, hi)
+            ]
+            if not hit:
+                continue
+            pf = e["pf"] or self._pq.ParquetFile(e["fp"])
+            tbl = pf.read_row_groups([rg for _, rg, _ in hit])
+            # a hit group with min == max holds only a probed key: its
+            # rows are kept whole, as zero-copy slices; only the groups
+            # shared with other keys go through is_in
+            off = 0
+            for single, run in itertools.groupby(hit, key=lambda h: h[0]):
+                n = sum(n for _, _, n in run)
+                part = tbl.slice(off, n)
+                parts.append(part if single else matching(part))
+                off += n
+        parts = [t for t in parts if t.num_rows]
         if not parts:
             return self._schema.empty_table()
+        if len(parts) == 1:
+            return parts[0]
         # "default" promotion unifies per-file nullability (an appended
         # file written from a different frame may differ only in that)
         return pa.concat_tables(parts, promote_options="default")

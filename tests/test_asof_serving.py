@@ -307,9 +307,10 @@ def test_point_lookup_cursor_refresh_sees_appended_files(spark, tmp_path):
 
 
 def test_write_keyed_row_group_cap_tightens_cursor_pruning(spark, tmp_path):
-    """Round 8: the row_group_mb knob produces multi-row-group files on
-    a keyed table, the cursor indexes per-group stats, and a point
-    lookup reads only the matching group(s) — same rows as read_point."""
+    """write_keyed's byte-sized row-group cap produces multi-row-group
+    files on a keyed table, the cursor indexes per-group stats, and a
+    point lookup reads only the matching group(s) — same rows as
+    read_point."""
     from pyspark.sql import functions as F
 
     from page_rank_hadoop_spark.sources.serving import (
@@ -324,7 +325,7 @@ def test_write_keyed_row_group_cap_tightens_cursor_pruning(spark, tmp_path):
         F.repeat(F.lit("x"), 64).alias("pad"),
     )
     path = str(tmp_path / "serve_rg")
-    write_keyed(df, path, "term", n_files=2, row_group_mb=1)
+    write_keyed(df, path, "term", n_files=2)
 
     import os
     import pyarrow.parquet as pq
@@ -435,3 +436,48 @@ def test_read_point_relation_cache_and_invalidate(spark, tmp_path):
     ).parquet(path)
     invalidate_relation(path)
     assert [r["v"] for r in read_point(spark, path, "term", ["z999"]).collect()] == [999]
+
+
+def test_lookup_fast_paths_equal_the_filtered_path(tmp_path):
+    """Groups whose min == max == a probed key skip the is_in filter,
+    and a single matching part skips concat_tables; both must return
+    the table the filtered path returns: runs over single-key groups
+    with shared boundary groups, one part, several files, a miss, and
+    a file written without statistics (scanned whole)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from page_rank_hadoop_spark.sources.serving import PointLookupCursor
+
+    path = tmp_path / "keyed"
+    path.mkdir()
+    # file 0: "a" ×2, "b" ×9 (three single-key groups), "c" ×1, "d" ×4;
+    # groups of 3 rows, so "b" and "d" share boundary groups
+    keys0 = ["a"] * 2 + ["b"] * 9 + ["c"] + ["d"] * 4
+    keys1 = ["e"] * 6 + ["f"] * 2
+    keys2 = ["b", "g", "g"]  # appended, stats-less, out of order
+    for i, (keys, stats) in enumerate(((keys0, True), (keys1, True), (keys2, False))):
+        t = pa.table({"term": keys, "v": pa.array(range(100 * i, 100 * i + len(keys)), pa.int64())})
+        pq.write_table(t, str(path / f"part-{i}.parquet"), row_group_size=3,
+                       write_statistics=stats)
+    cur = PointLookupCursor(str(path), "term")
+    single = [e for e in cur._files if e["rgs"]][0]["rgs"]
+    assert sum(lo == hi == "b" for lo, hi, *_ in single) >= 2
+
+    def filtered(values):
+        parts = []
+        for fp in sorted(path.iterdir()):
+            t = pq.read_table(str(fp))
+            t = t.filter(pc.is_in(t["term"], value_set=pa.array(sorted(set(values)), pa.string())))
+            if t.num_rows:
+                parts.append(t)
+        return pa.concat_tables(parts) if parts else cur._schema.empty_table()
+
+    for probe in (["b"], ["e"], ["a"], ["c"], ["d"], ["b", "d"], ["a", "f"],
+                  ["g"], ["b", "e", "g"], ["zz"], ["b", "b"], []):
+        got = cur.lookup(probe)
+        want = filtered(probe)
+        assert got.schema.equals(want.schema), probe
+        assert got.equals(want), probe
+    assert cur.lookup(["zz"]).num_rows == 0

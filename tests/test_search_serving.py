@@ -28,6 +28,9 @@ def search_dir(spark):
         d,
         cutoff=10**9,  # q_tfidf_score disables the df bound
         tf=registry._tf_slim(spark, SF001),
+        # two files, so each holds several row groups at sf0.01 and the
+        # cursor reads cross shared boundary groups
+        n_files=2,
     )
     yield d
     shutil.rmtree(d, ignore_errors=True)
@@ -191,9 +194,9 @@ def test_phrase_equals_declared_query(spark, search_dir):
 
 
 def test_near_equals_declared_query(spark, search_dir):
-    """SearchCursor.near() ≡ index.proximity_matches: the two-pointer
-    merge min-gap must equal the Spark query's pairwise array-algebra
-    minimum, row for row."""
+    """SearchCursor.near() ≡ index.proximity_matches: the nearest-
+    neighbour min-gap must equal the Spark query's pairwise
+    array-algebra minimum, row for row."""
     from page_rank_hadoop_spark.plans import registry
     from page_rank_hadoop_spark.sources.search import SearchCursor
 
@@ -668,3 +671,204 @@ def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
         json.dump(meta, fh)
     with pytest.raises(ValueError, match="rebuild"):
         SearchCursor(old)
+
+
+# --- term-sized row groups and the sorted-array phrase/NEAR kernels -------
+
+
+def _oracle_near(d, term_a, term_b, max_dist=5):
+    """The serving lane's earlier NEAR: a two-pointer merge over each
+    doc's two sorted position lists, row by row."""
+    by_term = {term_a: {}, term_b: {}}
+    for r in _rows(os.path.join(d, "positions"), "term", [term_a, term_b]):
+        by_term[r["term"]][r["doc_id"]] = r["positions"]
+    out = []
+    for doc_id in set(by_term[term_a]) & set(by_term[term_b]):
+        pa, pb = by_term[term_a][doc_id], by_term[term_b][doc_id]
+        i = j = 0
+        md = None
+        while i < len(pa) and j < len(pb):
+            gap = abs(pa[i] - pb[j])
+            md = gap if md is None or gap < md else md
+            if pa[i] < pb[j]:
+                i += 1
+            else:
+                j += 1
+        if md is not None and md <= max_dist:
+            out.append({"doc_id": doc_id, "min_dist": md, "tf_a": len(pa), "tf_b": len(pb)})
+    out.sort(key=lambda r: r["doc_id"])
+    return out
+
+
+def _part_files(d):
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def test_keyed_tables_have_term_sized_row_groups(search_dir):
+    """Every postings/ and positions/ file holds several row groups, and
+    each file's rows are in (term, doc_id) order."""
+    import pyarrow.parquet as pq
+
+    for table in ("postings", "positions"):
+        for fp in _part_files(os.path.join(search_dir, table)):
+            assert pq.ParquetFile(fp).metadata.num_row_groups > 1, fp
+            t = pq.read_table(fp, columns=["term", "doc_id"]).to_pylist()
+            keys = [(r["term"], r["doc_id"]) for r in t]
+            assert keys == sorted(keys) and len(set(keys)) == len(keys), fp
+
+
+def test_term_lookup_decodes_its_rows_plus_two_boundary_groups(search_dir, monkeypatch):
+    """A single-term lookup reads one file, once, and decodes at most the
+    term's own rows plus the two boundary groups it shares with its
+    neighbours — counted, as the benchmark's probe counts, by wrapping
+    ParquetFile.read_row_groups."""
+    import pyarrow.parquet as pq
+
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    reads = []
+    real = pq.ParquetFile.read_row_groups
+
+    def counting(pf, *args, **kwargs):
+        t = real(pf, *args, **kwargs)
+        reads.append(t.num_rows)
+        return t
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", counting)
+    cur = SearchCursor(search_dir)
+    for table in ("postings", "positions"):
+        lk = getattr(cur, f"_{table}")
+        sizes = {
+            e["fp"]: sorted((n for *_, n in e["rgs"]), reverse=True) for e in lk._files
+        }
+        fewer = 0
+        for term in _vocabulary(search_dir):
+            reads.clear()
+            kept = lk.lookup([term]).num_rows
+            assert len(reads) == 1, (table, term, reads)
+            fp = next(e["fp"] for e in lk._files if e["lo"] <= term <= e["hi"])
+            assert reads[0] <= kept + sum(sizes[fp][:2]), (table, term)
+            fewer += reads[0] < sum(sizes[fp])
+        assert fewer > len(_vocabulary(search_dir)) // 2, table
+
+
+def test_phrase_and_near_parity_with_row_oracles(search_dir):
+    """near equals the two-pointer merge (and phrase the set algebra) on
+    ordered pairs, [a, a], 3-term phrases, absent terms and max_dist
+    edges."""
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    cur = SearchCursor(search_dir)
+    terms = _vocabulary(search_dir)[:10]
+    for a in terms + ["absent-term"]:
+        for b in terms + ["absent-term"]:
+            assert _typed(cur.near(a, b)) == _typed(_oracle_near(search_dir, a, b)), (a, b)
+    for a, b in zip(terms, terms[1:]):
+        for k in (-1, 0, 1, 40, 10**6):
+            assert _typed(cur.near(a, b, max_dist=k)) == _typed(
+                _oracle_near(search_dir, a, b, k)
+            ), (a, b, k)
+    for p in ([terms[1], terms[1]], terms[:3], [terms[2], "absent-term", terms[2]]):
+        assert _typed(cur.phrase(p)) == _typed(_oracle_phrase(search_dir, p)), p
+
+
+def _unordered_index(root, ids):
+    """A hand-written index whose positions rows are NOT in doc_id order
+    within a term (descending, then interleaved), over ``ids``."""
+    positions = []
+    order = sorted(ids, reverse=True)
+    order = order[::2] + order[1::2]
+    for i, d in enumerate(order):
+        positions += [
+            {"term": "a", "doc_id": d, "positions": [0, 3, 7 + i % 3, 20]},
+            {"term": "b", "doc_id": d, "positions": [1, 8 + i % 3, 15, 40]},
+        ]
+        if i % 2:
+            positions.append({"term": "c", "doc_id": d, "positions": [2, 9 + i % 3]})
+    postings = [{"term": "a", "doc_id": d, "tf": 1, "df": 1, "idf": 1.0} for d in ids]
+    return _write_search_dir(
+        root, postings, [{"doc_id": ids[0], "pr": 0.1}],
+        [{"doc_id": ids[0], "text": "a b c"}], positions,
+    )
+
+
+def test_phrase_and_near_on_rows_out_of_doc_order(tmp_path):
+    """Rows written in another order than doc_id — and doc ids ≥ 2³² —
+    give the row oracles' answers: the kernels sort what is not sorted."""
+    import pyarrow.parquet as pq
+
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    wide = [5, 2**32 - 1, 2**32, 2**32 + 7, 2**40 + 1, 2**62 + 3, 17]
+    root = _unordered_index(str(tmp_path / "idx"), wide)
+    docs = [r["doc_id"] for r in pq.read_table(os.path.join(root, "positions")).to_pylist()
+            if r["term"] == "a"]
+    assert docs != sorted(docs)
+    cur = SearchCursor(root)
+    for p in (["a", "b"], ["a", "b", "c"], ["b", "a"], ["a", "a"], ["c"], ["a", "z"], ["c", "c"]):
+        assert _typed(cur.phrase(p)) == _typed(_oracle_phrase(root, p)), p
+    assert cur.phrase(["a", "b", "c"])
+    for a in ("a", "b", "c", "z"):
+        for b in ("a", "b", "c", "z"):
+            for k in (0, 1, 5, 30):
+                assert _typed(cur.near(a, b, k)) == _typed(_oracle_near(root, a, b, k)), (a, b, k)
+    assert cur.near("a", "c", 1) and cur.near("b", "a", 1)
+
+
+def _spark_answers(documents, ranks, term, phrase, pair):
+    from pyspark.sql import functions as F
+
+    from page_rank_hadoop_spark.operators import index
+
+    scored = [
+        {"term": r["term"], "doc_id": r["doc_id"], "score": r["score"]}
+        for r in index.tfidf_scores(documents, ranks, [term], cutoff=10**9)
+        .orderBy(F.desc("score"), "term", "doc_id")
+        .collect()
+    ]
+    snips = {r["doc_id"]: r["snippet"] for r in index.snippet_window(documents, term).collect()}
+    snippets = [
+        {"doc_id": r["doc_id"], "score": r["score"], "snippet": snips[r["doc_id"]]}
+        for r in scored[:10]
+        if r["doc_id"] in snips
+    ]
+    phrased = [
+        {"doc_id": r["doc_id"], "phrase_tf": r["phrase_tf"], "first_pos": r["first_pos"]}
+        for r in index.phrase_matches(documents, phrase).collect()
+    ]
+    near = [
+        {"doc_id": r["doc_id"], "min_dist": r["min_dist"], "tf_a": r["tf_a"], "tf_b": r["tf_b"]}
+        for r in index.proximity_matches(documents, *pair).collect()
+    ]
+    return scored, snippets, phrased, near
+
+
+@pytest.mark.parametrize(
+    "docs",
+    [
+        [],
+        [(2**33, "spark data spark stream data")],
+        [(7, "")],
+        [(7, None)],
+    ],
+    ids=["empty", "one-row", "one-empty-text", "one-null-text"],
+)
+def test_degenerate_corpora_answer_like_the_spark_operators(spark, tmp_path, docs):
+    """An empty corpus and one-row corpora through build_search_tables:
+    every cursor answer equals the Spark operators' (empty where they
+    are empty) — no IndexError or ValueError from an empty array."""
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    documents, ranks, d = _blob_index(spark, tmp_path, docs)
+    cur = SearchCursor(d)
+    for term, phrase, pair in (
+        ("spark", ["spark", "data"], ("spark", "stream")),
+        ("data", ["data", "spark", "stream"], ("data", "data")),
+        ("absent", ["absent"], ("absent", "spark")),
+    ):
+        scored, snippets, phrased, near = _spark_answers(documents, ranks, term, phrase, pair)
+        assert _typed(cur.search([term])) == _typed(scored), term
+        assert _typed(cur.search_with_snippets(term, k=10)) == _typed(snippets), term
+        assert _typed(cur.phrase(phrase)) == _typed(phrased), phrase
+        assert _typed(cur.near(*pair)) == _typed(near), pair
+    assert cur.phrase([]) == []
