@@ -45,9 +45,16 @@ from pyspark.sql import functions as F
 from page_rank_hadoop_spark.sources.serving import PointLookupCursor, write_keyed
 
 META_NAME = "_search_meta.json"
-# what a build_search_tables directory holds, recorded in its meta; a
-# directory with any other layout must be rebuilt, not guessed at
-KEY_LAYOUT = {"postings": "term", "positions": "term", "blobs": "doc_id"}
+# what a build_search_tables directory holds and in which row order,
+# recorded in its meta; a directory with any other layout must be
+# rebuilt, not guessed at. postings and positions hold each term's rows
+# in doc_id order: the phrase and NEAR kernels read a term's doc ids as
+# an already sorted array
+KEY_LAYOUT = {
+    "postings": ["term", "doc_id"],
+    "positions": ["term", "doc_id"],
+    "blobs": "doc_id",
+}
 
 
 def _write_blobs(documents: DataFrame, path: str, n_files: int) -> DataFrame:
@@ -102,23 +109,25 @@ def build_search_tables(
     own parameters so serve time validates instead of trusting the
     caller).
 
-    - ``postings/``  key=``term``:   (term, doc_id, tf, df, idf, pr, blob,
-      off, len) — flat posting rows, df-bounded like the reference index
-      (A6). ``idf`` = ln(N/df) is computed BY SPARK at build time and
-      stored as the exact double: client-side scoring is then pure IEEE
-      multiply/add (bit-identical across JVM/Python), never a second
-      libm ``log`` whose last ulp could disagree with the declared
-      query's at a 6dp rounding boundary. ``pr`` is the page's RAW rank,
+    - ``postings/`` key=``term``, each term's rows in ``doc_id`` order:
+      (term, doc_id, tf, df, idf, pr, blob, off, len) — flat posting
+      rows, df-bounded like the reference index (A6). ``idf`` = ln(N/df)
+      is computed BY SPARK at build time and stored as the exact double:
+      client-side scoring is then pure IEEE multiply/add (bit-identical
+      across JVM/Python), never a second libm ``log`` whose last ulp
+      could disagree with the declared query's at a 6dp rounding
+      boundary. ``pr`` is the page's RAW rank,
       joined in with an inner join, so pages without a rank drop out as
       they do in the Spark query. (blob, off, len) locate the page's text
       in ``blobs/``.
     - ``blobs/``: the document texts as flat UTF-8 files, one per
       ``doc_id`` range partition (``_write_blobs``) — a snippet is one
       bounded read at a stored byte offset, the reference's seek.
-    - ``positions/`` key=``term``:   (term, doc_id, positions) — the
-      POSITIONAL posting rows (sorted 0-based token positions per
-      (term, doc)), df-bounded like the flat postings. This is what the
-      reference's per-occurrence position storage
+    - ``positions/`` key=``term``, each term's rows in ``doc_id`` order:
+      (term, doc_id, positions) — the POSITIONAL posting rows (sorted
+      0-based token positions per (term, doc)), df-bounded like the
+      flat postings. This is what the reference's per-occurrence
+      position storage
       (Writables.scala:24-44) exists for: phrase and NEAR/k queries
       (Q1-adjacent interactive asks) served as point reads + client
       array algebra — round 9, judge r8 item 1.
@@ -158,10 +167,12 @@ def build_search_tables(
         "off",
         "len",
     )
-    # each term's rows in doc_id order: the phrase and NEAR kernels read
-    # a term's doc ids as an already sorted array
-    by_term = ["term", "doc_id"]
-    write_keyed(postings, os.path.join(out_dir, "postings"), by_term, n_files=n_files)
+    write_keyed(
+        postings,
+        os.path.join(out_dir, "postings"),
+        KEY_LAYOUT["postings"],
+        n_files=n_files,
+    )
     # positional postings: one extra token-stream pass (positions can't
     # come from a tf-only MV), same df bound as the flat postings so the
     # serving guarantee stays O(df·terms) per query at 100 TB
@@ -172,7 +183,10 @@ def build_search_tables(
         .join(bounded.select("term", "doc_id"), ["term", "doc_id"], "left_semi")
     )
     write_keyed(
-        positional, os.path.join(out_dir, "positions"), by_term, n_files=n_files
+        positional,
+        os.path.join(out_dir, "positions"),
+        KEY_LAYOUT["positions"],
+        n_files=n_files,
     )
     meta = {
         "n_docs": n_docs,
@@ -220,13 +234,6 @@ def _round6_topk(raw, k: int | None, largest: bool):
         s_k = np.partition(raw, k - 1)[k - 1]
         idx = np.flatnonzero(raw <= np.nextafter(s_k + 1e-6, np.inf))
     return idx, [_round6(x) for x in raw[idx].tolist()]
-
-
-def _ascending(a, strict: bool = False) -> bool:
-    """Is the 1-d array ``a`` sorted ascending (strictly: no repeats)?"""
-    if a.size < 2:
-        return True
-    return bool((a[1:] > a[:-1]).all() if strict else (a[1:] >= a[:-1]).all())
 
 
 def _intersect_sorted(a, b):
@@ -703,23 +710,15 @@ class SearchCursor:
     def _term_positions(self, term: str):
         """(doc_ids, positions) of one term from one positional point
         read: its doc ids as a sorted int64 array and the aligned
-        ``list`` array of its sorted token positions. The build writes a
-        term's rows in ``doc_id`` order; rows in any other order are
-        sorted here (an O(n) check finds out)."""
-        import numpy as np
-
+        ``list`` array of its sorted token positions (``KEY_LAYOUT``:
+        the build writes a term's rows in ``doc_id`` order)."""
         if self._positions is None:
             raise ValueError(
                 "SearchCursor: this index has no positions/ table — rebuild "
                 "with round-9 build_search_tables to serve phrase/NEAR queries"
             )
         tbl = self._positions.lookup([term])
-        docs = tbl["doc_id"].to_numpy()
-        lists = tbl["positions"].combine_chunks()
-        if not _ascending(docs):
-            order = np.argsort(docs, kind="stable")
-            docs, lists = docs[order], lists.take(order)
-        return docs, lists
+        return tbl["doc_id"].to_numpy(), tbl["positions"].combine_chunks()
 
     def phrase(self, phrase: list[str]) -> list[dict]:
         """Exact adjacent-phrase matches: [{doc_id, phrase_tf,
@@ -732,8 +731,9 @@ class SearchCursor:
         one int64 key by the doc's rank among the first term's docs
         (``searchsorted``) — ascending, because docs and each doc's
         positions are — and the sorted key sets are intersected by a
-        linear merge (``_intersect_sorted``). Packing ranks, not ids,
-        keeps any int64 ``doc_id`` exact."""
+        linear merge (``_intersect_sorted``); a doc's positions are
+        distinct, so each key set has no repeats. Packing ranks, not
+        ids, keeps any int64 ``doc_id`` exact."""
         import numpy as np
 
         if not phrase:
@@ -746,8 +746,6 @@ class SearchCursor:
         for i, (rank, pos) in enumerate(slots):
             ok = (rank >= 0) & (pos >= i)  # a start is a t0 position, never negative
             keys = rank[ok] * width + (pos[ok] - i)
-            if not _ascending(keys, strict=True):
-                keys = np.unique(keys)
             starts = keys if starts is None else _intersect_sorted(starts, keys)
         # starts is sorted: each doc's run begins with its lowest start
         doc = starts // width
@@ -782,8 +780,6 @@ class SearchCursor:
         width = int(max(pos_a.max(), pos_b.max())) + 1
         ka = rank_a * width + pos_a
         kb = rank_b * width + pos_b
-        if not _ascending(kb):
-            kb = np.sort(kb)
         j = np.searchsorted(kb, ka)
         none = np.iinfo("int64").max
         gap = np.full(ka.size, none)

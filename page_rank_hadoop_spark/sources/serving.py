@@ -241,11 +241,11 @@ class PointLookupCursor:
     It reuses the ParquetFile HANDLES opened at refresh and reads, in
     one ``read_row_groups`` call per file, only the ROW GROUPS whose
     cached [min, max] intersect the probe set. A group whose min == max
-    holds nothing but a probed key and is kept whole as a zero-copy
-    slice; only the groups shared with other keys (on a ``write_keyed``
-    table, the two ends of a key's run) go through a vectorized
-    ``is_in`` filter, and a single matching part is returned without a
-    ``concat_tables``. No row becomes a Python object unless the caller
+    and whose null count is 0 holds nothing but a probed key and is kept
+    whole as a zero-copy slice; only the groups shared with other keys
+    (on a ``write_keyed`` table, the two ends of a key's run) or with
+    null keys go through a vectorized ``is_in`` filter, and a single
+    matching part is returned without a ``concat_tables``. No row becomes a Python object unless the caller
     asks (``.to_pylist()`` is the dict shape).
     Probe keys may be a list or a numpy array, so a multi-thousand-id
     probe stays columnar too.
@@ -264,7 +264,8 @@ class PointLookupCursor:
         self._coerce = None  # set from the key column's arrow type
         self._schema = None  # first indexed file's arrow schema
         # per file: {"fp", "pf" (handle or None), "lo", "hi",
-        #            "rgs": [(lo, hi, rg_idx, n_rows)] or None when stats absent}
+        #            "rgs": [(lo, hi, rg_idx, single, n_rows)] or None when
+        #            stats absent; single: the group holds only the key lo}
         self._files: list[dict] = []
         self._indexed: set[str] = set()
         self.refresh()
@@ -336,7 +337,14 @@ class PointLookupCursor:
                 if stats is None or not stats.has_min_max:
                     rgs = None  # no stats: always a candidate, whole file
                     break
-                rgs.append((stats.min, stats.max, rg, md.row_group(rg).num_rows))
+                # min/max ignore nulls: a group is single-key only when
+                # its stats also show it holds no null key
+                single = stats.min == stats.max and (
+                    stats.has_null_count and stats.null_count == 0
+                )
+                rgs.append(
+                    (stats.min, stats.max, rg, single, md.row_group(rg).num_rows)
+                )
             self._files.append(
                 {
                     "fp": fp,
@@ -408,17 +416,17 @@ class PointLookupCursor:
             if not self._hits_range(vals, e["lo"], e["hi"]):
                 continue
             hit = [
-                (lo == hi, rg, n)
-                for lo, hi, rg, n in e["rgs"]
+                (single, rg, n)
+                for lo, hi, rg, single, n in e["rgs"]
                 if self._hits_range(vals, lo, hi)
             ]
             if not hit:
                 continue
             pf = e["pf"] or self._pq.ParquetFile(e["fp"])
             tbl = pf.read_row_groups([rg for _, rg, _ in hit])
-            # a hit group with min == max holds only a probed key: its
-            # rows are kept whole, as zero-copy slices; only the groups
-            # shared with other keys go through is_in
+            # a hit single-key group holds only a probed key: its rows
+            # are kept whole, as zero-copy slices; only the groups shared
+            # with other keys (or with null keys) go through is_in
             off = 0
             for single, run in itertools.groupby(hit, key=lambda h: h[0]):
                 n = sum(n for _, _, n in run)

@@ -442,8 +442,9 @@ def test_lookup_fast_paths_equal_the_filtered_path(tmp_path):
     """Groups whose min == max == a probed key skip the is_in filter,
     and a single matching part skips concat_tables; both must return
     the table the filtered path returns: runs over single-key groups
-    with shared boundary groups, one part, several files, a miss, and
-    a file written without statistics (scanned whole)."""
+    with shared boundary groups, one part, several files, a miss, a
+    group whose only non-null key is the probe (min/max ignore nulls)
+    and a file written without statistics (scanned whole)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -452,9 +453,11 @@ def test_lookup_fast_paths_equal_the_filtered_path(tmp_path):
 
     path = tmp_path / "keyed"
     path.mkdir()
-    # file 0: "a" ×2, "b" ×9 (three single-key groups), "c" ×1, "d" ×4;
-    # groups of 3 rows, so "b" and "d" share boundary groups
-    keys0 = ["a"] * 2 + ["b"] * 9 + ["c"] + ["d"] * 4
+    # file 0: a null key (sorted first, as Spark sorts nulls), "a" ×2,
+    # "b" ×9 (three single-key groups), "c" ×1, "d" ×4; groups of 3
+    # rows, so the null shares "a"'s group and "b" and "d" share
+    # boundary groups
+    keys0 = [None] + ["a"] * 2 + ["b"] * 9 + ["c"] + ["d"] * 4
     keys1 = ["e"] * 6 + ["f"] * 2
     keys2 = ["b", "g", "g"]  # appended, stats-less, out of order
     for i, (keys, stats) in enumerate(((keys0, True), (keys1, True), (keys2, False))):
@@ -464,6 +467,7 @@ def test_lookup_fast_paths_equal_the_filtered_path(tmp_path):
     cur = PointLookupCursor(str(path), "term")
     single = [e for e in cur._files if e["rgs"]][0]["rgs"]
     assert sum(lo == hi == "b" for lo, hi, *_ in single) >= 2
+    assert single[0][:2] == ("a", "a")  # the null-key group's statistics
 
     def filtered(values):
         parts = []
@@ -481,3 +485,4 @@ def test_lookup_fast_paths_equal_the_filtered_path(tmp_path):
         assert got.schema.equals(want.schema), probe
         assert got.equals(want), probe
     assert cur.lookup(["zz"]).num_rows == 0
+    assert cur.lookup(["a"])["term"].to_pylist() == ["a", "a"]

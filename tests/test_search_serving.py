@@ -323,12 +323,12 @@ def _typed(rows):
     return [[(k, v, type(v)) for k, v in r.items()] for r in rows]
 
 
-def _write_table(d, rows, schema, key):
+def _write_table(d, rows, schema, keys):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(d)
-    rows = sorted(rows, key=lambda r: r[key])
+    rows = sorted(rows, key=lambda r: tuple(r[k] for k in keys))
     half = len(rows) // 2  # two files, several row groups each
     for i, part in enumerate((rows[:half], rows[half:])):
         pq.write_table(
@@ -342,7 +342,7 @@ def _write_search_dir(root, postings, ranks, docs, positions):
     """A hand-written build_search_tables directory (pyarrow, no Spark)
     with the column types the Spark build writes: postings carry the
     page's rank (inner join, so unranked pages drop out) and its text
-    location in two blob files."""
+    location in two blob files; rows are in the ``KEY_LAYOUT`` order."""
     import json
 
     import pyarrow as pa
@@ -372,7 +372,7 @@ def _write_search_dir(root, postings, ranks, docs, positions):
              ("df", pa.int64()), ("idf", pa.float64()), ("pr", pa.float64()),
              ("blob", pa.int32()), ("off", pa.int64()), ("len", pa.int32())]
         ),
-        "term",
+        KEY_LAYOUT["postings"],
     )
     _write_table(
         os.path.join(root, "positions"),
@@ -381,7 +381,7 @@ def _write_search_dir(root, postings, ranks, docs, positions):
             [("term", pa.string()), ("doc_id", pa.int64()),
              ("positions", pa.list_(pa.int32()))]
         ),
-        "term",
+        KEY_LAYOUT["positions"],
     )
     meta = {"n_docs": len(docs), "cutoff": 10**9, "w_tfidf": 0.5, "w_pr": 0.5,
             "key_layout": KEY_LAYOUT}
@@ -474,7 +474,8 @@ def test_phrase_parity_with_row_oracle(search_dir):
 
 def test_phrase_exact_for_wide_doc_ids(tmp_path):
     """doc_id ≥ 2³² (and near 2⁶²) must pack without collision: the
-    cursor dense-ranks ids before packing (doc, pos) pairs."""
+    cursor dense-ranks ids before packing (doc, pos) pairs, for phrase
+    and for near."""
     from page_rank_hadoop_spark.sources.search import SearchCursor
 
     wide = [5, 2**32 - 1, 2**32, 2**32 + 7, 2**40 + 1, 2**62 + 3]
@@ -494,6 +495,11 @@ def test_phrase_exact_for_wide_doc_ids(tmp_path):
     for p in (["a", "b"], ["a", "b", "c"], ["b", "a"], ["a", "a"], ["c"], ["a", "z"]):
         assert _typed(cur.phrase(p)) == _typed(_oracle_phrase(root, p)), p
     assert [r["doc_id"] for r in cur.phrase(["a", "b", "c"])] == wide[1::2]
+    for a in ("a", "b", "c", "z"):
+        for b in ("a", "b", "c", "z"):
+            for k in (0, 1, 5, 30):
+                assert _typed(cur.near(a, b, k)) == _typed(_oracle_near(root, a, b, k)), (a, b, k)
+    assert cur.near("a", "c", 1) and cur.near("b", "a", 1)
 
 
 def test_lookup_returns_arrow_table(search_dir):
@@ -651,8 +657,10 @@ def test_blob_index_of_empty_corpus_answers_nothing(spark, tmp_path):
 
 
 def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
-    """A directory written by the postings/ranks/docs build (its meta
-    names that layout) is refused with a rebuild request, not served."""
+    """A directory written by the postings/ranks/docs build, or by the
+    build that keyed postings and positions by term alone (its rows not
+    in the doc_id order the phrase and NEAR kernels rely on), is refused
+    with a rebuild request, not served."""
     import json
 
     from page_rank_hadoop_spark.sources.search import META_NAME, SearchCursor
@@ -662,6 +670,11 @@ def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
     meta = _meta(old)
     meta["key_layout"] = {"postings": "term", "ranks": "doc_id", "docs": "doc_id",
                           "positions": "term"}
+    with open(os.path.join(old, META_NAME), "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="rebuild"):
+        SearchCursor(old)
+    meta["key_layout"] = {"postings": "term", "positions": "term", "blobs": "doc_id"}
     with open(os.path.join(old, META_NAME), "w") as fh:
         json.dump(meta, fh)
     with pytest.raises(ValueError, match="rebuild"):
@@ -770,49 +783,6 @@ def test_phrase_and_near_parity_with_row_oracles(search_dir):
             ), (a, b, k)
     for p in ([terms[1], terms[1]], terms[:3], [terms[2], "absent-term", terms[2]]):
         assert _typed(cur.phrase(p)) == _typed(_oracle_phrase(search_dir, p)), p
-
-
-def _unordered_index(root, ids):
-    """A hand-written index whose positions rows are NOT in doc_id order
-    within a term (descending, then interleaved), over ``ids``."""
-    positions = []
-    order = sorted(ids, reverse=True)
-    order = order[::2] + order[1::2]
-    for i, d in enumerate(order):
-        positions += [
-            {"term": "a", "doc_id": d, "positions": [0, 3, 7 + i % 3, 20]},
-            {"term": "b", "doc_id": d, "positions": [1, 8 + i % 3, 15, 40]},
-        ]
-        if i % 2:
-            positions.append({"term": "c", "doc_id": d, "positions": [2, 9 + i % 3]})
-    postings = [{"term": "a", "doc_id": d, "tf": 1, "df": 1, "idf": 1.0} for d in ids]
-    return _write_search_dir(
-        root, postings, [{"doc_id": ids[0], "pr": 0.1}],
-        [{"doc_id": ids[0], "text": "a b c"}], positions,
-    )
-
-
-def test_phrase_and_near_on_rows_out_of_doc_order(tmp_path):
-    """Rows written in another order than doc_id — and doc ids ≥ 2³² —
-    give the row oracles' answers: the kernels sort what is not sorted."""
-    import pyarrow.parquet as pq
-
-    from page_rank_hadoop_spark.sources.search import SearchCursor
-
-    wide = [5, 2**32 - 1, 2**32, 2**32 + 7, 2**40 + 1, 2**62 + 3, 17]
-    root = _unordered_index(str(tmp_path / "idx"), wide)
-    docs = [r["doc_id"] for r in pq.read_table(os.path.join(root, "positions")).to_pylist()
-            if r["term"] == "a"]
-    assert docs != sorted(docs)
-    cur = SearchCursor(root)
-    for p in (["a", "b"], ["a", "b", "c"], ["b", "a"], ["a", "a"], ["c"], ["a", "z"], ["c", "c"]):
-        assert _typed(cur.phrase(p)) == _typed(_oracle_phrase(root, p)), p
-    assert cur.phrase(["a", "b", "c"])
-    for a in ("a", "b", "c", "z"):
-        for b in ("a", "b", "c", "z"):
-            for k in (0, 1, 5, 30):
-                assert _typed(cur.near(a, b, k)) == _typed(_oracle_near(root, a, b, k)), (a, b, k)
-    assert cur.near("a", "c", 1) and cur.near("b", "a", 1)
 
 
 def _spark_answers(documents, ranks, term, phrase, pair):

@@ -6,11 +6,11 @@
 Runs ``perfbench/run.py --trace 0`` once per seed in each checkout, one
 pair per seed, and swaps the side that runs first on every pair, so a
 drift of the host's speed during the session loads both sides alike.
-Each run's last stdout line is its result. Printed per end-to-end metric
-of the change checkout's ``BENCHMARK.json``: the parent median (IQR),
-the change median (IQR) and the pairs the change won; then every run
-whose result reads ``correct: false`` or ``failed > 0``, or that printed
-no result. Each run writes only what ``perfbench/run.py`` writes, under
+Each run lasts the change checkout's ``BENCHMARK.json`` ``run_seconds``,
+and its last stdout line is its result. Printed per end-to-end metric of
+that file: the parent median (IQR), the change median (IQR) and the
+pairs the change won; then every run whose result reads
+``correct: false`` or ``failed > 0``, or that printed no result. Each run writes only what ``perfbench/run.py`` writes, under
 its own checkout's ``perfbench/``; this script writes nothing.
 """
 
@@ -127,18 +127,20 @@ def main(argv=None) -> int:
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 41-48 or 41,45,50")
-    ap.add_argument("--seconds", type=float, default=10)
     args = ap.parse_args(argv)
     checkouts = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     with open(os.path.join(checkouts["change"], "BENCHMARK.json")) as fh:
-        metrics = json.load(fh)["end_to_end"]
+        bench = json.load(fh)
+    metrics = bench["end_to_end"]
 
     pairs, runs = [], []
     for i, seed in enumerate(parse_seeds(args.seeds)):
         order = SIDES if i % 2 == 0 else SIDES[::-1]
         pair = {}
         for side in order:
-            pair[side] = run_once(checkouts[side], args.workload, seed, args.seconds)
+            pair[side] = run_once(
+                checkouts[side], args.workload, seed, bench["run_seconds"]
+            )
             runs.append((side, seed, pair[side]))
             vals = {k: round(v["value"], 4)
                     for k, v in ((pair[side] or {}).get("metrics") or {}).items()}
