@@ -25,6 +25,7 @@ from pyspark.storagelevel import StorageLevel
 
 from page_rank_hadoop_spark.functions.hashing import MINHASH_PRIME
 from page_rank_hadoop_spark.functions.text import char_shingles, tokens, word_shingles_of
+from page_rank_hadoop_spark.session import loop_scope
 from page_rank_hadoop_spark.sources.catalog import ensure_parallel
 
 
@@ -522,98 +523,76 @@ def near_dup_components(
     Only documents appearing in ≥1 pair are returned — singletons are
     their own component by definition.
 
-    Loop-scoped shuffle partitions (round 9b — pregel's lever): the
-    label rounds re-plan at the static session setting and each eager
-    localCheckpoint freezes it, so a small pair graph pays rounds ×
-    partitions empty-task overhead. Sized ~50k rows/partition from the
-    pair count (floor 4, capped at the session setting — a 100 TB pair
-    table keeps cluster-sized exchanges); min-label is partition-count
-    INSENSITIVE, so labels are bit-identical at any count.
+    The rounds run inside ``session.loop_scope``, sized from the
+    symmetrized pair count; min-label is partition-count INSENSITIVE,
+    so labels are bit-identical at any count.
     """
-    spark = pairs.sparkSession
     n_pairs = pairs.count()
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = min(session_parts, max(1, (2 * n_pairs) // 50_000 + 1))
     # explicit broadcast of the label-side frames below the threshold
     # (round 10, the SCC lever): checkpointed labels are LogicalRDDs
     # with unknown stats, so AQE never auto-broadcasts them
     bc = F.broadcast if n_pairs <= 500_000 else (lambda df: df)
-    if loop_parts == session_parts:
-        return _near_dup_components_loop(pairs, max_iter, bc, stats)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        return _near_dup_components_loop(pairs, max_iter, bc, stats)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
-
-
-def _near_dup_components_loop(
-    pairs: DataFrame, max_iter: int, bc=None, stats: dict | None = None
-) -> DataFrame:
-    """The min-label + star-contraction rounds proper (see
-    ``near_dup_components``, whose shuffle-partition pin wraps this)."""
-    if bc is None:
-        bc = lambda df: df
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    sym = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        sym.select("src")
-        .distinct()
-        .select(F.col("src").alias("id"), F.col("src").alias("label"))
-        .localCheckpoint()  # eager: every round starts from a flat scan
-    )
-    for i in range(1, max_iter + 1):
-        nbr_min = (
-            sym.join(bc(labels.withColumnRenamed("id", "src")), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = (
-            labels.join(bc(nbr_min), "id", "left")
-            .select(
-                "id",
-                F.col("label").alias("_old"),
-                F.least("label", F.coalesce("nbr_label", "label")).alias("cand"),
+    with loop_scope(pairs.sparkSession, "auto", lambda: 2 * n_pairs):
+        edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        sym = (
+            edges.unionByName(
+                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-            .localCheckpoint(eager=False)  # referenced twice: group-min + join back
+            .distinct()
+            .repartition("src")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # large-star hook (round 10, ported from components_pregel where it
-        # cut the sf0.1 pair graph from 17 rounds to 5): the whole current
-        # label TREE adopts the best candidate any member found this round.
-        # The group-min frame has one row per live label — tiny — and the
-        # join key is the old label, so whole trees merge per round instead
-        # of single vertices. Monotone (labels only decrease toward the
-        # component min) ⇒ convergence and final values unchanged.
-        gmin = stepped.groupBy(F.col("_old").alias("_gl")).agg(
-            F.min("cand").alias("_gm")
+        labels = (
+            sym.select("src")
+            .distinct()
+            .select(F.col("src").alias("id"), F.col("src").alias("label"))
+            .localCheckpoint()  # eager: every round starts from a flat scan
         )
-        new_labels = (
-            stepped.join(bc(gmin), stepped["_old"] == gmin["_gl"])
-            .select("id", "_old", F.least("cand", "_gm").alias("label"))
-        )
-        # pointer jumping: label := label's label (labels' domain is node
-        # ids, so the self-join is total). Monotone non-increasing and
-        # bounded below by the component min → convergence unaffected.
-        parent = new_labels.select(F.col("id").alias("label"), F.col("label").alias("_pl"))
-        new_labels = (
-            new_labels.join(bc(parent), "label")
-            .select("id", "_old", F.col("_pl").alias("label"))
-            .localCheckpoint()  # eager materialization, constant-size plan
-        )
-        # convergence check reads the just-checkpointed frame (the _old
-        # column rode along), not a fresh shuffle join of old-vs-new —
-        # one cheap scan instead of a per-round equi-join (round 6).
-        changed = new_labels.filter(F.col("label") != F.col("_old")).count()
-        labels = new_labels.drop("_old")
-        if changed == 0:
-            break
+        for i in range(1, max_iter + 1):
+            nbr_min = (
+                sym.join(bc(labels.withColumnRenamed("id", "src")), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("label").alias("nbr_label"))
+            )
+            stepped = (
+                labels.join(bc(nbr_min), "id", "left")
+                .select(
+                    "id",
+                    F.col("label").alias("_old"),
+                    F.least("label", F.coalesce("nbr_label", "label")).alias("cand"),
+                )
+                .localCheckpoint(eager=False)  # referenced twice: group-min + join back
+            )
+            # large-star hook (round 10, ported from components_pregel where it
+            # cut the sf0.1 pair graph from 17 rounds to 5): the whole current
+            # label TREE adopts the best candidate any member found this round.
+            # The group-min frame has one row per live label — tiny — and the
+            # join key is the old label, so whole trees merge per round instead
+            # of single vertices. Monotone (labels only decrease toward the
+            # component min) ⇒ convergence and final values unchanged.
+            gmin = stepped.groupBy(F.col("_old").alias("_gl")).agg(
+                F.min("cand").alias("_gm")
+            )
+            new_labels = (
+                stepped.join(bc(gmin), stepped["_old"] == gmin["_gl"])
+                .select("id", "_old", F.least("cand", "_gm").alias("label"))
+            )
+            # pointer jumping: label := label's label (labels' domain is node
+            # ids, so the self-join is total). Monotone non-increasing and
+            # bounded below by the component min → convergence unaffected.
+            parent = new_labels.select(F.col("id").alias("label"), F.col("label").alias("_pl"))
+            new_labels = (
+                new_labels.join(bc(parent), "label")
+                .select("id", "_old", F.col("_pl").alias("label"))
+                .localCheckpoint()  # eager materialization, constant-size plan
+            )
+            # convergence check reads the just-checkpointed frame (the _old
+            # column rode along), not a fresh shuffle join of old-vs-new —
+            # one cheap scan instead of a per-round equi-join (round 6).
+            changed = new_labels.filter(F.col("label") != F.col("_old")).count()
+            labels = new_labels.drop("_old")
+            if changed == 0:
+                break
     if stats is not None:  # observability for the scale-law rehearsal
         stats["rounds"] = i
     sym.unpersist()
@@ -647,63 +626,51 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame
     tested against) deep-chain shapes, and both are driver-gated
     against the same recursive-CTE oracle.
 
-    Same loop-scoped shuffle-partition pin as ``near_dup_components``
+    Runs inside ``session.loop_scope`` like ``near_dup_components``
     (min-combines: partition-count insensitive, bit-identical labels).
     """
-    spark = pairs.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = min(session_parts, max(4, (2 * pairs.count()) // 50_000 + 1))
-    if loop_parts == session_parts:
-        return _connected_components_star_loop(pairs, max_iter)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        return _connected_components_star_loop(pairs, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
-
-
-def _connected_components_star_loop(pairs: DataFrame, max_iter: int) -> DataFrame:
-    """The alternating large-star/small-star rounds proper (see
-    ``connected_components_star``, whose partition pin wraps this)."""
-    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    cur = (
-        edges.filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        sym = cur.unionByName(
-            cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        lg = (
-            sym.groupBy("u")
-            .agg(F.collect_set("v").alias("nbrs"))
-            .select(
-                "u",
-                F.least(F.array_min("nbrs"), F.col("u")).alias("m"),
-                F.explode(F.filter("nbrs", lambda x: x > F.col("u"))).alias("w"),
-            )
-            .select(F.col("w").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        nxt = (
-            lg.groupBy("u")
-            .agg(F.collect_set("v").alias("nbrs"))
-            .select(
-                F.array_min("nbrs").alias("m"),
-                F.explode(F.array_union("nbrs", F.array("u"))).alias("w"),
-            )
-            .select(F.col("w").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
+    # the pair count sizes the scope only when the session is wider
+    # than the loop floor
+    with loop_scope(pairs.sparkSession, "auto", lambda: 2 * pairs.count()):
+        edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        cur = (
+            edges.filter(F.col("u") != F.col("v"))
+            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct()
             .localCheckpoint()
         )
-        if nxt.exceptAll(cur).isEmpty() and cur.exceptAll(nxt).isEmpty():
+        for _ in range(max_iter):
+            sym = cur.unionByName(
+                cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+            lg = (
+                sym.groupBy("u")
+                .agg(F.collect_set("v").alias("nbrs"))
+                .select(
+                    "u",
+                    F.least(F.array_min("nbrs"), F.col("u")).alias("m"),
+                    F.explode(F.filter("nbrs", lambda x: x > F.col("u"))).alias("w"),
+                )
+                .select(F.col("w").alias("u"), F.col("m").alias("v"))
+                .filter(F.col("u") != F.col("v"))
+                .distinct()
+            )
+            nxt = (
+                lg.groupBy("u")
+                .agg(F.collect_set("v").alias("nbrs"))
+                .select(
+                    F.array_min("nbrs").alias("m"),
+                    F.explode(F.array_union("nbrs", F.array("u"))).alias("w"),
+                )
+                .select(F.col("w").alias("u"), F.col("m").alias("v"))
+                .filter(F.col("u") != F.col("v"))
+                .distinct()
+                .localCheckpoint()
+            )
+            if nxt.exceptAll(cur).isEmpty() and cur.exceptAll(nxt).isEmpty():
+                cur = nxt
+                break
             cur = nxt
-            break
-        cur = nxt
     return (
         cur.select(F.col("u").alias("doc_id"), F.col("v").alias("label"))
         .unionByName(cur.select(F.col("v").alias("doc_id"), F.col("v").alias("label")))

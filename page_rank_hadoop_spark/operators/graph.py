@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from page_rank_hadoop_spark.functions.text import tokens
+from page_rank_hadoop_spark.session import _scoped, loop_scope
 
 NULL_VID = -1  # virtual teleport/dangling node id in numeric graphs
 
@@ -134,11 +135,7 @@ def shortest_paths(edges: DataFrame, source, max_hops: int = 10) -> DataFrame:
     # integer hop counts — partition-count insensitive
     bc = F.broadcast if n_edges <= 1_000_000 else (lambda df: df)
     spark = edges.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = min(session_parts, max(1, n_edges // 50_000 + 1))
-    if loop_parts != session_parts:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with loop_scope(spark, "auto", lambda: n_edges):
         # spark.range, not createDataFrame: a literal-list frame becomes a
         # Python-RDD scan that re-spawns workers on every downstream action
         settled = spark.range(1).select(
@@ -162,9 +159,6 @@ def shortest_paths(edges: DataFrame, source, max_hops: int = 10) -> DataFrame:
             # than the per-hop eager-checkpoint JOB the old form paid.
             settled = settled.unionByName(nxt)
             frontier = nxt
-    finally:
-        if loop_parts != session_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
     e.unpersist()
     return settled
 
@@ -195,31 +189,34 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        sym.select("src")
-        .distinct()
-        .select(F.col("src").alias("id"), F.col("src").alias("label"))
-        .localCheckpoint()
-    )
-    top1 = Window.partitionBy("dst").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(n_iter):
-        counts = (
-            sym.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy("dst", "label")
-            .agg(F.count("*").alias("c"))
+    # the loop counts nothing itself: the scope counts the edges only
+    # when the session is wider than the loop floor
+    with loop_scope(edges.sparkSession, "auto", e.count):
+        sym = (
+            e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .distinct()
+            .repartition("src")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         labels = (
-            counts.withColumn("rn", F.row_number().over(top1))
-            .filter(F.col("rn") == 1)
-            .select(F.col("dst").alias("id"), "label")
+            sym.select("src")
+            .distinct()
+            .select(F.col("src").alias("id"), F.col("src").alias("label"))
             .localCheckpoint()
         )
+        top1 = Window.partitionBy("dst").orderBy(F.desc("c"), F.asc("label"))
+        for _ in range(n_iter):
+            counts = (
+                sym.join(labels.withColumnRenamed("id", "src"), "src")
+                .groupBy("dst", "label")
+                .agg(F.count("*").alias("c"))
+            )
+            labels = (
+                counts.withColumn("rn", F.row_number().over(top1))
+                .filter(F.col("rn") == 1)
+                .select(F.col("dst").alias("id"), "label")
+                .localCheckpoint()
+            )
     sym.unpersist()
     return labels
 
@@ -311,11 +308,7 @@ def deterministic_walks(
     return out
 
 
-def hits(
-    edges: DataFrame,
-    n_iter: int = 8,
-    shuffle_partitions: int | str | None = None,
-) -> DataFrame:
+def hits(edges: DataFrame, n_iter: int = 8) -> DataFrame:
     """HITS hubs & authorities (Kleinberg) over a directed edge list:
     ``n_iter`` synchronous rounds of  a(v) = Σ_{w→v} h(w),
     h(v) = Σ_{v→w} a(w),  each L1-normalized — the other classic
@@ -323,65 +316,15 @@ def hits(
     good hubs; hub = points at good authorities). Returns (id, hub,
     authority) for every vertex incident to an edge.
 
-    Physical shape per round: two partial-agg'd groupBy joins over the
-    same pre-partitioned edge table (one per direction) + ONE scalar
-    action — the L1-mass ``first()`` (hub and authority mass come out of
-    the same agg) — which also materializes the round's lazy
+    Physical shape per round: one scores join + one groupBy over a
+    tagged symmetric edge table laid out by key + ONE scalar action —
+    the L1-mass ``first()`` (hub and authority mass come out of the
+    same agg) — which also materializes the round's lazy
     localCheckpoint, so the plan lineage still resets every round
     without paying a second job (round-2 review item: the eager
     checkpoint before the mass read doubled per-round job count). L1
     (not L2) normalization keeps the arithmetic division-by-a-sum only —
     no sqrt — so the DuckDB oracle reproduces it exactly at 6dp.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    e = e.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:  # empty edge set: no scores, and no mass to normalize by
-        e.unpersist()
-        return nodes.select(
-            "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
-        )
-    # Loop-scoped shuffle partitions (round 9b, same lever as pregel /
-    # run_pagerank) — OFF by default here, measured not to pay: unlike
-    # the pagerank loops (pin 3.6s vs 6.7s bespoke, 5.6s vs 8.2s pregel
-    # at sf0.1), this loop's per-round mass first() already materializes
-    # a constant-size plan, and the relay's extra repartition+persist
-    # costs more than the saved empty tasks (pin 4.6s vs 4.3s unpinned).
-    # The knob stays for denser graphs where the calculus flips.
-    spark = e.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if shuffle_partitions == "auto":
-        loop_parts = min(session_parts, max(4, max(n, e.count()) // 50_000 + 1))
-    elif shuffle_partitions is not None:
-        loop_parts = min(session_parts, int(shuffle_partitions))
-    else:
-        loop_parts = session_parts
-    pinned = loop_parts != session_parts
-    if pinned:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        relaid = e.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-        relaid.count()
-        e.unpersist()
-        e = relaid
-    try:
-        return _hits_loop(e, nodes, n, n_iter)
-    finally:
-        if pinned:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
-        e.unpersist()
-
-
-def _hits_loop(e: DataFrame, nodes: DataFrame, n: int, n_iter: int) -> DataFrame:
-    """The HITS rounds proper (see ``hits``, whose shuffle-partition pin
-    and edge-cache cleanup wrap this).
 
     Round 11 fusion (guide §2.4, one exchange instead of two): both
     update directions ride ONE tagged symmetric edge table — edge
@@ -394,42 +337,61 @@ def _hits_loop(e: DataFrame, nodes: DataFrame, n: int, n_iter: int) -> DataFrame
     group-by's key set IS the vertex set and the old nodes left-join is
     dead weight. The summed terms per vertex are identical multisets;
     sums and the L1-normalizing masses agree with the unfused form (and
-    the DuckDB oracle) at the pinned 6dp."""
-    em = (
-        e.select(F.col("src").alias("key"), F.col("dst").alias("other"), F.lit(True).alias("fwd"))
-        .unionByName(
-            e.select(F.col("dst").alias("key"), F.col("src").alias("other"), F.lit(False).alias("fwd"))
-        )
-        .repartition("key")
+    the DuckDB oracle) at the pinned 6dp.
+    """
+    from pyspark.storagelevel import StorageLevel
+
+    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+    e = e.persist(StorageLevel.MEMORY_AND_DISK)
+    nodes = (
+        e.select(F.col("src").alias("id"))
+        .unionByName(e.select(F.col("dst").alias("id")))
+        .distinct()
         .localCheckpoint()
     )
-    scores = nodes.select(
-        "id", (F.lit(1.0) / n).alias("hub"), (F.lit(1.0) / n).alias("authority")
-    ).localCheckpoint()
-    for _ in range(n_iter):
-        joined = (
-            em.join(scores.withColumnRenamed("id", "key"), "key")
-            .groupBy(F.col("other").alias("id"))
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(~F.col("fwd"), F.col("authority"))), F.lit(0.0)
-                ).alias("h_raw"),
-                F.coalesce(
-                    F.sum(F.when(F.col("fwd"), F.col("hub"))), F.lit(0.0)
-                ).alias("a_raw"),
+    n = nodes.count()
+    if n == 0:  # empty edge set: no scores, and no mass to normalize by
+        e.unpersist()
+        return nodes.select(
+            "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
+        )
+    with loop_scope(e.sparkSession, "auto", lambda: n):
+        em = (
+            e.select(F.col("src").alias("key"), F.col("dst").alias("other"), F.lit(True).alias("fwd"))
+            .unionByName(
+                e.select(F.col("dst").alias("key"), F.col("src").alias("other"), F.lit(False).alias("fwd"))
             )
-            .localCheckpoint(eager=False)
+            .repartition("key")
+            .localCheckpoint()
         )
-        # the ONE action per round: reads both masses AND materializes
-        # joined's checkpoint (lineage reset without an extra job)
-        mass = joined.agg(
-            F.sum("h_raw").alias("hm"), F.sum("a_raw").alias("am")
-        ).first()
-        scores = joined.select(
-            "id",
-            (F.col("h_raw") / F.lit(mass["hm"])).alias("hub"),
-            (F.col("a_raw") / F.lit(mass["am"])).alias("authority"),
-        )
+        e.unpersist()
+        scores = nodes.select(
+            "id", (F.lit(1.0) / n).alias("hub"), (F.lit(1.0) / n).alias("authority")
+        ).localCheckpoint()
+        for _ in range(n_iter):
+            joined = (
+                em.join(scores.withColumnRenamed("id", "key"), "key")
+                .groupBy(F.col("other").alias("id"))
+                .agg(
+                    F.coalesce(
+                        F.sum(F.when(~F.col("fwd"), F.col("authority"))), F.lit(0.0)
+                    ).alias("h_raw"),
+                    F.coalesce(
+                        F.sum(F.when(F.col("fwd"), F.col("hub"))), F.lit(0.0)
+                    ).alias("a_raw"),
+                )
+                .localCheckpoint(eager=False)
+            )
+            # the ONE action per round: reads both masses AND materializes
+            # joined's checkpoint (lineage reset without an extra job)
+            mass = joined.agg(
+                F.sum("h_raw").alias("hm"), F.sum("a_raw").alias("am")
+            ).first()
+            scores = joined.select(
+                "id",
+                (F.col("h_raw") / F.lit(mass["hm"])).alias("hub"),
+                (F.col("a_raw") / F.lit(mass["am"])).alias("authority"),
+            )
     return scores.select(
         "id", F.round("hub", 6).alias("hub"), F.round("authority", 6).alias("authority")
     )
@@ -460,49 +422,53 @@ def k_core(
     from pyspark.storagelevel import StorageLevel
 
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cur = sym
-    n_prev = -1
-    converged = False
-    for rnd in range(max_iter):
-        deg = cur.groupBy("src").agg(F.count("*").alias("degree"))
-        # fused round (round 12, judge r11 items 1/9): keep and the
-        # previous round's induced edge set are LAZY checkpoints — the
-        # one count action below materializes both (and persists them
-        # via the checkpoint mark), where eager keep + count + eager cur
-        # was three jobs per peel round. Plans stay constant-size
-        # (LogicalRDD either way); values unchanged.
-        keep = deg.filter(F.col("degree") >= k).select("src").localCheckpoint(
-            eager=False
+    # as in label_propagation, the scope counts the edges only when the
+    # session is wider than the loop floor
+    with loop_scope(edges.sparkSession, "auto", e.count):
+        sym = (
+            e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .distinct()
+            .repartition("src")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        n_keep = keep.count()
-        if stats is not None:  # rounds-to-fixpoint, for the scale rehearsal
-            stats["rounds"] = rnd + 1
-        if n_keep == n_prev:
-            converged = True
-            break
-        n_prev = n_keep
-        cur = (
-            cur.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)  # materialized by next round's count
-        )
-    if not converged:
-        sym.unpersist()
-        raise RuntimeError(
-            f"k_core: no fixpoint within max_iter={max_iter} rounds "
-            f"(survivors still shrinking at {n_prev}); raise max_iter"
-        )
-    # at fixpoint every survivor has degree >= k in the induced subgraph,
-    # so this is a plain degree report, not a filter that changes the set
-    out = cur.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
-    out = out.localCheckpoint()
+        cur = sym
+        n_prev = -1
+        converged = False
+        for rnd in range(max_iter):
+            deg = cur.groupBy("src").agg(F.count("*").alias("degree"))
+            # fused round (round 12, judge r11 items 1/9): keep and the
+            # previous round's induced edge set are LAZY checkpoints — the
+            # one count action below materializes both (and persists them
+            # via the checkpoint mark), where eager keep + count + eager cur
+            # was three jobs per peel round. Plans stay constant-size
+            # (LogicalRDD either way); values unchanged.
+            keep = deg.filter(F.col("degree") >= k).select("src").localCheckpoint(
+                eager=False
+            )
+            n_keep = keep.count()
+            if stats is not None:  # rounds-to-fixpoint, for the scale rehearsal
+                stats["rounds"] = rnd + 1
+            if n_keep == n_prev:
+                converged = True
+                break
+            n_prev = n_keep
+            cur = (
+                cur.join(keep, "src", "left_semi")
+                .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
+                .select("src", "dst")
+                .localCheckpoint(eager=False)  # materialized by next round's count
+            )
+        if not converged:
+            sym.unpersist()
+            raise RuntimeError(
+                f"k_core: no fixpoint within max_iter={max_iter} rounds "
+                f"(survivors still shrinking at {n_prev}); raise max_iter"
+            )
+        # at fixpoint every survivor has degree >= k in the induced
+        # subgraph, so this is a plain degree report, not a filter that
+        # changes the set
+        out = cur.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
+        out = out.localCheckpoint()
     sym.unpersist()
     return out
 
@@ -816,7 +782,6 @@ def strongly_connected_components(
     edges: DataFrame,
     max_rounds: int = 25,
     max_iters: int = 64,
-    shuffle_partitions: int | str | None = "auto",
     pointer_jump: bool | str = "auto",
     hops: int | str = "auto",
     local_finish_max: int = 100_000,
@@ -849,9 +814,9 @@ def strongly_connected_components(
     Physical shape per inner step: one frontier equi-join + one
     partial-agg'd groupBy (never whole-graph recompute), eager
     localCheckpoint per step (the 3×-fanout lineage rule every loop
-    here follows), loop-scoped shuffle partitions sized to the live
-    subgraph (the 9b lever — these frontiers are tiny next to the
-    session's scan-sized shuffle width). At 1000-executor scale rounds
+    here follows), run inside ``session.loop_scope`` sized to the live
+    graph (these frontiers are tiny next to the session's scan-sized
+    shuffle width). At 1000-executor scale rounds
     are the cost driver; the standard accelerators (trim-1 peeling of
     degree-0 vertices, large-star shortcutting inside step 1) bolt onto
     the same loop skeleton — documented, not needed at test SFs.
@@ -889,21 +854,6 @@ def strongly_connected_components(
     )
     n_all = remaining.count()
 
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if shuffle_partitions == "auto":
-        # floor 1, not 4 (round 10): min-label is partition-count
-        # insensitive and a <50k-vertex live graph fits one task — the
-        # 4-task floor only multiplied scheduling overhead (measured
-        # ~1.5s across the slice's ~35 loop iterations)
-        loop_parts = min(session_parts, max(1, n_all // 50_000 + 1))
-    elif shuffle_partitions is not None:
-        loop_parts = min(session_parts, int(shuffle_partitions))
-    else:
-        loop_parts = session_parts
-    pinned = loop_parts != session_parts
-    if pinned:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-
     # broadcast the label/frontier side of every loop join when the live
     # graph is small (round 10): localCheckpointed frames are LogicalRDDs
     # with UNKNOWN size stats, so Catalyst/AQE never auto-broadcasts them
@@ -915,7 +865,7 @@ def strongly_connected_components(
     bc = F.broadcast if n_all <= 100_000 else (lambda df: df)
 
     done = None
-    try:
+    with loop_scope(spark, "auto", lambda: n_all):
         for _round in range(max_rounds):
             n_rem = remaining.count()
             if n_rem == 0:
@@ -1115,9 +1065,6 @@ def strongly_connected_components(
             # range with remaining already empty — re-test before raising.
             if remaining.count() != 0:
                 raise RuntimeError("SCC peeling did not converge in max_rounds")
-    finally:
-        if pinned:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
     return done if done is not None else remaining.select(
         "id", F.col("id").alias("scc_id")
     )
@@ -1156,11 +1103,7 @@ def seeded_closeness(
     # values are partition-count insensitive)
     bc = F.broadcast if n_edges <= 1_000_000 else (lambda df: df)
     spark = edges.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = min(session_parts, max(1, n_edges // 50_000 + 1))
-    if loop_parts != session_parts:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with loop_scope(spark, "auto", lambda: n_edges):
         verts = (
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
@@ -1190,9 +1133,6 @@ def seeded_closeness(
             # than the per-hop eager-checkpoint JOB the old form paid.
             settled = settled.unionByName(nxt)
             frontier = nxt
-    finally:
-        if loop_parts != session_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
     e.unpersist()
     reached = settled.filter(F.col("dist") > 0)
     return (
@@ -1247,11 +1187,7 @@ def weighted_sssp(
     # integer distances, min-combine: partition-count insensitive
     bc = F.broadcast if n_edges <= 1_000_000 else (lambda df: df)
     spark = wedges.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = min(session_parts, max(1, n_edges // 50_000 + 1))
-    if loop_parts != session_parts:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with loop_scope(spark, "auto", lambda: n_edges):
         dist = spark.range(1).select(
             F.lit(source).cast("long").alias("id"),
             F.lit(0).cast("long").alias("dist"),
@@ -1268,9 +1204,6 @@ def weighted_sssp(
                 .localCheckpoint()
             )
             dist = relaxed
-    finally:
-        if loop_parts != session_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
     e.unpersist()
     return dist
 
@@ -1313,11 +1246,10 @@ def seeded_betweenness(
     # per-level exchanges below the threshold
     bc = F.broadcast if n_edges <= 1_000_000 else (lambda df: df)
     spark = edges.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = min(session_parts, max(1, n_edges // 50_000 + 1))
-    if loop_parts != session_parts:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    # the one loop that keeps AQE on: its level-by-level left joins lose
+    # with AQE off (sf0.1, alternating pairs: 4.22 -> 5.02 s, 0/10), so
+    # only the partition width is scoped
+    with _scoped(spark, "auto", lambda: n_edges, {}):
         verts = (
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
@@ -1400,9 +1332,6 @@ def seeded_betweenness(
             )
             if t > 0:  # level-0 rows are the seeds themselves: not endpoints
                 acc.append(deltas)
-    finally:
-        if loop_parts != session_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
     e.unpersist()
     if not acc:
         return seeds.select(
@@ -1444,11 +1373,7 @@ def seeded_centrality_features(
     n_edges = e.count()
     bc = F.broadcast if n_edges <= 1_000_000 else (lambda df: df)
     spark = edges.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = min(session_parts, max(1, n_edges // 50_000 + 1))
-    if loop_parts != session_parts:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with loop_scope(spark, "auto", lambda: n_edges):
         settled = seeds.select(
             "seed", F.col("seed").alias("id"), F.lit(0).alias("dist")
         ).localCheckpoint()
@@ -1470,9 +1395,6 @@ def seeded_centrality_features(
             # than the per-hop eager-checkpoint JOB the old form paid.
             settled = settled.unionByName(nxt)
             frontier = nxt
-    finally:
-        if loop_parts != session_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(session_parts))
     e.unpersist()
     reached = settled.filter(F.col("dist") > 0)
     return reached.groupBy("id").agg(

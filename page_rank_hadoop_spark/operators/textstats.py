@@ -1289,6 +1289,7 @@ def textrank_keywords(
     from pyspark.sql import Window
 
     from page_rank_hadoop_spark.operators.index import token_stream
+    from page_rank_hadoop_spark.session import loop_scope
     from page_rank_hadoop_spark.sources.catalog import ensure_parallel
 
     toks = token_stream(ensure_parallel(documents))
@@ -1330,6 +1331,8 @@ def textrank_keywords(
         F.count("*").alias("nv"), F.sum("outdeg").alias("ne")
     ).first()
     n, n_edges = stats["nv"], stats["ne"] or 0
+    if n == 0:  # no content terms: nothing to rank, and α/n is undefined
+        return deg.select(F.col("src").alias("term"), F.lit(0.0).alias("score"))
     # small-graph loop hints (round 11 — the graph.py convention):
     # checkpointed pr/contrib frames are stats-free LogicalRDDs, so AQE
     # never auto-broadcasts them and each round paid a full edge-table
@@ -1337,24 +1340,25 @@ def textrank_keywords(
     # vocab-sized rank side collapses the per-round exchanges to the
     # one contribution groupBy.
     bc = F.broadcast if n_edges <= 1_000_000 else (lambda df: df)
-    pr = verts.select("id", F.lit(1.0).alias("pr")).localCheckpoint()
-    for _ in range(n_iter):
-        contrib = (
-            edges.join(bc(pr.withColumnRenamed("id", "src")), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("pr") / F.col("outdeg")).alias("c"))
-        )
-        pr = (
-            verts.join(bc(contrib), "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(alpha / n)
-                    + F.lit(1.0 - alpha) * F.coalesce("c", F.lit(0.0))
-                ).alias("pr"),
+    with loop_scope(documents.sparkSession, "auto", lambda: n_edges):
+        pr = verts.select("id", F.lit(1.0).alias("pr")).localCheckpoint()
+        for _ in range(n_iter):
+            contrib = (
+                edges.join(bc(pr.withColumnRenamed("id", "src")), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(F.col("pr") / F.col("outdeg")).alias("c"))
             )
-            .localCheckpoint()
-        )
+            pr = (
+                verts.join(bc(contrib), "id", "left")
+                .select(
+                    "id",
+                    (
+                        F.lit(alpha / n)
+                        + F.lit(1.0 - alpha) * F.coalesce("c", F.lit(0.0))
+                    ).alias("pr"),
+                )
+                .localCheckpoint()
+            )
     return (
         pr.select(F.col("id").alias("term"), F.round("pr", 6).alias("score"))
         .orderBy(F.desc("score"), "term")

@@ -6,6 +6,15 @@ local-only knobs (master, driver memory) overridden by the cluster
 submitter. AQE is on so shuffles re-plan at runtime (partition coalescing,
 skew-join splitting) — at 100 TB that is the difference between a static
 200-partition guess and right-sized stages.
+
+Driver loops are the exception: every iterative operator (PageRank,
+Pregel, BFS/SSSP, HITS, LPA, k-core, SCC, the components loops,
+TextRank) runs its rounds inside ``loop_scope``, with AQE off and the
+shuffle width pinned. A loop snapshots its state with
+``localCheckpoint`` every round, and a checkpoint of an adaptive plan
+loses its partitioning, so under AQE each round re-shuffles the state it
+just wrote and pays extra broadcast jobs. This module is the only place
+that sets or restores session settings; every scope holds one lock.
 """
 
 from __future__ import annotations

@@ -87,6 +87,7 @@ def run_join_replay_to_memory(
     import os
     import shutil
 
+    from page_rank_hadoop_spark.session import _scoped
     from page_rank_hadoop_spark.sources.catalog import normalize_ts
     from page_rank_hadoop_spark.streaming.replay import (
         NANOS_CONF,
@@ -98,16 +99,11 @@ def run_join_replay_to_memory(
     for f in glob.glob(os.path.join(sf_dir, "events.parquet")):
         shutil.copy(f, tmp)
 
-    prev = spark.conf.get(NANOS_CONF, None)
-    spark.conf.set(NANOS_CONF, "true")
     try:
-        raw_schema = spark.read.parquet(tmp).schema
+        with _scoped(spark, None, None, {NANOS_CONF: "true"}):
+            raw_schema = spark.read.parquet(tmp).schema
         stream = normalize_ts(spark.readStream.schema(raw_schema).parquet(tmp))
         joined = click_purchase_join_stream(stream, horizon_minutes)
         return replay_to_memory(spark, joined, "append", query_name)
     finally:
-        if prev is None:
-            spark.conf.unset(NANOS_CONF)
-        else:
-            spark.conf.set(NANOS_CONF, prev)
         shutil.rmtree(tmp, ignore_errors=True)

@@ -22,7 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from page_rank_hadoop_spark.session import stream_start_scope
+from page_rank_hadoop_spark.session import _scoped, stream_start_scope
 from page_rank_hadoop_spark.sources.catalog import source_fingerprint
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -221,18 +221,13 @@ def run_replay_to_memory(
     for f in glob.glob(os.path.join(sf_dir, "events.parquet")):
         shutil.copy(f, tmp)
 
-    prev = spark.conf.get(NANOS_CONF, None)
-    spark.conf.set(NANOS_CONF, "true")
     try:
-        raw_schema = spark.read.parquet(tmp).schema
+        with _scoped(spark, None, None, {NANOS_CONF: "true"}):
+            raw_schema = spark.read.parquet(tmp).schema
         stream = normalize_ts(spark.readStream.schema(raw_schema).parquet(tmp))
         agg = streaming_tumbling_counts(stream, minutes)
         return replay_to_memory(spark, agg, "complete", query_name)
     finally:
-        if prev is None:
-            spark.conf.unset(NANOS_CONF)
-        else:
-            spark.conf.set(NANOS_CONF, prev)
         shutil.rmtree(tmp, ignore_errors=True)
 
 

@@ -12,7 +12,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 from pyspark.sql import functions as F
 
-from page_rank_hadoop_spark.operators import graph, pagerank
+from page_rank_hadoop_spark.operators import dedup, graph, pagerank
 from page_rank_hadoop_spark.operators.pregel import (
     hits_pregel,
     label_propagation_pregel,
@@ -257,22 +257,70 @@ def _recorded_pagerank(adj, seen: list) -> dict:
     return {r["id"]: r["pr"] for r in _pagerank_program(adj, update).vertices.collect()}
 
 
-def test_loop_scope_pins_and_restores_session_settings(spark, adj):
-    """Every superstep plans with AQE off and the auto-sized partition
-    count (the session has 8; a 4-vertex graph gets the floor, 4); the
-    session gets its own values back after the loop and after an update
-    that raises."""
+NUM_EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (6, 7)]
+
+# bespoke driver loops over a frame with NUM_EDGES' (src, dst) columns
+BESPOKE_LOOPS = {
+    "shortest_paths": lambda e: graph.shortest_paths(e, source=1),
+    "hits": lambda e: graph.hits(e, n_iter=3),
+    "near_dup_components": lambda e: dedup.near_dup_components(
+        e.select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"))
+    ),
+    "strongly_connected_components": graph.strongly_connected_components,
+}
+
+
+def _run_bespoke(spark, loop) -> set:
+    return set(BESPOKE_LOOPS[loop](spark.createDataFrame(NUM_EDGES, ["src", "dst"])).collect())
+
+
+def _record_round_checkpoints(monkeypatch, spark, seen: list, fail: bool) -> None:
+    """Record the settings under which each round's lazy checkpoint is
+    taken (the bespoke loops snapshot every round that way); with
+    ``fail`` the second one raises, mid-loop."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    orig = DataFrame.localCheckpoint
+
+    def spy(self, eager=True):
+        if not eager:
+            seen.append(_settings(spark))
+            if fail and len(seen) == 2:
+                raise RuntimeError("round failed")
+        return orig(self, eager=eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+
+
+@pytest.mark.parametrize("loop", ["pregel", *BESPOKE_LOOPS])
+def test_loop_scope_pins_and_restores_session_settings(spark, adj, monkeypatch, loop):
+    """Every round plans with AQE off and the auto-sized partition count
+    (the session has 8; these small graphs get the floor, 4); the
+    session gets its own values back after the loop and after a round
+    that raises. Pregel rounds are recorded in the update, the bespoke
+    loops' rounds at their lazy checkpoints."""
     before = _settings(spark)
     seen: list = []
-    _recorded_pagerank(adj, seen)
-    assert seen == [("false", "4")] * 3
+    if loop == "pregel":
+        _recorded_pagerank(adj, seen)
+        assert seen == [("false", "4")] * 3
+    else:
+        _record_round_checkpoints(monkeypatch, spark, seen, fail=False)
+        _run_bespoke(spark, loop)
+        assert len(seen) >= 2 and set(seen) == {("false", "4")}
     assert _settings(spark) == before
 
     def boom(joined):
-        raise RuntimeError("update failed")
+        raise RuntimeError("round failed")
 
-    with pytest.raises(RuntimeError, match="update failed"):
-        _pagerank_program(adj, boom)
+    with pytest.raises(RuntimeError, match="round failed"):
+        if loop == "pregel":
+            _pagerank_program(adj, boom)
+        else:
+            seen.clear()
+            monkeypatch.undo()
+            _record_round_checkpoints(monkeypatch, spark, seen, fail=True)
+            _run_bespoke(spark, loop)
     assert _settings(spark) == before
 
 
@@ -326,27 +374,32 @@ def test_concurrent_loops_keep_their_pins(spark, adj):
         r["id"]: r["pr"]
         for r in pagerank.run_pagerank(adj, fixed_iterations=3).ranks.collect()
     }
+    other_loops = ["shortest_paths", "strongly_connected_components"]
+    want_other = {loop: _run_bespoke(spark, loop) for loop in other_loops}
     before = _settings(spark)
     seen: dict[int, list] = {k: [] for k in range(0, 5, 2)}
 
     def work(k):
         if k in seen:
             return _recorded_pagerank(adj, seen[k])
+        if k >= 5:
+            return _run_bespoke(spark, other_loops[k - 5])
         res = pagerank.run_pagerank(adj, fixed_iterations=3)
         return {r["id"]: r["pr"] for r in res.ranks.collect()}
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
-        with ThreadPoolExecutor(max_workers=5) as ex:
-            futures = [ex.submit(work, k) for k in range(5)]
+        with ThreadPoolExecutor(max_workers=7) as ex:
+            futures = [ex.submit(work, k) for k in range(7)]
             got = [f.result(timeout=600) for f in futures]
     finally:
         sys.setswitchinterval(interval)
     assert _settings(spark) == before
-    for k, answer in enumerate(got):
+    for k, answer in enumerate(got[:5]):
         want = want_pregel if k in seen else want_bespoke
         assert answer == pytest.approx(want, abs=1e-12)
+    assert got[5:] == [want_other[loop] for loop in other_loops]
     assert all(s == [("false", "4")] * 3 for s in seen.values())
 
 

@@ -498,6 +498,16 @@ class TestTextRank:
         floor = 0.15 / n
         assert full.filter(SF.col("score") < floor - 1e-9).count() == 0
 
+    def test_empty_corpus_ranks_nothing(self, spark, docs):
+        """No documents (hence no terms): an empty (term, score) frame,
+        not a division by the zero vertex count."""
+        from page_rank_hadoop_spark.operators import textstats
+
+        out = textstats.textrank_keywords(docs.limit(0))
+        assert out.columns == ["term", "score"]
+        assert dict(out.dtypes)["score"] == "double"
+        assert out.collect() == []
+
 
 class TestCloseness:
     def test_against_python_bfs(self, spark):

@@ -4,6 +4,10 @@ one optimization without paying the full 144-query bench.
 
     python tools/time_queries.py [sf_dir] q_name [q_name ...]
 
+Each timed call runs in its own job group; the line per query prints
+every call's seconds and Spark job count (``statusTracker``), so
+running it in two checkouts compares jobs and seconds per call.
+
 Env: SPARK_GRAFT_BENCH_RUNS (default 3).
 """
 
@@ -21,12 +25,13 @@ def main() -> int:
         print("usage: time_queries.py [sf_dir] q_name ...", file=sys.stderr)
         return 2
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from page_rank_hadoop_spark import get_spark
     from page_rank_hadoop_spark.plans import registry
 
     spark = get_spark("time_queries")
+    sc = spark.sparkContext
     qs = entry_mod.queries()
     spark.range(1000).count()
     spark.range(32).repartition(32).mapInPandas(
@@ -43,12 +48,18 @@ def main() -> int:
         if name not in qs:
             print(f"{name}: UNKNOWN", flush=True)
             continue
-        per = []
-        for _ in range(runs):
+        per, jobs = [], []
+        for i in range(runs):
+            group = f"time_queries-{name}-{i}"
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            try:
+                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            finally:
+                sc.setJobGroup(None, None)
             per.append(round(time.perf_counter() - t0, 3))
-        print(f"{name}: best {min(per):.3f}s of {per}", flush=True)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        print(f"{name}: best {min(per):.3f}s of {per} jobs {jobs}", flush=True)
     print(f"# loadavg {os.getloadavg()[0]:.1f}", file=sys.stderr)
     return 0
 
