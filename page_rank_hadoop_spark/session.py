@@ -37,6 +37,15 @@ _ROWS_PER_LOOP_PART = 50_000
 _LOOP_LOCK = threading.RLock()
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48g: a local session's
+    JVM heap must leave room for the Python side and for other sessions
+    on the same host. A heap cap above the host's memory lets a few
+    concurrent sessions grow until one JVM is killed."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(total_mb // 2, 48 << 10)}m"
+
+
 def _loop_partitions(
     session_parts: int,
     shuffle_partitions: int | str | None,
@@ -144,7 +153,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.debug.maxToStringFields", "200")
         # 10MB (Spark's default) measured better than 64MB here: the dedup

@@ -10,11 +10,13 @@ into the source text at a stored byte offset (Query.scala:97-101). Our
 ``cli query`` twin compiles the same answer as a Spark JOB (~seconds:
 plan + schedule floor, measured ~52ms minimum even with a prepared
 plan — SCALING.md round-7 serving section). This module is the serving
-lane: Spark writes the term-keyed postings (each row already carrying
-its page's rank and its text's blob location) and the flat text blobs
-ONCE (``build_search_tables``), and ``SearchCursor`` answers a query
-with one ``PointLookupCursor`` footer-stat point read plus a ``pread``
-per top-k page — no Spark job, millisecond class.
+lane: Spark writes the term-keyed postings (one row per term, its
+posting list carrying each page's rank and text blob location — the
+reference's HBase row) and the flat text blobs ONCE
+(``build_search_tables``), and ``SearchCursor`` answers a query with one
+``PointLookupCursor`` footer-stat point read, which decodes one row per
+term, plus a ``pread`` per top-k page — no Spark job, millisecond
+class.
 
 Why client-side scoring is safe at 100 TB: the index keeps the
 reference's ``df < 3000`` bound (invertedIndex.scala:93), so a q-term
@@ -45,14 +47,14 @@ from pyspark.sql import functions as F
 from page_rank_hadoop_spark.sources.serving import PointLookupCursor, write_keyed
 
 META_NAME = "_search_meta.json"
-# what a build_search_tables directory holds and in which row order,
+# what a build_search_tables directory holds and in which order,
 # recorded in its meta; a directory with any other layout must be
-# rebuilt, not guessed at. postings and positions hold each term's rows
-# in doc_id order: the phrase and NEAR kernels read a term's doc ids as
-# an already sorted array
+# rebuilt, not guessed at. postings and positions hold one row per term
+# whose lists are in doc_id order: the phrase and NEAR kernels read a
+# term's doc ids as an already sorted array
 KEY_LAYOUT = {
-    "postings": ["term", "doc_id"],
-    "positions": ["term", "doc_id"],
+    "postings": {"key": "term", "lists": "doc_id"},
+    "positions": {"key": "term", "lists": "doc_id"},
     "blobs": "doc_id",
 }
 
@@ -94,6 +96,18 @@ def _write_blobs(documents: DataFrame, path: str, n_files: int) -> DataFrame:
     )
 
 
+def _per_term(grouped, fields: list[str]) -> DataFrame:
+    """One row per group of (term, …) rows: the group's key columns,
+    then one list column per field, parallel and in ``doc_id`` order
+    (``fields[0]`` is ``doc_id``; a sorted array of structs orders by
+    its first field)."""
+    cols = grouped.agg(
+        F.sort_array(F.collect_list(F.struct(*fields))).alias("_rows")
+    )
+    keys = [c for c in cols.columns if c != "_rows"]
+    return cols.select(*keys, *(F.col("_rows")[f].alias(f) for f in fields))
+
+
 def build_search_tables(
     documents: DataFrame,
     ranks: DataFrame,
@@ -109,9 +123,12 @@ def build_search_tables(
     own parameters so serve time validates instead of trusting the
     caller).
 
-    - ``postings/`` key=``term``, each term's rows in ``doc_id`` order:
-      (term, doc_id, tf, df, idf, pr, blob, off, len) — flat posting
-      rows, df-bounded like the reference index (A6). ``idf`` = ln(N/df)
+    - ``postings/`` key=``term``, ONE ROW PER TERM, the reference's
+      HBase row (``Put(term, ii:df, ii:ii)``, invertedIndex.scala:
+      169-172): (term, df, idf, doc_id[], tf[], pr[], blob[], off[],
+      len[]) — the term's posting list as parallel lists in ``doc_id``
+      order, df-bounded like the reference index (A6), so a term read
+      decodes one row. ``idf`` = ln(N/df)
       is computed BY SPARK at build time and stored as the exact double:
       client-side scoring is then pure IEEE multiply/add (bit-identical
       across JVM/Python), never a second libm ``log`` whose last ulp
@@ -123,14 +140,20 @@ def build_search_tables(
     - ``blobs/``: the document texts as flat UTF-8 files, one per
       ``doc_id`` range partition (``_write_blobs``) — a snippet is one
       bounded read at a stored byte offset, the reference's seek.
-    - ``positions/`` key=``term``, each term's rows in ``doc_id`` order:
-      (term, doc_id, positions) — the POSITIONAL posting rows (sorted
-      0-based token positions per (term, doc)), df-bounded like the
-      flat postings. This is what the reference's per-occurrence
-      position storage
+    - ``positions/`` key=``term``, one row per term: (term, doc_id[],
+      positions[][]) — the POSITIONAL posting list (sorted 0-based
+      token positions per doc, docs in ``doc_id`` order), df-bounded
+      like the flat postings. This is what the reference's
+      per-occurrence position storage
       (Writables.scala:24-44) exists for: phrase and NEAR/k queries
       (Q1-adjacent interactive asks) served as point reads + client
       array algebra — round 9, judge r8 item 1.
+
+    Both tables are built as ``groupBy(term)`` over
+    ``sort_array(collect_list(struct(doc_id, …)))`` split into parallel
+    columns (``_per_term``, SURVEY A6/S5 in Spark form), and
+    ``write_keyed`` closes a row group by size after any row, so a term
+    read decodes the one group that holds its row.
 
     ``ranks`` must be (doc_id, pr). ``tf`` optionally reuses a prebuilt
     ``term_frequencies`` MV (positions dropped here — scoring needs tf
@@ -154,23 +177,17 @@ def build_search_tables(
     # the df-bounded (term, doc) rows feed both postings and positions:
     # one snapshot computes tf and df once instead of once per table
     bounded = tf.join(df_from_tf(tf, cutoff), "term").localCheckpoint()
-    postings = bounded.join(
-        ranks.select("doc_id", "pr").join(located, "doc_id"), "doc_id"
-    ).select(
-        "term",
-        "doc_id",
-        "tf",
-        "df",
-        F.log(F.lit(float(n_docs)) / F.col("df")).alias("idf"),
-        "pr",
-        "blob",
-        "off",
-        "len",
+    rows = bounded.join(ranks.select("doc_id", "pr").join(located, "doc_id"), "doc_id")
+    postings = _per_term(
+        rows.groupBy(
+            "term", "df", F.log(F.lit(float(n_docs)) / F.col("df")).alias("idf")
+        ),
+        ["doc_id", "tf", "pr", "blob", "off", "len"],
     )
     write_keyed(
         postings,
         os.path.join(out_dir, "postings"),
-        KEY_LAYOUT["postings"],
+        KEY_LAYOUT["postings"]["key"],
         n_files=n_files,
     )
     # positional postings: one extra token-stream pass (positions can't
@@ -183,9 +200,9 @@ def build_search_tables(
         .join(bounded.select("term", "doc_id"), ["term", "doc_id"], "left_semi")
     )
     write_keyed(
-        positional,
+        _per_term(positional.groupBy("term"), ["doc_id", "positions"]),
         os.path.join(out_dir, "positions"),
-        KEY_LAYOUT["positions"],
+        KEY_LAYOUT["positions"]["key"],
         n_files=n_files,
     )
     meta = {
@@ -708,17 +725,22 @@ class SearchCursor:
         self._blobs = self._list_blobs()
 
     def _term_positions(self, term: str):
-        """(doc_ids, positions) of one term from one positional point
-        read: its doc ids as a sorted int64 array and the aligned
-        ``list`` array of its sorted token positions (``KEY_LAYOUT``:
-        the build writes a term's rows in ``doc_id`` order)."""
+        """(doc_ids, positions) of one term from its one positional row:
+        its doc ids as a sorted int64 array and the aligned ``list``
+        array of its sorted token positions (``KEY_LAYOUT``: the build
+        writes a term's lists in ``doc_id`` order)."""
+        import pyarrow.compute as pc
+
         if self._positions is None:
             raise ValueError(
                 "SearchCursor: this index has no positions/ table — rebuild "
                 "with round-9 build_search_tables to serve phrase/NEAR queries"
             )
-        tbl = self._positions.lookup([term])
-        return tbl["doc_id"].to_numpy(), tbl["positions"].combine_chunks()
+        row = self._positions.lookup([term])
+        return (
+            pc.list_flatten(row["doc_id"]).to_numpy(),
+            pc.list_flatten(row["positions"]).combine_chunks(),
+        )
 
     def phrase(self, phrase: list[str]) -> list[dict]:
         """Exact adjacent-phrase matches: [{doc_id, phrase_tf,
@@ -800,21 +822,37 @@ class SearchCursor:
         ]
 
     def _top(self, terms: list[str], k: int | None) -> list[dict]:
-        """The top ``k`` postings rows of ``terms`` (all for ``k=None``),
-        each with its 6dp ``score``, ordered by (score desc, term,
-        doc_id). Scoring is columnar; only the rows that can reach the
-        top ``k`` are rounded and become dicts (``_round6_topk``)."""
+        """The top ``k`` postings of ``terms`` (all for ``k=None``), each
+        a dict of its term, doc_id, 6dp ``score`` and text location,
+        ordered by (score desc, term, doc_id). Each term's row is
+        flattened to numpy and scored columnar; only the postings that
+        can reach the top ``k`` are rounded and become dicts
+        (``_round6_topk``)."""
+        import numpy as np
+        import pyarrow.compute as pc
+
         m = self.meta
-        post = self._postings.lookup(terms)
+        rows = self._postings.lookup(terms)
+        n = pc.list_value_length(rows["doc_id"]).to_numpy()
+        flat = {
+            c: pc.list_flatten(rows[c]).to_numpy()
+            for c in ("doc_id", "tf", "pr", "blob", "off", "len")
+        }
         # stored idf and pr keep this pure IEEE arithmetic — the
         # operation order of index.tfidf_scores' expression, one element
-        # at a time
-        tf, idf, pr = (post[c].to_numpy() for c in ("tf", "idf", "pr"))
-        raw = (m["w_tfidf"] * tf) * idf + m["w_pr"] * pr
+        # at a time; idf is stored once per term and repeated per posting
+        idf = np.repeat(rows["idf"].to_numpy(), n)
+        raw = (m["w_tfidf"] * flat["tf"]) * idf + m["w_pr"] * flat["pr"]
         idx, scores = _round6_topk(raw, k, largest=True)
-        top = post.take(idx).to_pylist()
-        for r, sc in zip(top, scores):
-            r["score"] = sc
+        owner = np.repeat(np.arange(n.size), n)[idx]
+        keys = ("term", "doc_id", "score", "blob", "off", "len")
+        vals = (
+            rows["term"].to_numpy(zero_copy_only=False)[owner].tolist(),
+            flat["doc_id"][idx].tolist(),
+            scores,
+            *(flat[c][idx].tolist() for c in keys[3:]),
+        )
+        top = [dict(zip(keys, v)) for v in zip(*vals)]
         top.sort(key=lambda r: (-r["score"], r["term"], r["doc_id"]))
         return top[:k] if k is not None else top
 

@@ -30,16 +30,13 @@ ROW_GROUP_BYTES = 64 * 1024
 def write_keyed(
     df: DataFrame,
     path: str,
-    key: str | list[str],
+    key: str,
     n_files: int | None = None,
 ) -> None:
     """Write ``df`` as a key-ordered parquet serving table.
 
-    ``key`` is the lookup column, or a list whose first entry is the
-    lookup column and whose rest orders the rows of one key (the search
-    build writes each term's rows in ``doc_id`` order).
-    ``repartitionByRange`` on the lookup column gives disjoint key ranges
-    per file, so all rows of one key land in one file, and
+    ``repartitionByRange`` on ``key`` gives disjoint key ranges per
+    file, so all rows of one key land in one file, and
     ``sortWithinPartitions`` orders rows inside each file so row-group
     stats are tight. n_files defaults to Spark's range-partition
     estimate; pin it for stable file counts in tests.
@@ -47,26 +44,34 @@ def write_keyed(
     Row groups are capped at ``ROW_GROUP_BYTES`` (``parquet.block.
     size``), far below the 128 MB default: ``PointLookupCursor`` prunes
     and decodes at row-group granularity, so a small group means a key
-    read decodes little beyond the key's own rows (one key's run spans
-    whole groups plus at most two shared boundary groups). The cost is
-    a larger footer and more groups per scan — the HBase block-size
-    tradeoff (reference S4/S5) in parquet terms.
+    read decodes little beyond the key's own rows. parquet-hadoop
+    checks a group's size after the first 100 rows and then at an
+    estimated halfway point, so a table of a few large rows (the search
+    build's one row per term) would stay one group per file; checking
+    after every row (``parquet.page.size.row.check.min`` and ``.max``
+    at 1) closes a group as soon as it reaches the cap. A row at or
+    above the cap then ends its group, small rows pack into one group
+    up to the cap, and the footer grows with the data bytes, not with
+    the number of keys. The cost is a larger footer and more groups per
+    scan — the HBase block-size tradeoff (reference S4/S5) in parquet
+    terms.
 
     The range partitioner samples its input in a job of its own, but
     under AQE the input's shuffle stages run once and both the sample
     and the write read their output; only the stage after the last
     shuffle runs twice. A ``localCheckpoint`` of the input measured no
     faster and cost two more jobs, so there is none."""
-    keys = [key] if isinstance(key, str) else list(key)
     parted = (
-        df.repartitionByRange(n_files, keys[0])
+        df.repartitionByRange(n_files, key)
         if n_files
-        else df.repartitionByRange(keys[0])
+        else df.repartitionByRange(key)
     )
     (
-        parted.sortWithinPartitions(*keys)
+        parted.sortWithinPartitions(key)
         .write.mode("overwrite")
         .option("parquet.block.size", ROW_GROUP_BYTES)
+        .option("parquet.page.size.row.check.min", 1)
+        .option("parquet.page.size.row.check.max", 1)
         .parquet(path)
     )
 
@@ -243,10 +248,11 @@ class PointLookupCursor:
     cached [min, max] intersect the probe set. A group whose min == max
     and whose null count is 0 holds nothing but a probed key and is kept
     whole as a zero-copy slice; only the groups shared with other keys
-    (on a ``write_keyed`` table, the two ends of a key's run) or with
-    null keys go through a vectorized ``is_in`` filter, and a single
-    matching part is returned without a ``concat_tables``. No row becomes a Python object unless the caller
-    asks (``.to_pylist()`` is the dict shape).
+    (on the search tables' one row per term, a group of several small
+    terms, or small terms packed before a large one) or with null keys
+    go through a vectorized ``is_in`` filter, and a single matching part
+    is returned without a ``concat_tables``. No row becomes a Python
+    object unless the caller asks (``.to_pylist()`` is the dict shape).
     Probe keys may be a list or a numpy array, so a multi-thousand-id
     probe stays columnar too.
     Handles are kept for up to ``MAX_OPEN_FILES`` files and opened on

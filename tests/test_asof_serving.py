@@ -345,6 +345,47 @@ def test_write_keyed_row_group_cap_tightens_cursor_pruning(spark, tmp_path):
     assert got == want and len(got) == 3
 
 
+def test_write_keyed_closes_a_group_at_each_row_over_the_cap(spark, tmp_path, monkeypatch):
+    """write_keyed checks the group size after every row: a table of a
+    few large rows (each over ROW_GROUP_BYTES) among many small ones gets
+    no group holding two large rows, each large row ends its group, the
+    small rows pack up to the cap (far fewer groups than rows), and a
+    lookup of a large key decodes only its group."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from page_rank_hadoop_spark.sources.serving import PointLookupCursor, write_keyed
+
+    big = F.col("id") % 10 == 5
+    df = spark.range(100).select(
+        F.format_string("k%03d", "id").alias("term"),
+        F.when(big, F.sequence(F.lit(0), F.lit(20_000))).otherwise(F.array("id")).alias("ids"),
+    )
+    path = str(tmp_path / "serve_big")
+    write_keyed(df, path, "term", n_files=1)
+    (name,) = [n for n in os.listdir(path) if n.endswith(".parquet")]
+    t = pq.ParquetFile(os.path.join(path, name))
+    large = {f"k{i:03d}" for i in range(5, 100, 10)}
+    ends = []
+    for g in range(t.metadata.num_row_groups):
+        keys = t.read_row_group(g, columns=["term"])["term"].to_pylist()
+        assert len(large.intersection(keys)) <= 1, keys
+        ends.append(keys[-1])
+    assert large <= set(ends)
+    assert len(ends) <= len(large) + 1
+    reads = []
+    real = pq.ParquetFile.read_row_groups
+    monkeypatch.setattr(
+        pq.ParquetFile, "read_row_groups",
+        lambda pf, rgs, **kw: reads.append(rgs) or real(pf, rgs, **kw),
+    )
+    rows = PointLookupCursor(path, "term").lookup(["k055"]).to_pylist()
+    assert reads == [[ends.index("k055")]]
+    assert [(r["term"], len(r["ids"])) for r in rows] == [("k055", 20_001)]
+
+
 def test_point_lookup_cursor_empty_table_returns_empty(spark, tmp_path):
     """Round 9 (ADVICE r8): Spark writes a ZERO-row-group part file for
     an empty table; the cursor must return [] on every lookup instead

@@ -28,8 +28,8 @@ def search_dir(spark):
         d,
         cutoff=10**9,  # q_tfidf_score disables the df bound
         tf=registry._tf_slim(spark, SF001),
-        # two files, so each holds several row groups at sf0.01 and the
-        # cursor reads cross shared boundary groups
+        # two files, so each holds several row groups of a few terms at
+        # sf0.01 and lookups read groups shared by several terms
         n_files=2,
     )
     yield d
@@ -239,11 +239,23 @@ def _round6_ref(x):
     return float(Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
+def _flat(row):
+    """One stored term row as its per-doc rows: the term's scalars
+    repeated, its parallel list columns zipped."""
+    lists = [c for c, v in row.items() if isinstance(v, list)]
+    return [
+        {**{c: v for c, v in row.items() if c not in lists}, **dict(zip(lists, vals))}
+        for vals in zip(*(row[c] for c in lists))
+    ]
+
+
 def _rows(table_dir, key, values):
     import pyarrow.parquet as pq
 
     want = set(values)
-    return [r for r in pq.read_table(table_dir).to_pylist() if r[key] in want]
+    return [
+        r for row in pq.read_table(table_dir).to_pylist() if row[key] in want for r in _flat(row)
+    ]
 
 
 def _meta(d):
@@ -276,9 +288,10 @@ def _blob_texts(d):
     files = {int(n.split("-")[1]): os.path.join(blob_dir, n)
              for n in os.listdir(blob_dir) if n.startswith("part-")}
     out = {}
-    for r in pq.read_table(os.path.join(d, "postings")).to_pylist():
-        with open(files[r["blob"]], "rb") as fh:
-            out[r["doc_id"]] = fh.read()[r["off"] : r["off"] + r["len"]].decode("utf-8")
+    for row in pq.read_table(os.path.join(d, "postings")).to_pylist():
+        for r in _flat(row):
+            with open(files[r["blob"]], "rb") as fh:
+                out[r["doc_id"]] = fh.read()[r["off"] : r["off"] + r["len"]].decode("utf-8")
     return out
 
 
@@ -323,26 +336,38 @@ def _typed(rows):
     return [[(k, v, type(v)) for k, v in r.items()] for r in rows]
 
 
-def _write_table(d, rows, schema, keys):
+def _write_table(d, rows, schema, group_rows=2):
+    """Write flat per-doc rows as the build does: one row per term, its
+    per-doc values as parallel lists in doc_id order, terms sorted, in
+    two files of ``group_rows``-row groups."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(d)
-    rows = sorted(rows, key=lambda r: tuple(r[k] for k in keys))
-    half = len(rows) // 2  # two files, several row groups each
-    for i, part in enumerate((rows[:half], rows[half:])):
+    lists = [f.name for f in schema if pa.types.is_list(f.type)]
+    by_term = {}
+    for r in sorted(rows, key=lambda r: (r["term"], r["doc_id"])):
+        if r["term"] not in by_term:
+            by_term[r["term"]] = {**{c: r[c] for c in schema.names if c not in lists},
+                                  **{c: [] for c in lists}}
+        for c in lists:
+            by_term[r["term"]][c].append(r[c])
+    terms = list(by_term.values())
+    half = len(terms) // 2
+    for i, part in enumerate((terms[:half], terms[half:])):
         pq.write_table(
             pa.Table.from_pylist(part, schema=schema),
             os.path.join(d, f"part-{i:05d}.parquet"),
-            row_group_size=3,
+            row_group_size=group_rows,
         )
 
 
-def _write_search_dir(root, postings, ranks, docs, positions):
+def _write_search_dir(root, postings, ranks, docs, positions, group_rows=2):
     """A hand-written build_search_tables directory (pyarrow, no Spark)
     with the column types the Spark build writes: postings carry the
     page's rank (inner join, so unranked pages drop out) and its text
-    location in two blob files; rows are in the ``KEY_LAYOUT`` order."""
+    location in two blob files; one row per term, as ``KEY_LAYOUT``
+    names."""
     import json
 
     import pyarrow as pa
@@ -368,20 +393,21 @@ def _write_search_dir(root, postings, ranks, docs, positions):
         [{**p, "pr": prs[p["doc_id"]], **where[p["doc_id"]]}
          for p in postings if p["doc_id"] in prs],
         pa.schema(
-            [("term", pa.string()), ("doc_id", pa.int64()), ("tf", pa.int64()),
-             ("df", pa.int64()), ("idf", pa.float64()), ("pr", pa.float64()),
-             ("blob", pa.int32()), ("off", pa.int64()), ("len", pa.int32())]
+            [("term", pa.string()), ("df", pa.int32()), ("idf", pa.float64()),
+             ("doc_id", pa.list_(pa.int64())), ("tf", pa.list_(pa.int32())),
+             ("pr", pa.list_(pa.float64())), ("blob", pa.list_(pa.int32())),
+             ("off", pa.list_(pa.int64())), ("len", pa.list_(pa.int32()))]
         ),
-        KEY_LAYOUT["postings"],
+        group_rows,
     )
     _write_table(
         os.path.join(root, "positions"),
         positions,
         pa.schema(
-            [("term", pa.string()), ("doc_id", pa.int64()),
-             ("positions", pa.list_(pa.int32()))]
+            [("term", pa.string()), ("doc_id", pa.list_(pa.int64())),
+             ("positions", pa.list_(pa.list_(pa.int32())))]
         ),
-        KEY_LAYOUT["positions"],
+        group_rows,
     )
     meta = {"n_docs": len(docs), "cutoff": 10**9, "w_tfidf": 0.5, "w_pr": 0.5,
             "key_layout": KEY_LAYOUT}
@@ -504,31 +530,30 @@ def test_phrase_exact_for_wide_doc_ids(tmp_path):
 
 def test_lookup_returns_arrow_table(search_dir):
     """PointLookupCursor.lookup returns one Arrow table: an empty one
-    with the file schema on a miss, and the same rows for a numpy key
-    array as for the equivalent list."""
+    with the file schema on a miss, and the same term rows for a numpy
+    key array as for the equivalent list."""
     import numpy as np
     import pyarrow.parquet as pq
 
     from page_rank_hadoop_spark.sources.search import SearchCursor
-    from page_rank_hadoop_spark.sources.serving import PointLookupCursor
 
     cur = SearchCursor(search_dir)
     post_dir = os.path.join(search_dir, "postings")
     miss = cur._postings.lookup(["absent-term"])
     assert miss.num_rows == 0
-    assert miss.schema.names == ["term", "doc_id", "tf", "df", "idf", "pr", "blob", "off", "len"]
-    by_doc = PointLookupCursor(post_dir, "doc_id")
-    assert by_doc.lookup(np.array([], dtype="int64")).num_rows == 0
-    assert by_doc.lookup([]).schema.equals(pq.read_schema(
+    assert miss.schema.names == ["term", "df", "idf", "doc_id", "tf", "pr", "blob", "off", "len"]
+    assert cur._postings.lookup(np.array([], dtype=object)).num_rows == 0
+    assert cur._postings.lookup([]).schema.equals(pq.read_schema(
         os.path.join(post_dir, sorted(f for f in os.listdir(post_dir) if f.endswith(".parquet"))[0])
     ))
-    ids = [r["doc_id"] for r in cur.search(["spark"], k=25)]
-    as_list = by_doc.lookup(ids).to_pylist()
-    as_array = by_doc.lookup(np.asarray(ids[::-1] + ids, dtype="int64")).to_pylist()
-    key = lambda r: (r["term"], r["doc_id"])  # noqa: E731
+    terms = _vocabulary(search_dir)[::3] + ["absent-term"]
+    as_list = cur._postings.lookup(terms).to_pylist()
+    as_array = cur._postings.lookup(np.asarray(terms[::-1] + terms, dtype=object)).to_pylist()
     assert as_list == as_array
-    assert sorted(as_list, key=key) == sorted(_rows(post_dir, "doc_id", ids), key=key)
-    assert {r["doc_id"] for r in as_list} == set(ids)
+    assert [r for row in as_list for r in _flat(row)] == sorted(
+        _rows(post_dir, "term", terms), key=lambda r: (r["term"], r["doc_id"])
+    )
+    assert [r["term"] for r in as_list] == sorted(set(terms) - {"absent-term"})
 
 
 def test_snippet_search_rounds_only_reachable_rows(search_dir, monkeypatch):
@@ -657,10 +682,11 @@ def test_blob_index_of_empty_corpus_answers_nothing(spark, tmp_path):
 
 
 def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
-    """A directory written by the postings/ranks/docs build, or by the
+    """A directory written by the postings/ranks/docs build, by the
     build that keyed postings and positions by term alone (its rows not
-    in the doc_id order the phrase and NEAR kernels rely on), is refused
-    with a rebuild request, not served."""
+    in the doc_id order the phrase and NEAR kernels rely on), or by the
+    build that wrote one row per (term, doc_id) is refused with a
+    rebuild request, not served."""
     import json
 
     from page_rank_hadoop_spark.sources.search import META_NAME, SearchCursor
@@ -675,6 +701,12 @@ def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
     with pytest.raises(ValueError, match="rebuild"):
         SearchCursor(old)
     meta["key_layout"] = {"postings": "term", "positions": "term", "blobs": "doc_id"}
+    with open(os.path.join(old, META_NAME), "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="rebuild"):
+        SearchCursor(old)
+    meta["key_layout"] = {"postings": ["term", "doc_id"], "positions": ["term", "doc_id"],
+                          "blobs": "doc_id"}
     with open(os.path.join(old, META_NAME), "w") as fh:
         json.dump(meta, fh)
     with pytest.raises(ValueError, match="rebuild"):
@@ -717,23 +749,34 @@ def _part_files(d):
     return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
 
 
-def test_keyed_tables_have_term_sized_row_groups(search_dir):
-    """Every postings/ and positions/ file holds several row groups, and
-    each file's rows are in (term, doc_id) order."""
+def test_keyed_tables_hold_one_row_per_term(search_dir):
+    """postings/ and positions/ hold one row per distinct term, terms in
+    order across the files, each row's doc_id list strictly ascending
+    and its parallel lists as long; every file holds several row groups
+    (write_keyed closes a group by size after any row)."""
+    import numpy as np
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     for table in ("postings", "positions"):
+        terms = []
         for fp in _part_files(os.path.join(search_dir, table)):
-            assert pq.ParquetFile(fp).metadata.num_row_groups > 1, fp
-            t = pq.read_table(fp, columns=["term", "doc_id"]).to_pylist()
-            keys = [(r["term"], r["doc_id"]) for r in t]
-            assert keys == sorted(keys) and len(set(keys)) == len(keys), fp
+            pf = pq.ParquetFile(fp)
+            assert pf.metadata.num_row_groups > 1, fp
+            t = pf.read()
+            terms += t["term"].to_pylist()
+            n = pc.list_value_length(t["doc_id"])
+            for c in t.column_names[t.column_names.index("doc_id"):]:
+                assert pc.list_value_length(t[c]).equals(n), (fp, c)
+            for ids in t["doc_id"].to_pylist():
+                assert ids and (np.diff(ids) > 0).all(), fp
+        assert terms == sorted(set(terms)) and len(terms) > 3, table
 
 
-def test_term_lookup_decodes_its_rows_plus_two_boundary_groups(search_dir, monkeypatch):
-    """A single-term lookup reads one file, once, and decodes at most the
-    term's own rows plus the two boundary groups it shares with its
-    neighbours — counted, as the benchmark's probe counts, by wrapping
+def test_term_lookup_decodes_only_its_group(search_dir, monkeypatch):
+    """A single-term lookup makes one read_row_groups call, decodes only
+    the row group that holds the term's row and returns that one row —
+    counted, as the benchmark's probe counts, by wrapping
     ParquetFile.read_row_groups."""
     import pyarrow.parquet as pq
 
@@ -751,18 +794,14 @@ def test_term_lookup_decodes_its_rows_plus_two_boundary_groups(search_dir, monke
     cur = SearchCursor(search_dir)
     for table in ("postings", "positions"):
         lk = getattr(cur, f"_{table}")
-        sizes = {
-            e["fp"]: sorted((n for *_, n in e["rgs"]), reverse=True) for e in lk._files
-        }
-        fewer = 0
+        groups = [g for e in lk._files for g in e["rgs"]]
         for term in _vocabulary(search_dir):
             reads.clear()
-            kept = lk.lookup([term]).num_rows
-            assert len(reads) == 1, (table, term, reads)
-            fp = next(e["fp"] for e in lk._files if e["lo"] <= term <= e["hi"])
-            assert reads[0] <= kept + sum(sizes[fp][:2]), (table, term)
-            fewer += reads[0] < sum(sizes[fp])
-        assert fewer > len(_vocabulary(search_dir)) // 2, table
+            got = lk.lookup([term])
+            (home,) = [n for lo, hi, _, _, n in groups if lo <= term <= hi]
+            assert reads == [home], (table, term, reads)
+            assert got["term"].to_pylist() == [term], (table, term)
+        assert len(groups) < len(_vocabulary(search_dir)), table
 
 
 def test_phrase_and_near_parity_with_row_oracles(search_dir):
@@ -783,6 +822,61 @@ def test_phrase_and_near_parity_with_row_oracles(search_dir):
             ), (a, b, k)
     for p in ([terms[1], terms[1]], terms[:3], [terms[2], "absent-term", terms[2]]):
         assert _typed(cur.phrase(p)) == _typed(_oracle_phrase(search_dir, p)), p
+
+
+def test_small_terms_sharing_a_group_with_a_large_term(tmp_path):
+    """A hand-written index whose row groups mix small terms with a large
+    one ("big" is in every page and shares its group with "a" and "b"):
+    search, snippets, phrase and near equal the row oracles for every
+    term and ordered pair, and a lookup returns exactly its terms' rows
+    whether they form one run of the shared group or not."""
+    import math
+
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    small = ["a", "b", "c", "d", "e", "f", "g"]
+    words = {}
+    for doc in range(1, 301):
+        w = ["big"]
+        for i, t in enumerate(small):
+            if doc % (i + 7) == 0:
+                w += [t, "big"] if i % 2 else ["big", t]
+        words[doc] = w
+    tf = {}
+    for doc, w in words.items():
+        for pos, t in enumerate(w):
+            tf.setdefault(t, {}).setdefault(doc, []).append(pos)
+    postings = [
+        {"term": t, "doc_id": doc, "tf": len(p), "df": len(by_doc),
+         "idf": math.log(len(words) / len(by_doc))}
+        for t, by_doc in tf.items() for doc, p in by_doc.items()
+    ]
+    positions = [
+        {"term": t, "doc_id": doc, "positions": p}
+        for t, by_doc in tf.items() for doc, p in by_doc.items()
+    ]
+    ranks = [{"doc_id": doc, "pr": 1.0 / (doc % 7 + 2)} for doc in words]
+    texts = [{"doc_id": doc, "text": " ".join(w)} for doc, w in words.items()]
+    root = _write_search_dir(str(tmp_path / "idx"), postings, ranks, texts, positions,
+                             group_rows=3)
+    cur = SearchCursor(root)
+    for lk in (cur._postings, cur._positions):
+        (shared,) = [g for e in lk._files for g in e["rgs"] if g[0] <= "big" <= g[1]]
+        assert shared[:2] == ("a", "big") and shared[4] == 3
+        for probe in (["big"], ["a", "big"], ["b", "big"], ["big", "c"], ["a", "b", "big"]):
+            assert lk.lookup(probe)["term"].to_pylist() == sorted(probe), probe
+    terms = sorted(tf)
+    for t in terms + ["absent-term"]:
+        for k in (0, 1, 10, None):
+            assert _typed(cur.search([t], k=k)) == _typed(_oracle_search(root, [t], k)), (t, k)
+        assert _typed(cur.search_with_snippets(t, k=10)) == _typed(
+            _oracle_snippets(root, t, 10)
+        ), t
+        for u in terms + ["absent-term"]:
+            assert _typed(cur.phrase([t, u])) == _typed(_oracle_phrase(root, [t, u])), (t, u)
+            assert _typed(cur.near(t, u)) == _typed(_oracle_near(root, t, u)), (t, u)
+    assert _typed(cur.search(terms, k=25)) == _typed(_oracle_search(root, terms, 25))
+    assert cur.phrase(["big", "a"]) and cur.phrase(["b", "big"]) and cur.near("a", "big", 1)
 
 
 def _spark_answers(documents, ranks, term, phrase, pair):
