@@ -189,6 +189,9 @@ def pregel(
         if send_to_src is not None:
             e_by_dst = edges.repartition(parts, "dst").persist(StorageLevel.MEMORY_AND_DISK)
         deltas: list[float] = []
+        # the per-round constant Columns, built once for the loop
+        front = F.col(frontier_col) if frontier_col is not None else None
+        dst_id, src_id = F.col("dst").alias("id"), F.col("src").alias("id")
         i = 0
         try:
             while i < limit:
@@ -196,11 +199,7 @@ def pregel(
                 # frontier mode: only frontier rows PROBE the edge table;
                 # the filter preserves the id-partitioning, so the join
                 # stays exchange-free and shrinks with the frontier
-                sender = (
-                    state.filter(F.col(frontier_col))
-                    if frontier_col is not None
-                    else state
-                )
+                sender = state.filter(front) if front is not None else state
                 # shuffled-hash joins building the state / message side:
                 # both inputs are already partitioned at P, so no exchange,
                 # and the planner cannot broadcast the edge frame (a
@@ -209,14 +208,14 @@ def pregel(
                 if send_to_dst is not None:
                     msgs = e_by_src.join(
                         sender.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
-                    ).select(F.col("dst").alias("id"), *send_to_dst)
+                    ).select(dst_id, *send_to_dst)
                     joined = joined.join(
                         _aggregate(msgs, agg_to_dst).hint("shuffle_hash"), "id", "left"
                     )
                 if send_to_src is not None:
                     msgs = e_by_dst.join(
                         sender.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst"
-                    ).select(F.col("src").alias("id"), *send_to_src)
+                    ).select(src_id, *send_to_src)
                     joined = joined.join(
                         _aggregate(msgs, agg_to_src).hint("shuffle_hash"), "id", "left"
                     )
@@ -226,7 +225,7 @@ def pregel(
                 prev, state = state, new_state
                 if frontier_col is not None:
                     # empty frontier = unanimous halt
-                    n_front = state.filter(F.col(frontier_col)).count()
+                    n_front = state.filter(front).count()
                     deltas.append(float(n_front))
                     if n_front == 0:
                         break
@@ -273,16 +272,13 @@ def pagerank_pregel(
         F.size("links").cast("double").alias("out_deg"),
     )
     edges = adj.select(F.col("id").alias("src"), F.explode("links").alias("dst"))
+    damped = (
+        F.lit(alpha) * (1.0 / n)
+        + F.lit(1.0 - alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
+    ).alias("pr")
 
     def update(joined: DataFrame) -> DataFrame:
-        return joined.select(
-            "id",
-            (
-                F.lit(alpha) * (1.0 / n)
-                + F.lit(1.0 - alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-            ).alias("pr"),
-            "out_deg",
-        )
+        return joined.select("id", damped, "out_deg")
 
     res = pregel(
         vertices=verts,

@@ -16,7 +16,13 @@ reference's HBase row) and the flat text blobs ONCE
 (``build_search_tables``), and ``SearchCursor`` answers a query with one
 ``PointLookupCursor`` footer-stat point read, which decodes one row per
 term, plus a ``pread`` per top-k page — no Spark job, millisecond
-class.
+class. Phrase and NEAR queries read the term-keyed ``positions/`` rows,
+which store each occurrence as a global token offset (document base +
+position, one empty offset between documents), so a phrase is one
+sorted intersection of the terms' offset lists and NEAR one
+``searchsorted`` between two of them. Both tables are written as
+delta-packed parquet v2 pages (``write_keyed``): what a read costs is
+the decode of one row's lists at a few bits per value.
 
 Why client-side scoring is safe at 100 TB: the index keeps the
 reference's ``df < 3000`` bound (invertedIndex.scala:93), so a q-term
@@ -36,6 +42,7 @@ paths (the pregel-twin precedent).
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 import os
@@ -50,11 +57,12 @@ META_NAME = "_search_meta.json"
 # what a build_search_tables directory holds and in which order,
 # recorded in its meta; a directory with any other layout must be
 # rebuilt, not guessed at. postings and positions hold one row per term
-# whose lists are in doc_id order: the phrase and NEAR kernels read a
-# term's doc ids as an already sorted array
+# whose lists are in doc_id order; a positions row holds one sorted list
+# of global token offsets (doc base + position), which the phrase and
+# NEAR kernels intersect and search as they are
 KEY_LAYOUT = {
     "postings": {"key": "term", "lists": "doc_id"},
-    "positions": {"key": "term", "lists": "doc_id"},
+    "positions": {"key": "term", "lists": "doc_id", "offsets": "global"},
     "blobs": "doc_id",
 }
 
@@ -62,9 +70,10 @@ KEY_LAYOUT = {
 def _write_blobs(documents: DataFrame, path: str, n_files: int) -> DataFrame:
     """Write every document's text (null as "") as UTF-8 into flat blob
     files, one per ``doc_id`` range partition, and return each
-    document's location (doc_id, blob, off, len): the text is the
-    ``len`` bytes at byte offset ``off`` of ``part-<blob>-*.txt`` under
-    ``path``.
+    document's location (doc_id, blob, off, len) and global token
+    ``base``: the text is the ``len`` bytes at byte offset ``off`` of
+    ``part-<blob>-*.txt`` under ``path``, and the token at position p
+    has the global offset ``base + p``.
 
     The executors write the files with Spark's text writer (each row's
     bytes plus a newline; file ``part-<i>`` holds partition i in row order),
@@ -72,7 +81,18 @@ def _write_blobs(documents: DataFrame, path: str, n_files: int) -> DataFrame:
     re-samples its bounds on every execution, so the write and the
     offset scan both read one checkpointed snapshot. The locations are
     checkpointed too, or their offset window would run again in every
-    job that reads them."""
+    job that reads them.
+
+    Bases ascend in ``doc_id`` order and a document spans its token
+    count + 1 offsets (its max position + 2), so one empty offset
+    separates consecutive documents and no run of consecutive offsets
+    crosses a document boundary. They are a distributed prefix sum:
+    the same per-partition window as the byte offsets gives each
+    document its base within its partition, and the driver adds the
+    token totals of the partitions before it (one small aggregate, one
+    value per partition)."""
+    from page_rank_hadoop_spark.functions.text import token_count
+
     ranged = (
         documents.select("doc_id", F.coalesce("text", F.lit("")).alias("text"))
         .repartitionByRange(n_files, "doc_id")
@@ -80,20 +100,33 @@ def _write_blobs(documents: DataFrame, path: str, n_files: int) -> DataFrame:
         .localCheckpoint()
     )
     ranged.select("text").write.mode("overwrite").option("compression", "none").text(path)
+    in_blob = Window.partitionBy("blob").orderBy("row")
     stored = F.col("len") + 1  # the writer's line separator
-    return (
+    span = F.col("span")
+    local = (
         ranged.select(
             "doc_id",
             F.spark_partition_id().alias("blob"),
             F.monotonically_increasing_id().alias("row"),
             F.octet_length("text").alias("len"),
+            (token_count("text") + 1).alias("span"),
         )
-        .withColumn(
-            "off", F.sum(stored).over(Window.partitionBy("blob").orderBy("row")) - stored
+        .select(
+            "doc_id",
+            "blob",
+            (F.sum(stored).over(in_blob) - stored).alias("off"),
+            "len",
+            "span",
+            (F.sum(span).over(in_blob) - span).alias("base"),
         )
-        .drop("row")
         .localCheckpoint()
     )
+    totals = dict(local.groupBy("blob").agg(F.sum("span")).collect())
+    firsts = itertools.accumulate(
+        (totals.get(b, 0) for b in range(max(totals, default=0))), initial=0
+    )
+    first = F.element_at(F.array(*map(F.lit, firsts)), F.col("blob") + 1)
+    return local.select("doc_id", "blob", "off", "len", (F.col("base") + first).alias("base"))
 
 
 def _per_term(grouped, fields: list[str]) -> DataFrame:
@@ -141,19 +174,22 @@ def build_search_tables(
       ``doc_id`` range partition (``_write_blobs``) — a snippet is one
       bounded read at a stored byte offset, the reference's seek.
     - ``positions/`` key=``term``, one row per term: (term, doc_id[],
-      positions[][]) — the POSITIONAL posting list (sorted 0-based
-      token positions per doc, docs in ``doc_id`` order), df-bounded
-      like the flat postings. This is what the reference's
-      per-occurrence position storage
+      base[], offsets[]) — the POSITIONAL posting list, df-bounded like
+      the flat postings: the term's docs in ``doc_id`` order, each
+      doc's global token base (``_write_blobs``), and one flat sorted
+      list of the term's GLOBAL token offsets (base + 0-based position).
+      This is what the reference's per-occurrence position storage
       (Writables.scala:24-44) exists for: phrase and NEAR/k queries
-      (Q1-adjacent interactive asks) served as point reads + client
-      array algebra — round 9, judge r8 item 1.
+      (Q1-adjacent interactive asks) served as point reads + one
+      sorted intersection over the stored offsets.
 
     Both tables are built as ``groupBy(term)`` over
     ``sort_array(collect_list(struct(doc_id, …)))`` split into parallel
     columns (``_per_term``, SURVEY A6/S5 in Spark form), and
     ``write_keyed`` closes a row group by size after any row, so a term
-    read decodes the one group that holds its row.
+    read decodes the one group that holds its row. Its pages are
+    delta-packed (``write_keyed``), so a sorted id or offset list
+    decodes from a few bits per value.
 
     ``ranks`` must be (doc_id, pr). ``tf`` optionally reuses a prebuilt
     ``term_frequencies`` MV (positions dropped here — scoring needs tf
@@ -196,11 +232,22 @@ def build_search_tables(
     positional = (
         token_stream(documents)
         .groupBy("term", "doc_id")
-        .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
+        .agg(F.sort_array(F.collect_list("pos")).alias("pos"))
         .join(bounded.select("term", "doc_id"), ["term", "doc_id"], "left_semi")
+        .join(located.select("doc_id", "base"), "doc_id")
+        .select(
+            "term",
+            "doc_id",
+            "base",
+            F.transform("pos", lambda p: p + F.col("base")).alias("offsets"),
+        )
     )
     write_keyed(
-        _per_term(positional.groupBy("term"), ["doc_id", "positions"]),
+        # docs in doc_id order, so bases ascend and the flattened
+        # offsets stay sorted
+        _per_term(positional.groupBy("term"), ["doc_id", "base", "offsets"]).withColumn(
+            "offsets", F.flatten("offsets")
+        ),
         os.path.join(out_dir, "positions"),
         KEY_LAYOUT["positions"]["key"],
         n_files=n_files,
@@ -264,27 +311,6 @@ def _intersect_sorted(a, b):
     return both[:-1][both[1:] == both[:-1]]
 
 
-def _ranked_positions(docs, term_docs, lists):
-    """Every position of one term as (rank, pos) int64 arrays: ``rank``
-    is the position's doc's index in the sorted array ``docs`` (−1 for
-    a doc not in it), ``pos`` the position; in row order, so ascending
-    by rank when ``term_docs`` is sorted."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    if term_docs is docs:
-        row_rank = np.arange(docs.size)
-    elif docs.size:
-        row_rank = np.searchsorted(docs, term_docs)
-        found = docs[np.minimum(row_rank, docs.size - 1)] == term_docs
-        row_rank[~found] = -1
-    else:
-        row_rank = np.full(term_docs.size, -1)
-    parent = pc.list_parent_indices(lists).to_numpy()
-    pos = pc.list_flatten(lists).to_numpy().astype("int64")
-    return row_rank[parent], pos
-
-
 class VectorSearchCursor:
     """Millisecond ANN top-k over a persisted IVF index
     (operators/similarity.write_ivf_index: parquet partitioned by
@@ -320,6 +346,8 @@ class VectorSearchCursor:
             )
 
     def refresh(self) -> None:
+        import numpy as np
+
         from page_rank_hadoop_spark.operators.similarity import load_ivf_meta
 
         meta = load_ivf_meta(self.path)
@@ -330,6 +358,11 @@ class VectorSearchCursor:
                 "indexes go through probe_ivf_index with explicit parameters)"
             )
         self.meta = meta
+        # (id, float64 vector, norm) per centroid, built once per codebook
+        self._centroids = []
+        for c, cv in meta["centroids"]:
+            arr = np.asarray(cv, dtype="float64")
+            self._centroids.append((c, arr, np.linalg.norm(arr)))
         self._codes_cache: dict[int, tuple] = {}
         self._sq_cache: dict[int, tuple] = {}
         self._vec_cache: dict[int, list] = {}
@@ -403,19 +436,15 @@ class VectorSearchCursor:
         ties to the smaller id — the SAME numpy expressions as the Spark
         probes' driver-side selection: a different summation order
         could pick a different bucket on a tie-close codebook, which
-        changes the candidate set, not just a score."""
+        changes the candidate set, not just a score. The centroid arrays
+        and norms come from ``refresh()``; the probe's norm is computed
+        once."""
         import numpy as np
 
         pa = np.asarray(p, dtype="float64")
+        pn = np.linalg.norm(pa)
         sims = sorted(
-            (
-                (
-                    float(pa @ np.asarray(cv, dtype="float64")
-                          / (np.linalg.norm(pa) * np.linalg.norm(np.asarray(cv, dtype="float64")))),
-                    c,
-                )
-                for c, cv in self.meta["centroids"]
-            ),
+            ((float(pa @ cv / (pn * cn)), c) for c, cv, cn in self._centroids),
             key=lambda t: (-t[0], t[1]),
         )
         return [c for _, c in sims[:n_probe]]
@@ -681,7 +710,10 @@ class SearchCursor:
 
     Staleness contract matches the underlying cursors: footers and the
     blob listing are read at open; call ``refresh()`` after a
-    rebuild/append."""
+    rebuild/append. The cursor holds one read descriptor per blob file
+    it has read from (opened on first use) and the tables' parquet
+    handles; ``refresh()`` closes the blob descriptors, ``close()`` (or
+    leaving a ``with`` block) closes both."""
 
     def __init__(self, out_dir: str):
         meta_path = os.path.join(out_dir, META_NAME)
@@ -702,6 +734,7 @@ class SearchCursor:
         self._postings = PointLookupCursor(os.path.join(out_dir, "postings"), "term")
         self._blob_dir = os.path.join(out_dir, "blobs")
         self._blobs = self._list_blobs()
+        self._fds: dict[int, int] = {}  # blob id → read descriptor
         # positional postings (round 9): optional so cursors still open
         # over indexes without them; phrase()/near() raise loudly
         pos_dir = os.path.join(out_dir, "positions")
@@ -718,17 +751,37 @@ class SearchCursor:
             if name.startswith("part-")
         }
 
+    def _close_blobs(self) -> None:
+        fds, self._fds = self._fds, {}
+        for fd in fds.values():
+            os.close(fd)
+
     def refresh(self) -> None:
         for c in (self._postings, self._positions):
             if c is not None:
                 c.refresh()
+        self._close_blobs()
         self._blobs = self._list_blobs()
 
-    def _term_positions(self, term: str):
-        """(doc_ids, positions) of one term from its one positional row:
-        its doc ids as a sorted int64 array and the aligned ``list``
-        array of its sorted token positions (``KEY_LAYOUT``: the build
-        writes a term's lists in ``doc_id`` order)."""
+    def close(self) -> None:
+        """Close the held blob descriptors and parquet handles. A later
+        call reopens what it reads."""
+        self._close_blobs()
+        for c in (self._postings, self._positions):
+            if c is not None:
+                c.close()
+
+    def __enter__(self) -> "SearchCursor":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def _term_offsets(self, term: str):
+        """(doc_ids, bases, offsets) of one term from its one positional
+        row, as int64 arrays: its docs in ``doc_id`` order, each doc's
+        global token base, and the sorted global offsets of every
+        occurrence (``KEY_LAYOUT``)."""
         import pyarrow.compute as pc
 
         if self._positions is None:
@@ -737,40 +790,32 @@ class SearchCursor:
                 "with round-9 build_search_tables to serve phrase/NEAR queries"
             )
         row = self._positions.lookup([term])
-        return (
-            pc.list_flatten(row["doc_id"]).to_numpy(),
-            pc.list_flatten(row["positions"]).combine_chunks(),
+        return tuple(
+            pc.list_flatten(row[c]).to_numpy() for c in ("doc_id", "base", "offsets")
         )
 
     def phrase(self, phrase: list[str]) -> list[dict]:
         """Exact adjacent-phrase matches: [{doc_id, phrase_tf,
         first_pos}] ordered by doc_id — ``index.phrase_matches``
         (the positional-index query the reference stores positions FOR,
-        Writables.scala:24-44) minus the Spark job. Same algebra: a
-        phrase start is a position p with p ∈ pos(t0), p+1 ∈ pos(t1),
-        …. Evaluated over sorted arrays, one point read per distinct
-        term: every (doc, pos − i) pair of the i-th term is packed into
-        one int64 key by the doc's rank among the first term's docs
-        (``searchsorted``) — ascending, because docs and each doc's
-        positions are — and the sorted key sets are intersected by a
-        linear merge (``_intersect_sorted``); a doc's positions are
-        distinct, so each key set has no repeats. Packing ranks, not
-        ids, keeps any int64 ``doc_id`` exact."""
+        Writables.scala:24-44) minus the Spark job. Same algebra over
+        global token offsets: a phrase start is an offset g with
+        g ∈ off(t0), g+1 ∈ off(t1), …, so the starts are
+        ``off(t0) ∩ (off(t1) − 1) ∩ …``, each a linear merge of sorted
+        arrays (``_intersect_sorted``), one point read per distinct
+        term. A start's tokens are consecutive offsets, and one empty
+        offset lies between documents, so a match never crosses a
+        document; its doc is the last base at or below it."""
         import numpy as np
 
         if not phrase:
             return []
-        cols = {t: self._term_positions(t) for t in dict.fromkeys(phrase)}
-        docs = cols[phrase[0]][0]
-        slots = [_ranked_positions(docs, *cols[t]) for t in phrase]
-        width = max((int(p.max()) + 1 for _, p in slots if p.size), default=1)
-        starts = None
-        for i, (rank, pos) in enumerate(slots):
-            ok = (rank >= 0) & (pos >= i)  # a start is a t0 position, never negative
-            keys = rank[ok] * width + (pos[ok] - i)
-            starts = keys if starts is None else _intersect_sorted(starts, keys)
+        cols = {t: self._term_offsets(t) for t in dict.fromkeys(phrase)}
+        docs, base, starts = cols[phrase[0]]
+        for i, t in enumerate(phrase[1:], 1):
+            starts = _intersect_sorted(starts, cols[t][2] - i)
         # starts is sorted: each doc's run begins with its lowest start
-        doc = starts // width
+        doc = np.searchsorted(base, starts, "right") - 1
         first = np.flatnonzero(np.diff(doc, prepend=-1))
         count = np.diff(first, append=starts.size)
         return [
@@ -778,7 +823,7 @@ class SearchCursor:
             for d, n, f in zip(
                 docs[doc[first]].tolist(),
                 count.tolist(),
-                (starts[first] % width).tolist(),
+                (starts[first] - base[doc[first]]).tolist(),
             )
         ]
 
@@ -786,38 +831,36 @@ class SearchCursor:
         """NEAR/k proximity matches: [{doc_id, min_dist, tf_a, tf_b}]
         ordered by doc_id — ``index.proximity_matches`` minus the Spark
         job. The Spark query's pairwise tf_a·tf_b minimum is attained at
-        a sorted-order neighbour, so each position of ``term_a`` is
-        compared with the nearest ``term_b`` positions on either side
-        (``searchsorted`` over (doc rank, pos) keys packed as in
-        ``phrase``) and the gaps are reduced per doc."""
+        a sorted-order neighbour, so each global offset of ``term_a`` is
+        compared with the nearest ``term_b`` offsets on either side
+        (``searchsorted``), a neighbour counting only when it lies in
+        the same doc; the gaps, differences of one doc's positions, are
+        reduced per doc."""
         import numpy as np
 
-        docs, lists_a = self._term_positions(term_a)
-        rank_a, pos_a = _ranked_positions(docs, docs, lists_a)
-        rank_b, pos_b = _ranked_positions(docs, *self._term_positions(term_b))
-        pos_b = pos_b[rank_b >= 0]
-        rank_b = rank_b[rank_b >= 0]
-        if not (pos_a.size and pos_b.size):
+        docs_a, base_a, ga = self._term_offsets(term_a)
+        docs_b, base_b, gb = self._term_offsets(term_b)
+        if not (ga.size and gb.size):
             return []
-        width = int(max(pos_a.max(), pos_b.max())) + 1
-        ka = rank_a * width + pos_a
-        kb = rank_b * width + pos_b
-        j = np.searchsorted(kb, ka)
+        da = np.searchsorted(base_a, ga, "right") - 1
+        db = np.searchsorted(base_b, gb, "right") - 1
+        own, their = docs_a[da], docs_b[db]
+        j = np.searchsorted(gb, ga)
         none = np.iinfo("int64").max
-        gap = np.full(ka.size, none)
-        for nb, ok in ((np.minimum(j, kb.size - 1), j < kb.size), (np.maximum(j - 1, 0), j > 0)):
-            ok &= kb[nb] // width == rank_a  # a neighbour in the same doc
-            gap = np.where(ok, np.minimum(gap, np.abs(ka - kb[nb])), gap)
-        first = np.flatnonzero(np.diff(rank_a, prepend=-1))
+        gap = np.full(ga.size, none)
+        for nb, ok in ((np.minimum(j, gb.size - 1), j < gb.size), (np.maximum(j - 1, 0), j > 0)):
+            ok &= their[nb] == own
+            gap = np.where(ok, np.minimum(gap, np.abs(ga - gb[nb])), gap)
+        first = np.flatnonzero(np.diff(da, prepend=-1))
         md = np.minimum.reduceat(gap, first)
         hit = (md != none) & (md <= max_dist)
-        r = rank_a[first][hit]
-        tf_a = np.bincount(rank_a, minlength=docs.size)
-        tf_b = np.bincount(rank_b, minlength=docs.size)
+        r = da[first][hit]
+        tf_a = np.bincount(da, minlength=docs_a.size)[r]
+        tf_b = np.bincount(db, minlength=docs_b.size)[np.searchsorted(docs_b, docs_a[r])]
         return [
             {"doc_id": d, "min_dist": m, "tf_a": x, "tf_b": y}
             for d, m, x, y in zip(
-                docs[r].tolist(), md[hit].tolist(), tf_a[r].tolist(), tf_b[r].tolist()
+                docs_a[r].tolist(), md[hit].tolist(), tf_a.tolist(), tf_b.tolist()
             )
         ]
 
@@ -868,8 +911,10 @@ class SearchCursor:
         ]
 
     def _text(self, blob: int, off: int, n: int) -> str:
-        with open(self._blobs[blob], "rb") as fh:
-            return os.pread(fh.fileno(), n, off).decode("utf-8")
+        fd = self._fds.get(blob)
+        if fd is None:
+            fd = self._fds[blob] = os.open(self._blobs[blob], os.O_RDONLY)
+        return os.pread(fd, n, off).decode("utf-8")
 
     def search_with_snippets(
         self, term: str, k: int = 10, before: int = 20, width: int = 50

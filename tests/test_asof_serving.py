@@ -347,7 +347,8 @@ def test_write_keyed_row_group_cap_tightens_cursor_pruning(spark, tmp_path):
 
 def test_write_keyed_closes_a_group_at_each_row_over_the_cap(spark, tmp_path, monkeypatch):
     """write_keyed checks the group size after every row: a table of a
-    few large rows (each over ROW_GROUP_BYTES) among many small ones gets
+    few large rows (each over ROW_GROUP_BYTES once delta-packed: hashed
+    values, not a run that packs to a few bytes) among many small ones gets
     no group holding two large rows, each large row ends its group, the
     small rows pack up to the cap (far fewer groups than rows), and a
     lookup of a large key decodes only its group."""
@@ -361,7 +362,9 @@ def test_write_keyed_closes_a_group_at_each_row_over_the_cap(spark, tmp_path, mo
     big = F.col("id") % 10 == 5
     df = spark.range(100).select(
         F.format_string("k%03d", "id").alias("term"),
-        F.when(big, F.sequence(F.lit(0), F.lit(20_000))).otherwise(F.array("id")).alias("ids"),
+        F.when(
+            big, F.transform(F.sequence(F.lit(0), F.lit(20_000)), lambda x: F.hash(x).cast("long"))
+        ).otherwise(F.array("id")).alias("ids"),
     )
     path = str(tmp_path / "serve_big")
     write_keyed(df, path, "term", n_files=1)

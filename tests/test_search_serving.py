@@ -157,7 +157,7 @@ def test_vector_cursor_equals_probe_ivf_index(spark):
     write_ivf_index(emb, d, n_centroids=8, dim=len(probe))
 
     cur = VectorSearchCursor(d)
-    for n_probe in (1, 2):
+    for n_probe in range(1, 9):  # every probe width up to the 8 centroids
         want = [
             (r["vec_id"], r["cos_sim"])
             for r in probe_ivf_index(spark, d, probe, k=10, n_probe=n_probe).collect()
@@ -249,12 +249,27 @@ def _flat(row):
     ]
 
 
+def _by_doc(row):
+    """One stored positions row as its per-doc rows (term, doc_id,
+    positions): each global offset belongs to the doc whose span
+    [base, next doc's base) holds it, at position offset − base."""
+    nxt = row["base"][1:] + [float("inf")]
+    return [
+        {"term": row["term"], "doc_id": doc,
+         "positions": [g - lo for g in row["offsets"] if lo <= g < hi]}
+        for doc, lo, hi in zip(row["doc_id"], row["base"], nxt)
+    ]
+
+
 def _rows(table_dir, key, values):
     import pyarrow.parquet as pq
 
     want = set(values)
     return [
-        r for row in pq.read_table(table_dir).to_pylist() if row[key] in want for r in _flat(row)
+        r
+        for row in pq.read_table(table_dir).to_pylist()
+        if row[key] in want
+        for r in (_by_doc(row) if "offsets" in row else _flat(row))
     ]
 
 
@@ -339,7 +354,8 @@ def _typed(rows):
 def _write_table(d, rows, schema, group_rows=2):
     """Write flat per-doc rows as the build does: one row per term, its
     per-doc values as parallel lists in doc_id order, terms sorted, in
-    two files of ``group_rows``-row groups."""
+    two files of ``group_rows``-row groups. A list-valued ``offsets``
+    is concatenated across the term's docs instead."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -351,7 +367,10 @@ def _write_table(d, rows, schema, group_rows=2):
             by_term[r["term"]] = {**{c: r[c] for c in schema.names if c not in lists},
                                   **{c: [] for c in lists}}
         for c in lists:
-            by_term[r["term"]][c].append(r[c])
+            if c == "offsets":
+                by_term[r["term"]][c].extend(r[c])
+            else:
+                by_term[r["term"]][c].append(r[c])
     terms = list(by_term.values())
     half = len(terms) // 2
     for i, part in enumerate((terms[:half], terms[half:])):
@@ -367,7 +386,9 @@ def _write_search_dir(root, postings, ranks, docs, positions, group_rows=2):
     with the column types the Spark build writes: postings carry the
     page's rank (inner join, so unranked pages drop out) and its text
     location in two blob files; one row per term, as ``KEY_LAYOUT``
-    names."""
+    names. ``positions`` are per-doc rows (term, doc_id, positions);
+    they are stored as global offsets, each doc's base the sum of the
+    spans (max position + 2) of the docs before it in doc_id order."""
     import json
 
     import pyarrow as pa
@@ -400,12 +421,19 @@ def _write_search_dir(root, postings, ranks, docs, positions, group_rows=2):
         ),
         group_rows,
     )
+    span = {}
+    for r in positions:
+        span[r["doc_id"]] = max(span.get(r["doc_id"], 0), max(r["positions"]) + 2)
+    base, acc = {}, 0
+    for doc in sorted(span):
+        base[doc], acc = acc, acc + span[doc]
     _write_table(
         os.path.join(root, "positions"),
-        positions,
+        [{"term": r["term"], "doc_id": r["doc_id"], "base": base[r["doc_id"]],
+          "offsets": [base[r["doc_id"]] + p for p in r["positions"]]} for r in positions],
         pa.schema(
             [("term", pa.string()), ("doc_id", pa.list_(pa.int64())),
-             ("positions", pa.list_(pa.list_(pa.int32())))]
+             ("base", pa.list_(pa.int64())), ("offsets", pa.list_(pa.int64()))]
         ),
         group_rows,
     )
@@ -499,17 +527,18 @@ def test_phrase_parity_with_row_oracle(search_dir):
 
 
 def test_phrase_exact_for_wide_doc_ids(tmp_path):
-    """doc_id ≥ 2³² (and near 2⁶²) must pack without collision: the
-    cursor dense-ranks ids before packing (doc, pos) pairs, for phrase
-    and for near."""
+    """doc_id ≥ 2³², ≥ 2⁶² and up to the int64 maximum stay exact: the
+    kernels work on global token offsets and map matches back to the
+    stored doc ids, never packing ids into keys, for phrase and for
+    near."""
     from page_rank_hadoop_spark.sources.search import SearchCursor
 
-    wide = [5, 2**32 - 1, 2**32, 2**32 + 7, 2**40 + 1, 2**62 + 3]
+    wide = [5, 2**32 - 1, 2**32, 2**32 + 7, 2**40 + 1, 2**62 + 3, 2**62 + 2**61, 2**63 - 1]
     positions = []
     for i, d in enumerate(wide):
         positions += [
             {"term": "a", "doc_id": d, "positions": [0, 3, 7 + i, 20]},
-            {"term": "b", "doc_id": d, "positions": [1, 8 + i, 15]},
+            {"term": "b", "doc_id": d, "positions": [1, 8 + i, 17]},
             {"term": "c", "doc_id": d, "positions": [2, 9 + i] if i % 2 else [16]},
         ]
     postings = [{"term": "a", "doc_id": d, "tf": 1, "df": 1, "idf": 1.0} for d in wide]
@@ -684,9 +713,10 @@ def test_blob_index_of_empty_corpus_answers_nothing(spark, tmp_path):
 def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
     """A directory written by the postings/ranks/docs build, by the
     build that keyed postings and positions by term alone (its rows not
-    in the doc_id order the phrase and NEAR kernels rely on), or by the
-    build that wrote one row per (term, doc_id) is refused with a
-    rebuild request, not served."""
+    in the doc_id order the phrase and NEAR kernels rely on), by the
+    build that wrote one row per (term, doc_id), or by the one-row-per-
+    term build whose positions rows held per-doc position lists instead
+    of global offsets is refused with a rebuild request, not served."""
     import json
 
     from page_rank_hadoop_spark.sources.search import META_NAME, SearchCursor
@@ -706,6 +736,14 @@ def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
     with pytest.raises(ValueError, match="rebuild"):
         SearchCursor(old)
     meta["key_layout"] = {"postings": ["term", "doc_id"], "positions": ["term", "doc_id"],
+                          "blobs": "doc_id"}
+    with open(os.path.join(old, META_NAME), "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="rebuild"):
+        SearchCursor(old)
+    # one row per term, but positions stored as per-doc position lists
+    meta["key_layout"] = {"postings": {"key": "term", "lists": "doc_id"},
+                          "positions": {"key": "term", "lists": "doc_id"},
                           "blobs": "doc_id"}
     with open(os.path.join(old, META_NAME), "w") as fh:
         json.dump(meta, fh)
@@ -752,25 +790,40 @@ def _part_files(d):
 def test_keyed_tables_hold_one_row_per_term(search_dir):
     """postings/ and positions/ hold one row per distinct term, terms in
     order across the files, each row's doc_id list strictly ascending
-    and its parallel lists as long; every file holds several row groups
+    and its parallel lists as long (a positions row's offsets strictly
+    ascending, at least one in each of its docs); every file holds
+    several row groups unless all its data fits under the cap
     (write_keyed closes a group by size after any row)."""
     import numpy as np
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from page_rank_hadoop_spark.sources.serving import ROW_GROUP_BYTES
+
+    multi = 0
     for table in ("postings", "positions"):
         terms = []
         for fp in _part_files(os.path.join(search_dir, table)):
             pf = pq.ParquetFile(fp)
-            assert pf.metadata.num_row_groups > 1, fp
+            md = pf.metadata
+            assert md.num_row_groups > 1 or md.row_group(0).total_byte_size < ROW_GROUP_BYTES, fp
+            multi += md.num_row_groups > 1
             t = pf.read()
             terms += t["term"].to_pylist()
             n = pc.list_value_length(t["doc_id"])
             for c in t.column_names[t.column_names.index("doc_id"):]:
-                assert pc.list_value_length(t[c]).equals(n), (fp, c)
+                if c != "offsets":
+                    assert pc.list_value_length(t[c]).equals(n), (fp, c)
             for ids in t["doc_id"].to_pylist():
                 assert ids and (np.diff(ids) > 0).all(), fp
+            if table == "positions":
+                # bases ascend with doc_id; every doc holds an offset
+                # and the offsets ascend strictly
+                for base, offs in zip(t["base"].to_pylist(), t["offsets"].to_pylist()):
+                    assert (np.diff(base) > 0).all() and (np.diff(offs) > 0).all(), fp
+                    assert set(np.searchsorted(base, offs, "right") - 1) == set(range(len(base)))
         assert terms == sorted(set(terms)) and len(terms) > 3, table
+    assert multi, "no file of the fixture is over the row-group cap"
 
 
 def test_term_lookup_decodes_only_its_group(search_dir, monkeypatch):
@@ -936,3 +989,110 @@ def test_degenerate_corpora_answer_like_the_spark_operators(spark, tmp_path, doc
         assert _typed(cur.phrase(phrase)) == _typed(phrased), phrase
         assert _typed(cur.near(*pair)) == _typed(near), pair
     assert cur.phrase([]) == []
+
+
+def test_phrase_and_near_never_cross_a_document_boundary(spark, tmp_path):
+    """Global offsets leave one empty offset between documents: a phrase
+    made of the last token of one doc and the first token of the next
+    never matches, and NEAR never pairs them — in a Spark build whose
+    docs span three blob partitions, equal to the Spark operators."""
+    from page_rank_hadoop_spark.operators import index
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    texts = ["ant bee cat", "dog eel", "fox", "gnu hen ant", "bee", "cat dog ant"]
+    documents, _, d = _blob_index(
+        spark, tmp_path, [(2**40 + i, t) for i, t in enumerate(texts)]
+    )
+    cur = SearchCursor(d)
+    edges = [(a.split()[-1], b.split()[0]) for a, b in zip(texts, texts[1:])]
+    for a, b in edges:
+        want_phrase = [
+            {"doc_id": r["doc_id"], "phrase_tf": r["phrase_tf"], "first_pos": r["first_pos"]}
+            for r in index.phrase_matches(documents, [a, b]).collect()
+        ]
+        want_near = [
+            {"doc_id": r["doc_id"], "min_dist": r["min_dist"], "tf_a": r["tf_a"], "tf_b": r["tf_b"]}
+            for r in index.proximity_matches(documents, a, b, 5).collect()
+        ]
+        assert _typed(cur.phrase([a, b])) == _typed(want_phrase), (a, b)
+        assert _typed(cur.near(a, b, 5)) == _typed(want_near), (a, b)
+    # pairs that occur only across a boundary answer nothing at all
+    for a, b in (("eel", "fox"), ("fox", "gnu"), ("hen", "bee")):
+        assert cur.phrase([a, b]) == [] and cur.near(a, b, 10) == [], (a, b)
+    assert [r["doc_id"] for r in cur.phrase(["cat", "dog"])] == [2**40 + 5]
+
+
+def test_keyed_tables_are_delta_packed_with_key_statistics(search_dir):
+    """Every integer list column of postings/ and positions/ is written
+    DELTA_BINARY_PACKED, every column SNAPPY (never UNCOMPRESSED v2
+    pages, whose strings Spark's vectorized reader corrupts), and only
+    the key column carries statistics (write_keyed's v2 writer
+    settings); the tools/serving_layout.py summary reports the same."""
+    import importlib.util
+
+    import pyarrow.parquet as pq
+
+    spec = importlib.util.spec_from_file_location(
+        "serving_layout",
+        os.path.join(os.path.dirname(__file__), os.pardir, "tools", "serving_layout.py"),
+    )
+    layout = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layout)
+    assert [os.path.basename(t) for t in layout.tables(search_dir)] == ["positions", "postings"]
+    for table in ("postings", "positions"):
+        int_lists = 0
+        groups = 0
+        for fp in _part_files(os.path.join(search_dir, table)):
+            md = pq.ParquetFile(fp).metadata
+            groups += md.num_row_groups
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for i in range(rg.num_columns):
+                    col = rg.column(i)
+                    where = (fp, g, col.path_in_schema)
+                    assert col.compression == "SNAPPY", where
+                    if col.path_in_schema == "term":
+                        assert col.is_stats_set and col.statistics.has_min_max, where
+                    else:
+                        assert not col.is_stats_set, where
+                    if col.physical_type in ("INT32", "INT64") and ".list." in col.path_in_schema:
+                        assert col.encodings == ("DELTA_BINARY_PACKED",), where
+                        int_lists += 1
+        assert int_lists, table
+        summary = layout.table_layout(os.path.join(search_dir, table))
+        assert summary["row_groups"] == groups
+        assert summary["columns"]["doc_id.list.element"] == {
+            "encodings": {"DELTA_BINARY_PACKED"}, "compression": {"SNAPPY"},
+            "statistics": {"no"},
+        }
+        assert summary["columns"]["term"]["statistics"] == {"yes"}
+
+
+def _open_fds():
+    return len(os.listdir("/proc/self/fd"))
+
+
+def test_search_cursor_holds_one_descriptor_per_blob(spark, tmp_path):
+    """Snippet reads hold one descriptor per blob file read from, opened
+    on first use; refresh() closes them, and close() (or leaving a with
+    block) also closes the parquet handles: no descriptor stays open."""
+    from page_rank_hadoop_spark.sources.search import SearchCursor
+
+    _, _, d = _blob_index(spark, tmp_path, _BLOB_DOCS)
+    n_blobs = sum(n.startswith("part-") for n in os.listdir(os.path.join(d, "blobs")))
+    before = _open_fds()
+    with SearchCursor(d) as cur:
+        opened = _open_fds()
+        want = cur.search_with_snippets("spark", k=10)
+        held = _open_fds()
+        assert want and 0 < held - opened <= n_blobs
+        assert cur.search_with_snippets("data", k=10) and _open_fds() <= opened + n_blobs
+        assert cur.search_with_snippets("spark", k=10) == want
+        cur.refresh()
+        assert _open_fds() == opened
+        assert cur.search_with_snippets("spark", k=10) == want
+        assert _open_fds() == held
+    assert _open_fds() == before
+    assert cur.search_with_snippets("spark", k=10) == want  # reopens on demand
+    cur.close()
+    assert _open_fds() == before
