@@ -318,15 +318,15 @@ def serving_latency_bench(spark, sf_dir: str, n_lookups: int = 20) -> dict:
         # (the r8 first cut measured exactly that: p50 0.01ms)
         import pyarrow.parquet as _pq
 
+        from page_rank_hadoop_spark.sources.serving import read_arrow_file
+
         pdir = os.path.join(sdir, "postings")
         pfile = sorted(
             f for f in os.listdir(pdir)
-            if f.endswith(".parquet") and not f.startswith("_")
+            if f.endswith(".arrow") and not f.startswith("_")
         )[0]
-        sterms = sorted(
-            set(_pq.read_table(os.path.join(pdir, pfile), columns=["term"])
-                ["term"].to_pylist())
-        )
+        first_part = read_arrow_file(os.path.join(pdir, pfile))
+        sterms = sorted(set(first_part["term"].to_pylist()))
         step = max(1, len(sterms) // n_lookups)
         sterms = sterms[::step][:n_lookups] or ["spark"]
         s_ms: list[float] = []
@@ -345,9 +345,7 @@ def serving_latency_bench(spark, sf_dir: str, n_lookups: int = 20) -> dict:
         # every lookup fetches the heaviest position lists the index
         # can serve. near() runs unbounded-distance so its hit count
         # equals both-term doc coverage — the work-honesty guard.
-        pterms = _pq.read_table(
-            os.path.join(pdir, pfile), columns=["term", "df"]
-        ).to_pylist()
+        pterms = first_part.select(["term", "df"]).to_pylist()
         pterms.sort(key=lambda r: (-r["df"], r["term"]))
         pa, pb = pterms[0]["term"], pterms[1]["term"]
         ph_ms: list[float] = []

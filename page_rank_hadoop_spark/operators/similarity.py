@@ -2604,26 +2604,42 @@ def _pq_encode_codes(assigned: DataFrame, books: dict[int, Centroids], dim: int)
     )
 
 
-def _adc_tables(probe: list[float], books: dict[int, Centroids]) -> list[list[float]]:
+def _pq_book_array(books: dict[int, Centroids]):
+    """The PQ codebooks as (array, sizes): one float64 array of shape
+    (m, K, subdim) — subspace, code position, coordinate — and each
+    book's code count. K is the largest count; a book whose k-means
+    dropped an empty code is shorter, and its padding rows are zeros
+    that no code position reaches."""
+    import numpy as np
+
+    sizes = [len(books[sp]) for sp in range(len(books))]
+    arr = np.zeros((len(sizes), max(sizes), len(books[0][0][1])))
+    for sp, k in enumerate(sizes):
+        arr[sp, :k] = [cv for _c, cv in books[sp]]
+    return arr, sizes
+
+
+def _adc_tables(probe: list[float], book_array) -> list:
     """Per-subspace distance tables of a FULL-PRECISION probe to every
-    codebook entry, each squared-L2 accumulated as the exact sequential
-    left fold — the same doubles the Spark fold and the DuckDB oracle
-    produce, so a cursor and a Spark job scoring the same codes get
-    bit-identical ADC sums."""
-    m = len(books)
-    subdim = len(books[0][0][1])
-    out: list[list[float]] = []
-    for sp in range(m):
-        sub = [float(x) for x in probe[sp * subdim : (sp + 1) * subdim]]
-        row = []
-        for _c, cv in books[sp]:
-            acc = 0.0
-            for x, y in zip(sub, cv):
-                t = x - y
-                acc += t * t
-            row.append(acc)
-        out.append(row)
-    return out
+    codebook entry, one float64 array per subspace indexed by code
+    position (``book_array`` from ``_pq_book_array``), each squared-L2
+    accumulated as the exact sequential left fold — the same doubles
+    the Spark fold and the DuckDB oracle produce, so a cursor and a
+    Spark job scoring the same codes get bit-identical ADC sums. The
+    squared differences are computed for every entry at once and added
+    up coordinate by coordinate in the fold's order (the fold's
+    ``0.0 + t0²`` is ``t0²`` exactly: a square is never −0.0)."""
+    import numpy as np
+
+    arr, sizes = book_array
+    m, _k, subdim = arr.shape
+    sub = np.asarray(probe[: m * subdim], dtype="float64").reshape(m, 1, subdim)
+    t = sub - arr
+    sq = t * t
+    acc = sq[..., 0]
+    for j in range(1, subdim):
+        acc = acc + sq[..., j]
+    return [acc[sp, :k] for sp, k in enumerate(sizes)]
 
 
 def probe_ivf_index_adc(
@@ -2660,7 +2676,7 @@ def probe_ivf_index_adc(
         cent = np.asarray(cv, dtype="float64")
         sims.append((float(p @ cent / (np.linalg.norm(p) * np.linalg.norm(cent))), c))
     probed = [c for _, c in sorted(sims, key=lambda t: (-t[0], t[1]))[:n_probe]]
-    qd = _adc_tables([float(x) for x in probe], books)
+    qd = _adc_tables([float(x) for x in probe], _pq_book_array(books))
     m = len(books)
     adc = reduce(
         lambda a, b: a + b,

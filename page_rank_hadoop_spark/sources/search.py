@@ -13,16 +13,16 @@ plan — SCALING.md round-7 serving section). This module is the serving
 lane: Spark writes the term-keyed postings (one row per term, its
 posting list carrying each page's rank and text blob location — the
 reference's HBase row) and the flat text blobs ONCE
-(``build_search_tables``), and ``SearchCursor`` answers a query with one
-``PointLookupCursor`` footer-stat point read, which decodes one row per
-term, plus a ``pread`` per top-k page — no Spark job, millisecond
-class. Phrase and NEAR queries read the term-keyed ``positions/`` rows,
-which store each occurrence as a global token offset (document base +
+(``build_search_tables``), then loads the two term-keyed tables into
+uncompressed Arrow IPC files, the reference's bulk load into HBase.
+``SearchCursor`` answers a query with one ``PointLookupCursor`` point
+read, a zero-copy slice of one memory-mapped row per term, plus a
+``pread`` per top-k page — no Spark job, no decode, millisecond class.
+Phrase and NEAR queries read the term-keyed ``positions/`` rows, which
+store each occurrence as a global token offset (document base +
 position, one empty offset between documents), so a phrase is one
 sorted intersection of the terms' offset lists and NEAR one
-``searchsorted`` between two of them. Both tables are written as
-delta-packed parquet v2 pages (``write_keyed``): what a read costs is
-the decode of one row's lists at a few bits per value.
+``searchsorted`` between two of them.
 
 Why client-side scoring is safe at 100 TB: the index keeps the
 reference's ``df < 3000`` bound (invertedIndex.scala:93), so a q-term
@@ -51,7 +51,11 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from page_rank_hadoop_spark.sources.serving import PointLookupCursor, write_keyed
+from page_rank_hadoop_spark.sources.serving import (
+    PointLookupCursor,
+    write_arrow_files,
+    write_keyed,
+)
 
 META_NAME = "_search_meta.json"
 # what a build_search_tables directory holds and in which order,
@@ -59,10 +63,11 @@ META_NAME = "_search_meta.json"
 # rebuilt, not guessed at. postings and positions hold one row per term
 # whose lists are in doc_id order; a positions row holds one sorted list
 # of global token offsets (doc base + position), which the phrase and
-# NEAR kernels intersect and search as they are
+# NEAR kernels intersect and search as they are; both tables are Arrow
+# IPC part files (serving.write_arrow_files), not parquet
 KEY_LAYOUT = {
-    "postings": {"key": "term", "lists": "doc_id"},
-    "positions": {"key": "term", "lists": "doc_id", "offsets": "global"},
+    "postings": {"key": "term", "lists": "doc_id", "files": "arrow"},
+    "positions": {"key": "term", "lists": "doc_id", "offsets": "global", "files": "arrow"},
     "blobs": "doc_id",
 }
 
@@ -185,11 +190,17 @@ def build_search_tables(
 
     Both tables are built as ``groupBy(term)`` over
     ``sort_array(collect_list(struct(doc_id, …)))`` split into parallel
-    columns (``_per_term``, SURVEY A6/S5 in Spark form), and
-    ``write_keyed`` closes a row group by size after any row, so a term
-    read decodes the one group that holds its row. Its pages are
-    delta-packed (``write_keyed``), so a sorted id or offset list
-    decodes from a few bits per value.
+    columns (``_per_term``, SURVEY A6/S5 in Spark form) and written by
+    Spark through ``write_keyed``. The build then ends with the
+    reference's bulk-load step (``InvertedIndexToHBase``,
+    invertedIndex.scala:126-178): the driver rewrites each part file in
+    place as an uncompressed Arrow IPC file, one record batch per row
+    group (``serving.write_arrow_files``). It is one sequential pass
+    over the index bytes, one group in memory at a time, and the
+    parquet files are deleted after it. A term read is then a zero-copy
+    slice of a memory-mapped file; no row group is decoded at serve
+    time. The files are larger than the delta-packed parquet (about
+    4.5× at sf0.1), the price of reading without a decode.
 
     ``ranks`` must be (doc_id, pr). ``tf`` optionally reuses a prebuilt
     ``term_frequencies`` MV (positions dropped here — scoring needs tf
@@ -220,12 +231,8 @@ def build_search_tables(
         ),
         ["doc_id", "tf", "pr", "blob", "off", "len"],
     )
-    write_keyed(
-        postings,
-        os.path.join(out_dir, "postings"),
-        KEY_LAYOUT["postings"]["key"],
-        n_files=n_files,
-    )
+    post_dir = os.path.join(out_dir, "postings")
+    write_keyed(postings, post_dir, KEY_LAYOUT["postings"]["key"], n_files=n_files)
     # positional postings: one extra token-stream pass (positions can't
     # come from a tf-only MV), same df bound as the flat postings so the
     # serving guarantee stays O(df·terms) per query at 100 TB
@@ -242,16 +249,19 @@ def build_search_tables(
             F.transform("pos", lambda p: p + F.col("base")).alias("offsets"),
         )
     )
+    pos_dir = os.path.join(out_dir, "positions")
     write_keyed(
         # docs in doc_id order, so bases ascend and the flattened
         # offsets stay sorted
         _per_term(positional.groupBy("term"), ["doc_id", "base", "offsets"]).withColumn(
             "offsets", F.flatten("offsets")
         ),
-        os.path.join(out_dir, "positions"),
+        pos_dir,
         KEY_LAYOUT["positions"]["key"],
         n_files=n_files,
     )
+    for table_dir in (post_dir, pos_dir):
+        write_arrow_files(table_dir)
     meta = {
         "n_docs": n_docs,
         "cutoff": cutoff,
@@ -348,7 +358,7 @@ class VectorSearchCursor:
     def refresh(self) -> None:
         import numpy as np
 
-        from page_rank_hadoop_spark.operators.similarity import load_ivf_meta
+        from page_rank_hadoop_spark.operators.similarity import _pq_book_array, load_ivf_meta
 
         meta = load_ivf_meta(self.path)
         if meta is None:
@@ -363,6 +373,8 @@ class VectorSearchCursor:
         for c, cv in meta["centroids"]:
             arr = np.asarray(cv, dtype="float64")
             self._centroids.append((c, arr, np.linalg.norm(arr)))
+        # the PQ codebooks as one (m, K, subdim) array for _adc_tables
+        self._pq_books = _pq_book_array(meta["pq"]["books"]) if "pq" in meta else None
         self._codes_cache: dict[int, tuple] = {}
         self._sq_cache: dict[int, tuple] = {}
         self._vec_cache: dict[int, list] = {}
@@ -597,19 +609,16 @@ class VectorSearchCursor:
         [{vec_id, sq_dist, adc_dist}] ordered by (sq_dist, vec_id).
         Same sequential left-fold arithmetic as the Spark
         ``pq_refined_knn`` twin, so scores are bit-equal."""
-        import numpy as np
-
         from page_rank_hadoop_spark.operators.similarity import _adc_tables
 
-        if "pq" not in self.meta:
+        if self._pq_books is None:
             raise ValueError(
                 f"VectorSearchCursor: index at {self.path} has no PQ books in "
                 "its meta — rebuild with write_ivf_index(pq_books=...) to "
                 "serve ADC"
             )
-        books = self.meta["pq"]["books"]
         p = [float(x) for x in probe]
-        qd = [np.asarray(row, dtype="float64") for row in _adc_tables(p, books)]
+        qd = _adc_tables(p, self._pq_books)
         parts = []
         for c in self._probed(p, n_probe):
             ids, codes = self._bucket_codes(c, "codes", self._codes_cache, len(qd))
@@ -708,12 +717,14 @@ class SearchCursor:
     ``PointLookupCursor`` read of the postings + O(df·terms) client
     arithmetic, plus a ``pread`` of the top pages' text for snippets.
 
-    Staleness contract matches the underlying cursors: footers and the
-    blob listing are read at open; call ``refresh()`` after a
-    rebuild/append. The cursor holds one read descriptor per blob file
-    it has read from (opened on first use) and the tables' parquet
-    handles; ``refresh()`` closes the blob descriptors, ``close()`` (or
-    leaving a ``with`` block) closes both."""
+    Staleness contract matches the underlying cursors: the tables' key
+    index and the blob listing are read at open; call ``refresh()``
+    after a rebuild/append. The tables are memory-mapped, which holds
+    no descriptor; the cursor holds one read descriptor per blob file
+    it has read from (opened on first use). ``refresh()`` closes the
+    blob descriptors and re-maps changed table files, ``close()`` (or
+    leaving a ``with`` block) closes the descriptors and drops the
+    mappings; answers already returned stay valid."""
 
     def __init__(self, out_dir: str):
         meta_path = os.path.join(out_dir, META_NAME)
@@ -764,8 +775,8 @@ class SearchCursor:
         self._blobs = self._list_blobs()
 
     def close(self) -> None:
-        """Close the held blob descriptors and parquet handles. A later
-        call reopens what it reads."""
+        """Close the held blob descriptors and drop the table mappings. A
+        later call reopens what it reads."""
         self._close_blobs()
         for c in (self._postings, self._positions):
             if c is not None:

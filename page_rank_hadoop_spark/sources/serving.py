@@ -10,6 +10,11 @@ a later ``filter(key == x)`` / ``isin`` prunes to the few row groups whose
 range scan, with zero serving infrastructure. For a hot serving path the
 same write gains a ``bucketBy(key)`` variant into a warehouse table, which
 additionally removes the shuffle from any later join on the key.
+
+Tables served only through ``PointLookupCursor`` take one more step, the
+reference's bulk load: ``write_arrow_files`` rewrites their part files as
+uncompressed Arrow IPC, which the cursor memory-maps and slices instead
+of decoding row groups.
 """
 
 from __future__ import annotations
@@ -80,6 +85,12 @@ def write_keyed(
     written for ``key`` only: the lookup readers (``PointLookupCursor``,
     ``read_point``, ``read_prefix``) prune on the key alone, and every
     other column's statistics would only grow the footer.
+
+    Serving tables read by ``PointLookupCursor`` alone (the search
+    tables) are then rewritten by ``write_arrow_files``, one Arrow
+    record batch per row group, so the cap above also sizes their
+    batches; tables that ``read_point``/``read_prefix`` or Spark read
+    again (``cli index``, ``cli pagerank``) stay parquet.
 
     The range partitioner samples its input in a job of its own, but
     under AQE the input's shuffle stages run once and both the sample
@@ -249,6 +260,67 @@ def read_point(
     return base.filter(F.col(key).isin(values))
 
 
+def _part_stem(name: str) -> str:
+    """``part-00000-<uuid>-c000`` of ``part-00000-<uuid>-c000.snappy.parquet``
+    or of the ``.arrow`` file rewritten from it."""
+    return name.split(".", 1)[0]
+
+
+def write_arrow_files(table_dir: str) -> int:
+    """Rewrite every parquet part file of a ``write_keyed`` table in
+    place as an uncompressed Arrow IPC file (``part-*.arrow``), the
+    serving twin of the reference's bulk load into HBase
+    (``InvertedIndexToHBase``, invertedIndex.scala:126-178): a reader
+    then memory-maps the rows it serves instead of decoding them.
+
+    One record batch per parquet row group and the parquet file's arrow
+    schema, so a batch holds exactly the rows a group held, with the
+    same types and nullability. The groups are read and written one at a
+    time, so memory stays at one group whatever the file size. Each
+    file is written under a temporary name and renamed, then the
+    parquet file (and Spark's ``.crc`` of it) is deleted: no second
+    copy is kept, and a ``PointLookupCursor`` that refreshes in between
+    serves the ``.arrow`` file, never both. Returns the files written.
+
+    The pages are not compressed: a compressed IPC batch must be
+    decompressed on every read (lz4 and zstd reads measured 30-50× a
+    mapped read, SCALING.md), which gives back the decode this step
+    exists to remove."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    written = 0
+    for name in sorted(os.listdir(table_dir)):
+        if not name.endswith(".parquet") or name.startswith(("_", ".")):
+            continue
+        src = os.path.join(table_dir, name)
+        dest = os.path.join(table_dir, _part_stem(name) + ".arrow")
+        with pq.ParquetFile(src) as pf:
+            with pa.OSFile(dest + ".tmp", "wb") as sink, pa.ipc.new_file(
+                sink, pf.schema_arrow
+            ) as writer:
+                for g in range(pf.metadata.num_row_groups):
+                    writer.write_table(pf.read_row_group(g, use_threads=False).combine_chunks())
+        os.replace(dest + ".tmp", dest)
+        os.remove(src)
+        crc = os.path.join(table_dir, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        written += 1
+    return written
+
+
+def read_arrow_file(fp: str):
+    """The whole ``.arrow`` file as a ``pyarrow.Table`` of memory-mapped,
+    zero-copy buffers, one chunk per record batch. The file is closed
+    before returning: the mapping lives as long as any buffer of the
+    table (or of a slice of it) does, and holds no descriptor."""
+    import pyarrow as pa
+
+    with pa.memory_map(fp) as source:
+        return pa.ipc.open_file(source).read_all()
+
+
 class PointLookupCursor:
     """Millisecond-class point lookups over a ``write_keyed`` table —
     the HOT serving path (round 7, judge r6 item 8).
@@ -257,41 +329,47 @@ class PointLookupCursor:
     ~80% plan compilation + ~18% job machinery + 2ms of actual scan.
     Re-using a resolved relation or parameterized SQL only cuts it to
     ~52ms (measured) — a Spark JOB has a scheduling floor no layout can
-    beat. The cursor removes the job entirely: parquet footers are read
-    ONCE at open (per-file key min/max from row-group stats — the same
-    stats Spark's pruning uses), each lookup binary-searches the file
-    ranges and reads matching row groups via pyarrow with a pushed-down
-    key filter. Same files, same layout, no serving infrastructure —
-    exactly how a production result store fronts Spark-written
-    artifacts. Results are identical to ``read_point`` (pytest-pinned);
-    use ``read_point`` when the lookup feeds further DISTRIBUTED work,
-    the cursor when the caller wants the rows.
+    beat. The cursor removes the job entirely and serves two kinds of
+    part file, ``.arrow`` and ``.parquet``:
 
-    Staleness contract: the footer index is read at open; reopen after
-    appends/compaction (cheap — footers only).
+    - ``.arrow`` (``write_arrow_files``, the search tables): at refresh
+      each file is memory-mapped (``read_arrow_file``) and its key
+      column indexed, key → row runs, once. A lookup returns zero-copy
+      slices of the mapped rows: no decode, no row-group read.
+    - ``.parquet`` (``write_keyed`` output as Spark wrote it; ``cli
+      index``/``pagerank`` and ``read_point`` serve these): footers are
+      read at refresh (per-row-group key min/max, the stats Spark's
+      pruning uses), and a lookup reads, in one ``read_row_groups``
+      call per file, only the row groups whose [min, max] intersect the
+      probe set. A group whose min == max and whose null count is 0
+      holds nothing but a probed key and is kept whole as a zero-copy
+      slice; the groups shared with other keys or with null keys go
+      through a vectorized ``is_in`` filter. The read runs on the
+      calling thread (``use_threads=False``): on a group of a few KB
+      the thread-pool handoff cost more than the decode.
+
+    Same files, same layout, no serving infrastructure. Results are
+    identical to ``read_point`` (pytest-pinned); use ``read_point`` when
+    the lookup feeds further DISTRIBUTED work, the cursor when the
+    caller wants the rows.
+
+    Staleness contract: the index is built at open; ``refresh()`` after
+    appends/compaction (cheap — footers or key columns only).
 
     Read contract: ``lookup`` returns ONE ``pyarrow.Table`` — the
-    matching rows of every touched row group, concatenated in file
-    order, or an empty table with the file schema when nothing matches.
-    It reuses the ParquetFile HANDLES opened at refresh and reads, in
-    one ``read_row_groups`` call per file, only the ROW GROUPS whose
-    cached [min, max] intersect the probe set. A group whose min == max
-    and whose null count is 0 holds nothing but a probed key and is kept
-    whole as a zero-copy slice; only the groups shared with other keys
-    (on the search tables' one row per term, a group of several small
-    terms, or small terms packed before a large one) or with null keys
-    go through a vectorized ``is_in`` filter, and a single matching part
-    is returned without a ``concat_tables``. No row becomes a Python
-    object unless the caller asks (``.to_pylist()`` is the dict shape).
-    Probe keys may be a list or a numpy array, so a multi-thousand-id
-    probe stays columnar too.
-    Handles are kept for up to ``MAX_OPEN_FILES`` files and opened on
-    demand past that (a 100k-file table must not hold 100k fds);
-    ``close()`` releases them.
+    matching rows of every file, in file order, or an empty table with
+    the file schema when nothing matches. A null key never matches. A
+    single matching part is returned without a ``concat_tables``. No
+    row becomes a Python object unless the caller asks (``.to_pylist()``
+    is the dict shape). Probe keys may be a list or a numpy array, so a
+    multi-thousand-id probe stays columnar too. A returned table stays
+    readable after ``close()``.
 
-    Decode cost: ``write_keyed`` pages are v2 and delta-packed, so a
-    group's integer columns decode from a few bits per value, and only
-    the key column carries statistics — the only ones read here.
+    Parquet handles and ``.arrow`` mappings are kept for up to
+    ``MAX_OPEN_FILES`` files and opened on demand past that (a 100k-file
+    table must not hold 100k fds or mappings); a mapping holds no
+    descriptor. ``close()`` releases both; later lookups open what they
+    read on demand.
     """
 
     MAX_OPEN_FILES = 512
@@ -304,9 +382,11 @@ class PointLookupCursor:
         self.key = key
         self._coerce = None  # set from the key column's arrow type
         self._schema = None  # first indexed file's arrow schema
-        # per file: {"fp", "pf" (handle or None), "lo", "hi",
-        #            "rgs": [(lo, hi, rg_idx, single, n_rows)] or None when
-        #            stats absent; single: the group holds only the key lo}
+        # per file: {"fp", "st", then for parquet: "pf" (handle or None),
+        #   "lo", "hi", "rgs": [(lo, hi, rg_idx, single, n_rows)] or None
+        #   when stats absent (single: the group holds only the key lo);
+        #   for arrow: "tbl" (mapped table or None), "runs": {key: [(start,
+        #   n_rows)]}}
         self._files: list[dict] = []
         self._indexed: set[str] = set()
         self.refresh()
@@ -314,34 +394,98 @@ class PointLookupCursor:
             # a partitioned (subdirectory) layout would silently return
             # zero rows where read_point returns data — reject loudly
             raise ValueError(
-                f"PointLookupCursor: no top-level parquet files at {path} — "
+                f"PointLookupCursor: no top-level parquet or arrow files at {path} — "
                 "the cursor serves FLAT write_keyed tables; use "
                 "read_point/read_partition for partitioned layouts"
             )
 
-    def refresh(self) -> int:
-        """Re-sync the footer index with the directory: NEW files are
-        indexed (footer reads for the delta only — the cheap freshness
-        path for append-maintained tables) and VANISHED files are
-        dropped (a compaction/overwrite deletes old part files; keeping
-        their entries would either crash the next lookup or, worse,
-        silently serve rows from BOTH generations). Spark part-file
-        names are UUID-unique, so same-name rewrites don't occur in the
-        normal write path, but compaction tools that DO reuse names are
-        caught too: each entry records the file's (mtime_ns, size) and
-        a stat mismatch drops the cached handle/stats and re-indexes
-        the file. Returns how many files were newly indexed."""
+    def _part_files(self) -> set[str]:
+        """The table's part files: ``.arrow`` and ``.parquet`` files not
+        named ``_*``/``.*``, a parquet file dropped when an ``.arrow``
+        file of the same part is present (``write_arrow_files`` midway)."""
+        names = [n for n in os.listdir(self.path) if not n.startswith(("_", "."))]
+        arrow = {_part_stem(n) for n in names if n.endswith(".arrow")}
+        return {
+            os.path.join(self.path, n)
+            for n in names
+            if n.endswith(".arrow") or (n.endswith(".parquet") and _part_stem(n) not in arrow)
+        }
+
+    def _set_key_type(self, schema) -> None:
         import pyarrow.types as pat
 
-        present = {
-            os.path.join(self.path, n)
-            for n in os.listdir(self.path)
-            if n.endswith(".parquet") and not n.startswith("_")
+        self._schema = schema
+        t = schema.field(self.key).type
+        if pat.is_integer(t):
+            self._coerce = int
+        elif pat.is_floating(t):
+            self._coerce = float
+        elif pat.is_string(t) or pat.is_large_string(t):
+            self._coerce = str
+        else:
+            self._coerce = lambda v: v
+
+    def _index_arrow(self, fp: str, keep_open: bool) -> dict:
+        """Map ``fp`` and index its key column: key → [(start, n_rows)],
+        one run per stretch of equal keys, null keys left out."""
+        tbl = read_arrow_file(fp)
+        if self._coerce is None:
+            self._set_key_type(tbl.schema)
+        runs: dict = {}
+        start = 0
+        for k, group in itertools.groupby(tbl[self.key].to_pylist()):
+            n = sum(1 for _ in group)
+            if k is not None:
+                runs.setdefault(k, []).append((start, n))
+            start += n
+        return {"tbl": tbl if keep_open else None, "runs": runs}
+
+    def _index_parquet(self, fp: str, keep_open: bool) -> dict:
+        """Open ``fp`` and index its footer's per-row-group key stats."""
+        pf = self._pq.ParquetFile(fp)
+        md = pf.metadata
+        if self._coerce is None:
+            self._set_key_type(pf.schema_arrow)
+        kidx = md.schema.names.index(self.key)
+        rgs: list[tuple] | None = []
+        for rg in range(md.num_row_groups):
+            stats = md.row_group(rg).column(kidx).statistics
+            if stats is None or not stats.has_min_max:
+                rgs = None  # no stats: always a candidate, whole file
+                break
+            # min/max ignore nulls: a group is single-key only when
+            # its stats also show it holds no null key
+            single = stats.min == stats.max and (
+                stats.has_null_count and stats.null_count == 0
+            )
+            rgs.append((stats.min, stats.max, rg, single, md.row_group(rg).num_rows))
+        if not keep_open:
+            pf.close()
+        return {
+            "pf": pf if keep_open else None,
+            "lo": min(r[0] for r in rgs) if rgs else None,
+            "hi": max(r[1] for r in rgs) if rgs else None,
+            "rgs": rgs,
         }
+
+    def refresh(self) -> int:
+        """Re-sync the index with the directory: NEW files are indexed
+        (footer or key-column reads for the delta only — the cheap
+        freshness path for append-maintained tables) and VANISHED files
+        are dropped (a compaction/overwrite deletes old part files;
+        keeping their entries would either crash the next lookup or,
+        worse, silently serve rows from BOTH generations). Spark
+        part-file names are UUID-unique, so same-name rewrites don't
+        occur in the normal write path, but compaction tools that DO
+        reuse names are caught too: each entry records the file's
+        (mtime_ns, size) and a stat mismatch drops the cached
+        handle/mapping and re-indexes the file. Returns how many files
+        were newly indexed."""
+        present = self._part_files()
         if self._indexed - present:  # files vanished: drop their entries
             self._files = [e for e in self._files if e["fp"] in present]
             self._indexed &= present
-        # same-name in-place rewrite: stat changed => stale footer cache
+        # same-name in-place rewrite: stat changed => stale index
         stale = {
             e["fp"]
             for e in self._files
@@ -352,59 +496,21 @@ class PointLookupCursor:
             self._indexed -= stale
         added = 0
         keep_open = len(present) <= self.MAX_OPEN_FILES
-        for name in sorted(os.listdir(self.path)):
-            if not name.endswith(".parquet") or name.startswith("_"):
-                continue
-            fp = os.path.join(self.path, name)
-            if fp in self._indexed:
-                continue
-            pf = self._pq.ParquetFile(fp)
-            md = pf.metadata
-            if self._coerce is None:
-                self._schema = pf.schema_arrow
-                t = pf.schema_arrow.field(self.key).type
-                if pat.is_integer(t):
-                    self._coerce = int
-                elif pat.is_floating(t):
-                    self._coerce = float
-                elif pat.is_string(t) or pat.is_large_string(t):
-                    self._coerce = str
-                else:
-                    self._coerce = lambda v: v
-            kidx = md.schema.names.index(self.key)
-            rgs: list[tuple] | None = []
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(kidx).statistics
-                if stats is None or not stats.has_min_max:
-                    rgs = None  # no stats: always a candidate, whole file
-                    break
-                # min/max ignore nulls: a group is single-key only when
-                # its stats also show it holds no null key
-                single = stats.min == stats.max and (
-                    stats.has_null_count and stats.null_count == 0
-                )
-                rgs.append(
-                    (stats.min, stats.max, rg, single, md.row_group(rg).num_rows)
-                )
-            self._files.append(
-                {
-                    "fp": fp,
-                    "pf": pf if keep_open else None,
-                    "lo": min(r[0] for r in rgs) if rgs else None,
-                    "hi": max(r[1] for r in rgs) if rgs else None,
-                    "rgs": rgs,
-                    "st": self._stat_id(fp),
-                }
-            )
+        for fp in sorted(present - self._indexed):
+            index = self._index_arrow if fp.endswith(".arrow") else self._index_parquet
+            self._files.append({"fp": fp, "st": self._stat_id(fp), **index(fp, keep_open)})
             self._indexed.add(fp)
             added += 1
         return added
 
     def close(self) -> None:
-        """Close the held parquet handles; later lookups open the files
-        they read on demand."""
+        """Close the held parquet handles and drop the held mappings
+        (tables already returned keep theirs); later lookups open the
+        files they read on demand."""
         for e in self._files:
-            if e["pf"] is not None:
+            if "runs" in e:
+                e["tbl"] = None
+            elif e["pf"] is not None:
                 e["pf"].close()
                 e["pf"] = None
 
@@ -412,8 +518,8 @@ class PointLookupCursor:
     def _stat_id(fp: str):
         """(mtime_ns, size) identity for a part file — detects in-place
         same-name rewrites (compaction tools that reuse names) so the
-        cached footer index never serves stale row-group stats. Returns
-        None for a vanished file (the vanish branch drops it anyway)."""
+        cached index never serves stale rows. Returns None for a
+        vanished file (the vanish branch drops it anyway)."""
         try:
             st = os.stat(fp)
             return (st.st_mtime_ns, st.st_size)
@@ -444,6 +550,7 @@ class PointLookupCursor:
         if not len(vals):
             return self._schema.empty_table()
         val_arr = None  # built lazily with the key column's exact type
+        keys = None  # vals as Python scalars, the arrow index's keys
 
         def matching(tbl):
             nonlocal val_arr
@@ -453,6 +560,14 @@ class PointLookupCursor:
 
         parts = []
         for e in self._files:
+            if "runs" in e:
+                if keys is None:
+                    keys = vals.tolist() if isinstance(vals, np.ndarray) else vals
+                hit = sorted(r for k in keys for r in e["runs"].get(k, ()))
+                if hit:
+                    tbl = e["tbl"] if e["tbl"] is not None else read_arrow_file(e["fp"])
+                    parts.extend(tbl.slice(start, n) for start, n in hit)
+                continue
             if e["rgs"] == []:
                 # zero-row-group part file: Spark writes one for an
                 # empty table — it holds no rows, so it can never hit
@@ -460,7 +575,7 @@ class PointLookupCursor:
                 continue
             if e["rgs"] is None:  # stats-less file: scan it whole
                 pf = e["pf"] or self._pq.ParquetFile(e["fp"])
-                parts.append(matching(pf.read()))
+                parts.append(matching(pf.read(use_threads=False)))
                 continue
             if not self._hits_range(vals, e["lo"], e["hi"]):
                 continue
@@ -472,7 +587,7 @@ class PointLookupCursor:
             if not hit:
                 continue
             pf = e["pf"] or self._pq.ParquetFile(e["fp"])
-            tbl = pf.read_row_groups([rg for _, rg, _ in hit])
+            tbl = pf.read_row_groups([rg for _, rg, _ in hit], use_threads=False)
             # a hit single-key group holds only a probed key: its rows
             # are kept whole, as zero-copy slices; only the groups shared
             # with other keys (or with null keys) go through is_in

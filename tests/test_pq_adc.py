@@ -350,3 +350,47 @@ def test_sq_topk_requires_sq_index(emb, tmp_path):
     probe = [0.0] * 64
     with pytest.raises(ValueError, match="no SQ bounds"):
         cur.sq_topk(probe, k=5)
+
+
+def _adc_tables_fold(probe, books):
+    """The per-code squared-L2 tables as the sequential left fold, one
+    Python double at a time: the order the Spark fold and the DuckDB
+    oracle add the terms in."""
+    m, subdim = len(books), len(books[0][0][1])
+    out = []
+    for sp in range(m):
+        sub = [float(x) for x in probe[sp * subdim : (sp + 1) * subdim]]
+        row = []
+        for _c, cv in books[sp]:
+            acc = 0.0
+            for x, y in zip(sub, cv):
+                t = x - y
+                acc += t * t
+            row.append(acc)
+        out.append(row)
+    return out
+
+
+def test_adc_tables_equal_the_sequential_fold_bit_for_bit(books):
+    """The vectorized tables are the fold's doubles exactly, on random
+    books (m=8, K=32, subdim=8), on books of unequal sizes (k-means can
+    drop an empty code) and on the trained books."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(11)
+    rand_books = {
+        sp: [(c, [rng.gauss(0, 1) for _ in range(8)]) for c in range(32)] for sp in range(8)
+    }
+    ragged = {**rand_books, 7: rand_books[7][:23] + rand_books[7][24:], 2: rand_books[2][:5]}
+    for bk in (rand_books, ragged, books):
+        dim = len(bk) * len(bk[0][0][1])
+        arr = similarity._pq_book_array(bk)
+        for _ in range(31):
+            probe = [rng.gauss(0, 0.3) for _ in range(dim)]
+            got = similarity._adc_tables(probe, arr)
+            want = _adc_tables_fold(probe, bk)
+            assert len(got) == len(want)
+            for g, w in zip(got, want):
+                assert g.tobytes() == np.asarray(w, dtype="float64").tobytes()

@@ -261,13 +261,32 @@ def _by_doc(row):
     ]
 
 
-def _rows(table_dir, key, values):
-    import pyarrow.parquet as pq
+def _part_files(d):
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".arrow"))
 
+
+def _read(table_dir):
+    """Every row of a loaded table's Arrow part files, in file order."""
+    import pyarrow as pa
+
+    from page_rank_hadoop_spark.sources.serving import read_arrow_file
+
+    return pa.concat_tables(read_arrow_file(fp) for fp in _part_files(table_dir))
+
+
+def _read_batches(fp):
+    import pyarrow as pa
+
+    with pa.memory_map(fp) as source:
+        reader = pa.ipc.open_file(source)
+        return [reader.get_batch(i) for i in range(reader.num_record_batches)]
+
+
+def _rows(table_dir, key, values):
     want = set(values)
     return [
         r
-        for row in pq.read_table(table_dir).to_pylist()
+        for row in _read(table_dir).to_pylist()
         if row[key] in want
         for r in (_by_doc(row) if "offsets" in row else _flat(row))
     ]
@@ -297,13 +316,11 @@ def _oracle_search(d, terms, k=None):
 def _blob_texts(d):
     """doc_id → text, every posting's (blob, off, len) location read
     with plain file reads."""
-    import pyarrow.parquet as pq
-
     blob_dir = os.path.join(d, "blobs")
     files = {int(n.split("-")[1]): os.path.join(blob_dir, n)
              for n in os.listdir(blob_dir) if n.startswith("part-")}
     out = {}
-    for row in pq.read_table(os.path.join(d, "postings")).to_pylist():
+    for row in _read(os.path.join(d, "postings")).to_pylist():
         for r in _flat(row):
             with open(files[r["blob"]], "rb") as fh:
                 out[r["doc_id"]] = fh.read()[r["off"] : r["off"] + r["len"]].decode("utf-8")
@@ -354,10 +371,13 @@ def _typed(rows):
 def _write_table(d, rows, schema, group_rows=2):
     """Write flat per-doc rows as the build does: one row per term, its
     per-doc values as parallel lists in doc_id order, terms sorted, in
-    two files of ``group_rows``-row groups. A list-valued ``offsets``
-    is concatenated across the term's docs instead."""
+    two parquet files of ``group_rows``-row groups, then loaded as Arrow
+    IPC files (``write_arrow_files``). A list-valued ``offsets`` is
+    concatenated across the term's docs instead."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from page_rank_hadoop_spark.sources.serving import write_arrow_files
 
     os.makedirs(d)
     lists = [f.name for f in schema if pa.types.is_list(f.type)]
@@ -379,6 +399,7 @@ def _write_table(d, rows, schema, group_rows=2):
             os.path.join(d, f"part-{i:05d}.parquet"),
             row_group_size=group_rows,
         )
+    write_arrow_files(d)
 
 
 def _write_search_dir(root, postings, ranks, docs, positions, group_rows=2):
@@ -445,9 +466,7 @@ def _write_search_dir(root, postings, ranks, docs, positions, group_rows=2):
 
 
 def _vocabulary(d):
-    import pyarrow.parquet as pq
-
-    return sorted(set(pq.read_table(os.path.join(d, "postings"), columns=["term"])["term"].to_pylist()))
+    return sorted(set(_read(os.path.join(d, "postings"))["term"].to_pylist()))
 
 
 def test_search_parity_with_row_oracle(search_dir):
@@ -559,10 +578,10 @@ def test_phrase_exact_for_wide_doc_ids(tmp_path):
 
 def test_lookup_returns_arrow_table(search_dir):
     """PointLookupCursor.lookup returns one Arrow table: an empty one
-    with the file schema on a miss, and the same term rows for a numpy
-    key array as for the equivalent list."""
+    with the part files' schema on a miss, and the same term rows for a
+    numpy key array as for the equivalent list."""
     import numpy as np
-    import pyarrow.parquet as pq
+    import pyarrow as pa
 
     from page_rank_hadoop_spark.sources.search import SearchCursor
 
@@ -572,9 +591,8 @@ def test_lookup_returns_arrow_table(search_dir):
     assert miss.num_rows == 0
     assert miss.schema.names == ["term", "df", "idf", "doc_id", "tf", "pr", "blob", "off", "len"]
     assert cur._postings.lookup(np.array([], dtype=object)).num_rows == 0
-    assert cur._postings.lookup([]).schema.equals(pq.read_schema(
-        os.path.join(post_dir, sorted(f for f in os.listdir(post_dir) if f.endswith(".parquet"))[0])
-    ))
+    with pa.memory_map(_part_files(post_dir)[0]) as source:
+        assert cur._postings.lookup([]).schema.equals(pa.ipc.open_file(source).schema)
     terms = _vocabulary(search_dir)[::3] + ["absent-term"]
     as_list = cur._postings.lookup(terms).to_pylist()
     as_array = cur._postings.lookup(np.asarray(terms[::-1] + terms, dtype=object)).to_pylist()
@@ -703,20 +721,26 @@ def test_blob_index_of_empty_corpus_answers_nothing(spark, tmp_path):
     from page_rank_hadoop_spark.sources.search import SearchCursor
 
     _, _, d = _blob_index(spark, tmp_path, [])
+    for table in ("postings", "positions"):
+        names = os.listdir(os.path.join(d, table))
+        assert not [n for n in names if n.endswith(".parquet")], names
+        assert sum(len(_read_batches(fp)) for fp in _part_files(os.path.join(d, table))) == 0
     cur = SearchCursor(d)
     assert cur.meta["n_docs"] == 0
     assert cur.search(["spark"]) == []
     assert cur.search_with_snippets("spark", k=10) == []
     assert cur.phrase(["spark", "data"]) == []
+    assert cur.near("spark", "data") == []
 
 
 def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
     """A directory written by the postings/ranks/docs build, by the
     build that keyed postings and positions by term alone (its rows not
     in the doc_id order the phrase and NEAR kernels rely on), by the
-    build that wrote one row per (term, doc_id), or by the one-row-per-
+    build that wrote one row per (term, doc_id), by the one-row-per-
     term build whose positions rows held per-doc position lists instead
-    of global offsets is refused with a rebuild request, not served."""
+    of global offsets, or by the build that left both tables as parquet
+    is refused with a rebuild request, not served."""
     import json
 
     from page_rank_hadoop_spark.sources.search import META_NAME, SearchCursor
@@ -744,6 +768,14 @@ def test_old_layout_directory_asks_for_rebuild(search_dir, tmp_path):
     # one row per term, but positions stored as per-doc position lists
     meta["key_layout"] = {"postings": {"key": "term", "lists": "doc_id"},
                           "positions": {"key": "term", "lists": "doc_id"},
+                          "blobs": "doc_id"}
+    with open(os.path.join(old, META_NAME), "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="rebuild"):
+        SearchCursor(old)
+    # global offsets, but the tables left as parquet part files
+    meta["key_layout"] = {"postings": {"key": "term", "lists": "doc_id"},
+                          "positions": {"key": "term", "lists": "doc_id", "offsets": "global"},
                           "blobs": "doc_id"}
     with open(os.path.join(old, META_NAME), "w") as fh:
         json.dump(meta, fh)
@@ -783,32 +815,29 @@ def _oracle_near(d, term_a, term_b, max_dist=5):
     return out
 
 
-def _part_files(d):
-    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
-
-
 def test_keyed_tables_hold_one_row_per_term(search_dir):
     """postings/ and positions/ hold one row per distinct term, terms in
     order across the files, each row's doc_id list strictly ascending
     and its parallel lists as long (a positions row's offsets strictly
-    ascending, at least one in each of its docs); every file holds
-    several row groups unless all its data fits under the cap
-    (write_keyed closes a group by size after any row)."""
+    ascending, at least one in each of its docs). Every part file is an
+    Arrow IPC file, no parquet file is left beside it, and the files
+    hold several record batches — one per row group write_keyed closed
+    by size (the batch-per-group mapping is pinned on a write_keyed
+    table by test_arrow_lookup_equals_parquet_lookup)."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from page_rank_hadoop_spark.sources.serving import ROW_GROUP_BYTES
 
     multi = 0
     for table in ("postings", "positions"):
+        table_dir = os.path.join(search_dir, table)
+        assert not [n for n in os.listdir(table_dir) if n.endswith(".parquet")], table
         terms = []
-        for fp in _part_files(os.path.join(search_dir, table)):
-            pf = pq.ParquetFile(fp)
-            md = pf.metadata
-            assert md.num_row_groups > 1 or md.row_group(0).total_byte_size < ROW_GROUP_BYTES, fp
-            multi += md.num_row_groups > 1
-            t = pf.read()
+        for fp in _part_files(table_dir):
+            with pa.memory_map(fp) as source:
+                reader = pa.ipc.open_file(source)
+                multi += reader.num_record_batches > 1
+                t = reader.read_all()
             terms += t["term"].to_pylist()
             n = pc.list_value_length(t["doc_id"])
             for c in t.column_names[t.column_names.index("doc_id"):]:
@@ -823,38 +852,40 @@ def test_keyed_tables_hold_one_row_per_term(search_dir):
                     assert (np.diff(base) > 0).all() and (np.diff(offs) > 0).all(), fp
                     assert set(np.searchsorted(base, offs, "right") - 1) == set(range(len(base)))
         assert terms == sorted(set(terms)) and len(terms) > 3, table
-    assert multi, "no file of the fixture is over the row-group cap"
+    assert multi, "no file of the fixture holds more than one record batch"
 
 
-def test_term_lookup_decodes_only_its_group(search_dir, monkeypatch):
-    """A single-term lookup makes one read_row_groups call, decodes only
-    the row group that holds the term's row and returns that one row —
-    counted, as the benchmark's probe counts, by wrapping
-    ParquetFile.read_row_groups."""
+def test_term_lookup_decodes_no_row_group(search_dir, monkeypatch):
+    """No cursor operation reads a parquet row group — counted, as the
+    benchmark's probe counts, by wrapping ParquetFile.read_row_groups —
+    and a single-term lookup returns that term's one row as a slice of
+    the mapped file: it allocates no Arrow memory."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from page_rank_hadoop_spark.sources.search import SearchCursor
 
     reads = []
     real = pq.ParquetFile.read_row_groups
-
-    def counting(pf, *args, **kwargs):
-        t = real(pf, *args, **kwargs)
-        reads.append(t.num_rows)
-        return t
-
-    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", counting)
+    monkeypatch.setattr(
+        pq.ParquetFile, "read_row_groups",
+        lambda pf, *a, **kw: reads.append(a) or real(pf, *a, **kw),
+    )
     cur = SearchCursor(search_dir)
+    terms = _vocabulary(search_dir)
     for table in ("postings", "positions"):
         lk = getattr(cur, f"_{table}")
-        groups = [g for e in lk._files for g in e["rgs"]]
-        for term in _vocabulary(search_dir):
-            reads.clear()
+        for term in terms:
+            before = pa.total_allocated_bytes()
             got = lk.lookup([term])
-            (home,) = [n for lo, hi, _, _, n in groups if lo <= term <= hi]
-            assert reads == [home], (table, term, reads)
+            assert pa.total_allocated_bytes() == before, (table, term)
             assert got["term"].to_pylist() == [term], (table, term)
-        assert len(groups) < len(_vocabulary(search_dir)), table
+    for a, b in zip(terms, terms[1:]):
+        cur.search([a, b])
+        cur.search_with_snippets(a, k=10)
+        cur.phrase([a, b])
+        cur.near(a, b)
+    assert reads == []
 
 
 def test_phrase_and_near_parity_with_row_oracles(search_dir):
@@ -914,8 +945,12 @@ def test_small_terms_sharing_a_group_with_a_large_term(tmp_path):
                              group_rows=3)
     cur = SearchCursor(root)
     for lk in (cur._postings, cur._positions):
-        (shared,) = [g for e in lk._files for g in e["rgs"] if g[0] <= "big" <= g[1]]
-        assert shared[:2] == ("a", "big") and shared[4] == 3
+        batches = [
+            b["term"].to_pylist()
+            for fp in _part_files(lk.path)
+            for b in _read_batches(fp)
+        ]
+        assert [b for b in batches if "big" in b] == [["a", "b", "big"]]
         for probe in (["big"], ["a", "big"], ["b", "big"], ["big", "c"], ["a", "b", "big"]):
             assert lk.lookup(probe)["term"].to_pylist() == sorted(probe), probe
     terms = sorted(tf)
@@ -1022,12 +1057,46 @@ def test_phrase_and_near_never_cross_a_document_boundary(spark, tmp_path):
     assert [r["doc_id"] for r in cur.phrase(["cat", "dog"])] == [2**40 + 5]
 
 
-def test_keyed_tables_are_delta_packed_with_key_statistics(search_dir):
-    """Every integer list column of postings/ and positions/ is written
+@pytest.fixture(scope="module")
+def keyed_pair(spark):
+    """One write_keyed table twice: as Spark wrote it (parquet) and
+    loaded by write_arrow_files (Arrow IPC). Keys k000..k119 hold two or
+    three rows each, six rows have a null key, and every 40th row holds
+    a large list of hashed values that ends its row group, so small keys
+    share a group with a large one."""
+    from pyspark.sql import functions as F
+
+    from page_rank_hadoop_spark.sources.serving import write_arrow_files, write_keyed
+
+    root = tempfile.mkdtemp(prefix="t_keyed_pair_")
+    parquet_dir, arrow_dir = os.path.join(root, "parquet"), os.path.join(root, "arrow")
+    i = F.col("id")
+    df = spark.range(300).select(
+        F.when(i % 50 == 7, F.lit(None)).otherwise(F.format_string("k%03d", i % 120)).alias("term"),
+        i.alias("v"),
+        F.when(
+            i % 40 == 5,
+            F.transform(F.sequence(F.lit(0), F.lit(20_000)), lambda x: F.hash(x).cast("long")),
+        ).otherwise(F.array(i)).alias("ids"),
+    )
+    write_keyed(df, parquet_dir, "term", n_files=3)
+    shutil.copytree(parquet_dir, arrow_dir)
+    assert write_arrow_files(arrow_dir) == 3
+    yield parquet_dir, arrow_dir
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def _parquet_files(d):
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def test_keyed_tables_are_delta_packed_with_key_statistics(search_dir, keyed_pair):
+    """write_keyed's parquet: every integer list column is written
     DELTA_BINARY_PACKED, every column SNAPPY (never UNCOMPRESSED v2
     pages, whose strings Spark's vectorized reader corrupts), and only
     the key column carries statistics (write_keyed's v2 writer
-    settings); the tools/serving_layout.py summary reports the same."""
+    settings); the tools/serving_layout.py summary reports the same,
+    and finds the search build's two Arrow tables."""
     import importlib.util
 
     import pyarrow.parquet as pq
@@ -1039,43 +1108,133 @@ def test_keyed_tables_are_delta_packed_with_key_statistics(search_dir):
     layout = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(layout)
     assert [os.path.basename(t) for t in layout.tables(search_dir)] == ["positions", "postings"]
-    for table in ("postings", "positions"):
-        int_lists = 0
-        groups = 0
-        for fp in _part_files(os.path.join(search_dir, table)):
-            md = pq.ParquetFile(fp).metadata
-            groups += md.num_row_groups
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                for i in range(rg.num_columns):
-                    col = rg.column(i)
-                    where = (fp, g, col.path_in_schema)
-                    assert col.compression == "SNAPPY", where
-                    if col.path_in_schema == "term":
-                        assert col.is_stats_set and col.statistics.has_min_max, where
-                    else:
-                        assert not col.is_stats_set, where
-                    if col.physical_type in ("INT32", "INT64") and ".list." in col.path_in_schema:
-                        assert col.encodings == ("DELTA_BINARY_PACKED",), where
-                        int_lists += 1
-        assert int_lists, table
-        summary = layout.table_layout(os.path.join(search_dir, table))
-        assert summary["row_groups"] == groups
-        assert summary["columns"]["doc_id.list.element"] == {
-            "encodings": {"DELTA_BINARY_PACKED"}, "compression": {"SNAPPY"},
-            "statistics": {"no"},
-        }
-        assert summary["columns"]["term"]["statistics"] == {"yes"}
+    table = keyed_pair[0]
+    int_lists = 0
+    groups = 0
+    for fp in _parquet_files(table):
+        md = pq.ParquetFile(fp).metadata
+        groups += md.num_row_groups
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for i in range(rg.num_columns):
+                col = rg.column(i)
+                where = (fp, g, col.path_in_schema)
+                assert col.compression == "SNAPPY", where
+                if col.path_in_schema == "term":
+                    assert col.is_stats_set and col.statistics.has_min_max, where
+                else:
+                    assert not col.is_stats_set, where
+                if col.physical_type in ("INT32", "INT64") and ".list." in col.path_in_schema:
+                    assert col.encodings == ("DELTA_BINARY_PACKED",), where
+                    int_lists += 1
+    assert int_lists and groups > 3
+    summary = layout.table_layout(table)
+    assert summary["row_groups"] == groups
+    assert summary["columns"]["ids.list.element"] == {
+        "encodings": {"DELTA_BINARY_PACKED"}, "compression": {"SNAPPY"},
+        "statistics": {"no"},
+    }
+    assert summary["columns"]["term"]["statistics"] == {"yes"}
+
+
+def test_arrow_files_mirror_the_parquet_row_groups(keyed_pair, search_dir):
+    """write_arrow_files writes one uncompressed record batch per parquet
+    row group, with the parquet file's arrow schema (types, nullability
+    and metadata) and the same rows, and deletes the parquet file and
+    its checksum; tools/serving_layout.py reports the batches, bytes and
+    column types of the search tables."""
+    import importlib.util
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from page_rank_hadoop_spark.sources.serving import read_arrow_file
+
+    parquet_dir, arrow_dir = keyed_pair
+    names = os.listdir(arrow_dir)
+    assert not [n for n in names if ".parquet" in n], names  # nor a .parquet.crc
+    assert sorted(n for n in names if n.endswith(".arrow")) == sorted(
+        n.split(".", 1)[0] + ".arrow" for n in os.listdir(parquet_dir) if n.endswith(".parquet")
+    )
+    for src, dest in zip(_parquet_files(parquet_dir), _part_files(arrow_dir)):
+        pf = pq.ParquetFile(src)
+        batches = _read_batches(dest)
+        assert [b.num_rows for b in batches] == [
+            pf.metadata.row_group(g).num_rows for g in range(pf.metadata.num_row_groups)
+        ]
+        with pa.memory_map(dest) as source:
+            assert pa.ipc.open_file(source).schema.equals(pf.schema_arrow, check_metadata=True)
+        # uncompressed: the mapped read allocates nothing to decompress into
+        before = pa.total_allocated_bytes()
+        loaded = read_arrow_file(dest)
+        assert pa.total_allocated_bytes() == before
+        assert loaded.equals(pf.read())
+    spec = importlib.util.spec_from_file_location(
+        "serving_layout",
+        os.path.join(os.path.dirname(__file__), os.pardir, "tools", "serving_layout.py"),
+    )
+    layout = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layout)
+    summary = layout.arrow_layout(os.path.join(search_dir, "postings"))
+    files = _part_files(os.path.join(search_dir, "postings"))
+    assert summary["files"] == len(files)
+    assert summary["record_batches"] == sum(len(_read_batches(fp)) for fp in files)
+    assert summary["bytes"] == sum(os.path.getsize(fp) for fp in files)
+    assert summary["columns"]["term"] == {"string"}
+    assert summary["columns"]["doc_id"] == {"list<element: int64>"}
+
+
+def test_arrow_lookup_equals_parquet_lookup(keyed_pair):
+    """PointLookupCursor answers the same Arrow table from the Arrow
+    files as from the parquet files they were loaded from: for every
+    key alone, missing keys, duplicated probes, numpy probe arrays, a
+    probe of every key, and small keys that share a row group with a
+    large one. Null keys never match. A table returned before close()
+    stays readable after it, and lookups after close() still answer."""
+    import numpy as np
+
+    from page_rank_hadoop_spark.sources.serving import PointLookupCursor
+
+    par, arr = (PointLookupCursor(d, "term") for d in keyed_pair)
+    keys = [f"k{i:03d}" for i in range(120)]
+    large = ["k005", "k045", "k085"]
+    probes = [[k] for k in keys] + [
+        ["k999"], ["None"], ["k001", "k001", "k002"], ["k004", "k005"],
+        ["k003", "k085", "k999"], large, keys, keys[::-1] + keys,
+    ]
+    probes += [np.asarray(p, dtype=object) for p in probes[-6:]]
+    probes += [np.asarray(["k010", "k005", "k010"]), np.asarray([], dtype=object), []]
+    for p in probes:
+        want, got = par.lookup(p), arr.lookup(p)
+        assert got.equals(want) and got.schema.equals(want.schema), p
+    everything = arr.lookup(keys)
+    assert everything.num_rows == 300 - 6
+    assert sorted(len(ids) for ids in arr.lookup(large)["ids"].to_pylist())[-1] == 20_001
+    rows = everything.to_pylist()
+    arr.close()
+    assert everything.to_pylist() == rows
+    assert arr.lookup(keys).equals(par.lookup(keys))
+    assert arr.refresh() == 0
 
 
 def _open_fds():
     return len(os.listdir("/proc/self/fd"))
 
 
+def _mapped(d):
+    """How many memory mappings of ``d``'s Arrow files this process holds."""
+    with open("/proc/self/maps") as fh:
+        return sum(d + os.sep in line and line.rstrip().endswith(".arrow") for line in fh)
+
+
 def test_search_cursor_holds_one_descriptor_per_blob(spark, tmp_path):
-    """Snippet reads hold one descriptor per blob file read from, opened
-    on first use; refresh() closes them, and close() (or leaving a with
-    block) also closes the parquet handles: no descriptor stays open."""
+    """The mapped tables hold no descriptor; snippet reads hold one
+    descriptor per blob file read from, opened on first use; refresh()
+    closes them, and close() (or leaving a with block) also drops the
+    table mappings: no descriptor stays open, and no mapping once the
+    tables returned before close(), still readable, are dropped."""
+    import gc
+
     from page_rank_hadoop_spark.sources.search import SearchCursor
 
     _, _, d = _blob_index(spark, tmp_path, _BLOB_DOCS)
@@ -1083,6 +1242,9 @@ def test_search_cursor_holds_one_descriptor_per_blob(spark, tmp_path):
     before = _open_fds()
     with SearchCursor(d) as cur:
         opened = _open_fds()
+        assert opened == before and _mapped(d) == len(_part_files(os.path.join(d, "postings"))) + len(
+            _part_files(os.path.join(d, "positions"))
+        )
         want = cur.search_with_snippets("spark", k=10)
         held = _open_fds()
         assert want and 0 < held - opened <= n_blobs
@@ -1092,7 +1254,15 @@ def test_search_cursor_holds_one_descriptor_per_blob(spark, tmp_path):
         assert _open_fds() == opened
         assert cur.search_with_snippets("spark", k=10) == want
         assert _open_fds() == held
+        rows = cur._postings.lookup(["spark", "data"])
+        listed = rows.to_pylist()
     assert _open_fds() == before
+    assert rows.to_pylist() == listed and len(listed) == 2
+    del rows
+    gc.collect()
+    assert _mapped(d) == 0
     assert cur.search_with_snippets("spark", k=10) == want  # reopens on demand
     cur.close()
     assert _open_fds() == before
+    gc.collect()
+    assert _mapped(d) == 0
